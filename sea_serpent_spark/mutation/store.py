@@ -301,7 +301,7 @@ class Base:
     # a SEPARATE ``_checkpoint_offsets.json`` sidecar loaded only by
     # deep time travel — keeping the O(versions) index out of the open
     # path, whose cost is thereby O(checkpoint_every), flat in table
-    # age (tools/rehearse_r11.py measures it across 500 commits; with
+    # age (BENCH_NOTES "Version-log checkpoint rehearsal": 500 commits; with
     # the index inline the open path re-grew ~1 µs/version — measured,
     # hence the split). Every read path verifies the checkpoint
     # against the live log (size, version echo) and falls back to the
@@ -517,7 +517,9 @@ class Base:
             )
         return cm
 
-    def _normalized_read(self, entry: dict, paths: list[str]) -> DataFrame:
+    def _normalized_read(
+        self, entry: dict, paths: list[str], spark=None
+    ) -> DataFrame:
         """Read bucket files and present them under the version's LOGICAL
         schema: files are scanned with the physical (key-named) schema —
         columns a file lacks (metadata-only adds) come back NULL, columns
@@ -531,7 +533,7 @@ class Base:
                 for f in schema.fields
             ]
         )
-        raw = self.spark.read.schema(phys).parquet(*paths)
+        raw = (spark or self.spark).read.schema(phys).parquet(*paths)
         return raw.select(
             *[
                 F.col(cm.get(f.name, f.name)).alias(f.name)
@@ -579,27 +581,32 @@ class Base:
         single-bucket tables are auto-sized under 1 M rows
         (``_sized_buckets``), so every plan a commit on one runs —
         diff, oplog write, bucketed rewrite — is micro-sized by
-        construction, and the whole commit runs under the streaming
-        sinks' per-batch confs (AQE off + narrow static shuffle width,
-        ``util.micro_plan_confs``): AQE's per-exchange materialization
+        construction, and the whole commit runs in the streaming
+        sinks' per-batch posture (AQE off + narrow static shuffle
+        width, ``util.micro``): AQE's per-exchange materialization
         jobs are pure scheduler latency at this size (measured: a
         whole-column diff-update commit dropped 22 → 13 driver jobs).
-        Multi-bucket tables — the 100 TB shape — keep AQE and the
-        session shuffle width untouched."""
+        Every frame the body reads or builds then comes from the
+        posture session. Multi-bucket tables — the 100 TB shape — keep
+        AQE and the session shuffle width untouched."""
+        spark = self.spark
         if self._bcount(name) <= 1:
-            from ..operators.util import micro_plan_confs
+            from ..operators.util import micro, posture, rebind
 
-            with micro_plan_confs(self.spark, parts=4):
-                return self._commit_body(
-                    name, df, op, detail, oplog, touched, append_df,
-                    transform,
-                )
+            df = posture(df, micro(4))
+            spark = df.sparkSession
+            if oplog is not None:
+                oplog = rebind(oplog, spark)
+            if append_df is not None:
+                append_df = rebind(append_df, spark)
         return self._commit_body(
-            name, df, op, detail, oplog, touched, append_df, transform
+            spark, name, df, op, detail, oplog, touched, append_df,
+            transform,
         )
 
     def _commit_body(
         self,
+        spark,
         name: str,
         df: DataFrame,
         op: str,
@@ -637,6 +644,7 @@ class Base:
         ``df`` plan is filtered (write pruned, scan not — the Delta MERGE
         baseline). The chosen mode lands in the log entry as
         ``detail["rewrite"]`` ∈ full|append|pruned|filtered|noop.
+        Every read goes through ``spark``, the commit's posture session.
         """
         # checkpoint-aware version discovery: O(tail), not O(versions)
         if os.path.exists(self._log_path(name)):
@@ -704,7 +712,7 @@ class Base:
             nothing to skip TO, so the stats could never prune a read."""
             if n_buckets <= 1 or not os.path.isdir(commit_dir):
                 return {}
-            wdf = self.spark.read.parquet(commit_dir)
+            wdf = spark.read.parquet(commit_dir)
             kinds = {
                 f.name: f.dataType.simpleString()
                 for f in wdf.schema.fields
@@ -772,11 +780,11 @@ class Base:
             # the change-diff plan still runs once, and the probe no
             # longer scans an O(history) directory
             if new_oplog_files:
-                opl = self.spark.read.parquet(*new_oplog_files).where(
+                opl = spark.read.parquet(*new_oplog_files).where(
                     F.col("op_id") == v
                 )
             else:
-                opl = self.spark.read.parquet(opdir).where(
+                opl = spark.read.parquet(opdir).where(
                     F.col("op_id") == v
                 )
             buckets = n_changed = None
@@ -835,7 +843,10 @@ class Base:
                             "colmap": cm,
                         }
                         src = transform(
-                            self._normalized_read(replay_entry, tpaths), opl
+                            self._normalized_read(
+                                replay_entry, tpaths, spark
+                            ),
+                            opl,
                         )
                         rewrite = "pruned"
                 if src is None:
@@ -1393,24 +1404,17 @@ class Base:
         # wave into one job (r14). Sources carrying joins/aggregates
         # keep AQE for the fill: their upstream shuffles are exactly
         # what runtime re-planning is for.
-        from contextlib import nullcontext
-
-        from ..operators.util import scalar_action_confs
+        from ..operators.util import posture
 
         # ``micro`` lets a caller that has already size-gated (e.g.
-        # append onto a single-bucket table, the commit bracket's own
+        # append onto a single-bucket table, the commit posture's own
         # criterion) take the fast path even for a wide source plan.
-        ctx: Any = (
-            scalar_action_confs(self.spark)
-            if micro or self._narrow_plan(df)
-            else nullcontext()
+        src = posture(stamped) if micro or self._narrow_plan(df) else stamped
+        rows = (
+            src.groupBy(F.shiftright("__mid", 33).alias("__pid"))
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .collect()
         )
-        with ctx:
-            rows = (
-                stamped.groupBy(F.shiftright("__mid", 33).alias("__pid"))
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            )
         offsets: dict[int, int] = {}
         acc = start
         for r in sorted(rows, key=lambda r: r["__pid"]):

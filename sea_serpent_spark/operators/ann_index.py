@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from . import artifact
 from .similarity import dot, ivf_assign, kmeans_fit, norm
-from .util import fan_out, tracked_checkpoint
+from .util import fan_out, rebind, tracked_checkpoint
 
 _ANN_META = "_ivf_index_meta.json"
 
@@ -81,10 +81,9 @@ def _probe_frame(spark, q_plan, label_col: str = "label"):
     bit-identically. Oversized batches keep the r10 checkpointed flow
     (one materialization serving the label collect, the count gate and
     the candidate join)."""
-    from .util import local_rows_df, one_shot_take
+    from .util import ONE_SHOT_TAKE, local_rows_df, posture
 
-    with one_shot_take(spark):
-        rows = q_plan.take(_LOCAL_PROBE_QUERY_CAP + 1)
+    rows = posture(q_plan, ONE_SHOT_TAKE).take(_LOCAL_PROBE_QUERY_CAP + 1)
     if len(rows) <= _LOCAL_PROBE_QUERY_CAP:
         probed = sorted({int(r[label_col]) for r in rows})
         q = local_rows_df(spark, [tuple(r) for r in rows], q_plan.schema)
@@ -290,8 +289,11 @@ def _index_frame(
         main_cache is not None
         and main_cache.get("src") == src
         and main_cache.get("stat") == statkey
+        and main_cache.get("df") is not None
     ):
-        df = main_cache.get("df")
+        # the frame may come from another session (a sink batch's
+        # posture clone): plan it under the caller's own conf
+        df = rebind(main_cache["df"], spark)
     if df is None:
         reader = spark.read
         sj = (meta or {}).get("schema")
@@ -576,10 +578,11 @@ def incremental_semantic_dedup(
             )
             .unionByName(reing)
         )
-        from .util import one_shot_take
+        from .util import ONE_SHOT_TAKE, posture
 
-        with one_shot_take(full.sparkSession):
-            rows = payload.take(_DRIVER_PROBE_ROW_CAP + 1)
+        rows = posture(payload, ONE_SHOT_TAKE).take(
+            _DRIVER_PROBE_ROW_CAP + 1
+        )
         if len(rows) <= _DRIVER_PROBE_ROW_CAP:
             from .util import MinRootUnionFind
 

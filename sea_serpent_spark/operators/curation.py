@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from .text import round_half_up, words
-from .util import scalar_action_confs, tracked_checkpoint
+from .util import posture, tracked_checkpoint
 
 # ---------------------------------------------------------------------------
 # PII redaction / normalization
@@ -270,13 +270,12 @@ def pack_shards(
         # group-cardinality collect (≤ num partition rows) whose only
         # AQE-eligible exchange is the groupBy's own — the range
         # repartition above has an explicit width AQE never touches
-        # (r14, scalar_action_confs)
-        with scalar_action_confs(part.sparkSession):
-            sums = (
-                part.groupBy("__pid")
-                .agg(F.sum(token_col).alias("__t"))
-                .collect()
-            )
+        # (r14, SCALAR posture)
+        sums = (
+            posture(part).groupBy("__pid")
+            .agg(F.sum(token_col).alias("__t"))
+            .collect()
+        )
         offsets: dict[int, int] = {}
         acc = 0
         for r in sorted(sums, key=lambda r: r["__pid"]):
@@ -373,9 +372,8 @@ def pack_sequences(
     if oversize == "error":
         # sizing/guard counts: partial aggregation shrinks every input
         # partition to one row before the single exchange — a scalar
-        # plan shape AQE only adds jobs to (r14, scalar_action_confs)
-        with scalar_action_confs(df.sparkSession):
-            n_over = df.where(F.col(token_col) > seq_len).count()
+        # plan shape AQE only adds jobs to (r14, SCALAR posture)
+        n_over = posture(df).where(F.col(token_col) > seq_len).count()
         if n_over:
             raise ValueError(
                 f"{n_over} documents exceed seq_len={seq_len}; chunk "
@@ -388,8 +386,7 @@ def pack_sequences(
         # packing — a tiny corpus split across defaultParallelism
         # groups would open near-empty bins everywhere. One count
         # sizes the grouping; the cap keeps groups Arrow-batch-sized.
-        with scalar_action_confs(df.sparkSession):
-            n = df.count()
+        n = posture(df).count()
         dp = df.sparkSession.sparkContext.defaultParallelism
         P = max(1, min(dp * 4, (n + 8191) // 8192))
     sized = df.select(
@@ -517,15 +514,13 @@ def curation_funnel(
     # boundary counts run over checkpoint-truncated frames (and the
     # caller's input for n_in): scalar plans — AQE off per action
     # drops the exchange-materialization job pair (r14)
-    with scalar_action_confs(df.sparkSession):
-        n_in = cur.count()
+    n_in = posture(cur).count()
     for name, fn in stages:
         nxt = fn(cur)
         if nxt.isStreaming:
             raise ValueError("curation_funnel is batch-only")
         nxt, nxt_h = tracked_checkpoint(nxt)
-        with scalar_action_confs(df.sparkSession):
-            n_out = nxt.count()
+        n_out = posture(nxt).count()
         report.append(
             {
                 "stage": name,

@@ -36,8 +36,9 @@ from pyspark.sql import Column, DataFrame, Window
 
 from .hashing import MINHASH_COEFFS, P, SIMHASH_BITS, h32, h48
 from .text import fingerprint, words
-from .util import (fan_out, local_rows_df, release_all,
-                   spread as _spread, tracked_checkpoint)
+from .util import (ONE_SHOT_TAKE, SCALAR, fan_out, local_rows_df, posture,
+                   rebind, release_all, spread as _spread,
+                   tracked_checkpoint)
 
 #: Default row cap for broadcasting the doc-level verify side of a pair
 #: join. 2M rows × (8B id + 16×8B signature) ≈ 300 MB — comfortably
@@ -54,11 +55,8 @@ def _verify_gate(df: DataFrame, broadcast_verify, cap: int) -> bool:
     which holds one narrow row per distinct doc)."""
     if broadcast_verify is not None:
         return bool(broadcast_verify)
-    from .util import scalar_action_confs
-
     # scan → count: partial-agg'd scalar plan, no AQE job wave (r14)
-    with scalar_action_confs(df.sparkSession):
-        return df.count() <= cap
+    return posture(df).count() <= cap
 
 
 def _maybe_broadcast(side: DataFrame, flag: bool) -> DataFrame:
@@ -83,16 +81,9 @@ def _maybe_broadcast(side: DataFrame, flag: bool) -> DataFrame:
 #: ordering constraint this removes was worth +11 s when violated.
 #: Live cache stays bounded: one call's worth per scope, and scopes
 #: only exist while their chain is being built.
-_LIVE_CACHES: list = []
-_CACHE_SCOPES: dict = {None: _LIVE_CACHES}
+_CACHE_SCOPES: dict = {}  # scope key (None: the shared default) → frames
 _SCOPE_LOCK = threading.Lock()
 _SCOPE_TLS = threading.local()
-
-
-def _scope_list() -> list:
-    key = getattr(_SCOPE_TLS, "scope", None)
-    with _SCOPE_LOCK:
-        return _CACHE_SCOPES.setdefault(key, [])
 
 
 @contextmanager
@@ -109,15 +100,17 @@ def cache_scope():
     registered until the next :func:`release_caches` sweep (the bench's
     per-slot quiesce / slot teardown) unpersists it and drops the
     entry."""
-    token = object()
     prev = getattr(_SCOPE_TLS, "scope", None)
-    with _SCOPE_LOCK:
-        _CACHE_SCOPES[token] = []
-    _SCOPE_TLS.scope = token
+    _SCOPE_TLS.scope = object()
     try:
         yield
     finally:
         _SCOPE_TLS.scope = prev
+
+
+def _unpersist(frames: list) -> None:
+    for df in reversed(frames):  # newest first, as they were stacked
+        df.unpersist()
 
 
 def release_caches() -> None:
@@ -125,15 +118,14 @@ def release_caches() -> None:
     scope (the public sweep: bench quiesce, tests, slot teardown);
     finished private scopes are dropped from the registry here.
     Results of those calls stay correct — they recompute from source
-    if re-used."""
+    if re-used. The registry is swapped out under the lock and the
+    snapshot unpersisted outside it, so concurrent operator entries
+    and sink batches never share a list with the sweep."""
     with _SCOPE_LOCK:
-        lists = [_CACHE_SCOPES[None]] + [
-            _CACHE_SCOPES.pop(k)
-            for k in [k for k in _CACHE_SCOPES if k is not None]
-        ]
-    for lst in lists:
-        while lst:
-            lst.pop().unpersist()
+        drained = list(_CACHE_SCOPES.values())
+        _CACHE_SCOPES.clear()
+    for frames in drained:
+        _unpersist(frames)
 
 
 def _retire_scope_caches() -> None:
@@ -141,15 +133,28 @@ def _retire_scope_caches() -> None:
     frames only (the pre-r15 ``release_caches()`` at every operator
     entry — now scope-local so concurrent chains can't drop each
     other's)."""
-    lst = _scope_list()
-    while lst:
-        lst.pop().unpersist()
+    with _SCOPE_LOCK:
+        frames = _CACHE_SCOPES.pop(getattr(_SCOPE_TLS, "scope", None), [])
+    _unpersist(frames)
 
 
 def _keep_cache(df: DataFrame) -> DataFrame:
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _scope_list().append(df)
+    key = getattr(_SCOPE_TLS, "scope", None)
+    with _SCOPE_LOCK:
+        _CACHE_SCOPES.setdefault(key, []).append(df)
     return df
+
+
+def _scalar_fill(df: DataFrame) -> tuple[DataFrame, int]:
+    """→ (``df`` kept and filled, its row count) for an
+    aggregation-only fill. Cache registration and the count both run in
+    the SCALAR posture: persist() compiles the cached child plan under
+    its session's conf, so the cached plan is the static one (r14: an
+    AQE stage wave → one job). The frame comes back bound to ``df``'s
+    own session."""
+    kept = _keep_cache(posture(df))
+    return rebind(kept, df.sparkSession), kept.count()
 
 
 def _bm_intersect(col_a, col_b, nwords: int | None = None) -> Column:
@@ -637,23 +642,17 @@ def minhash_lsh_pairs(
         # cache otherwise and each re-run the signature pipeline. The
         # fill plan is aggregation-only (signatures → groupBy sk:
         # partial-agg'd, one row per distinct content into its single
-        # exchange), so it runs under the scalar-action bracket — cache
-        # registration inside too, persist() compiles the child plan
-        # with the conf of that moment (r14: AQE stage wave → one job).
-        from .util import scalar_action_confs
-
-        with scalar_action_confs(sigs.sparkSession):
-            groups = _keep_cache(
-                sigs.withColumn("sk", sk)
-                .groupBy("sk")
-                .agg(
-                    F.min("id").alias("gid"),
-                    F.collect_list("id").alias("members"),
-                    F.first("sig").alias("sig"),
-                )
-                .drop("sk")
+        # exchange): a SCALAR-posture fill
+        groups, _ = _scalar_fill(
+            sigs.withColumn("sk", sk)
+            .groupBy("sk")
+            .agg(
+                F.min("id").alias("gid"),
+                F.collect_list("id").alias("members"),
+                F.first("sig").alias("sig"),
             )
-            groups.count()
+            .drop("sk")
+        )
         mem = groups.select("gid", F.explode("members").alias("id"))
         reps = groups.select(F.col("gid").alias("id"), "sig")
         # Verify *inside* the enumeration join: the signature rides along
@@ -941,16 +940,13 @@ def ngram_jaccard_pairs(
     # partition — in the bitmap regime the take exhausts the frame by
     # definition, so executeTake's 1→4→16 scale-up is pure retry
     # latency. AQE off + one-shot width folds the stage wave into one
-    # job; the CACHE registration must happen inside the bracket too
+    # job; the CACHE registration must happen in that posture too
     # (persist() compiles the InMemoryRelation's child plan with the
-    # conf of that moment), so the cached dfreq plan is the static one
+    # conf of its session), so the cached dfreq plan is the static one
     # — vocabulary-sized partitions either way.
-    from .util import one_shot_take, scalar_action_confs
-
-    spark_ = df.sparkSession
-    with scalar_action_confs(spark_), one_shot_take(spark_):
-        dfreq = _keep_cache(dfreq)
-        head = dfreq.take(cap_v + 1)
+    dfreq = _keep_cache(posture(dfreq, {**SCALAR, **ONE_SHOT_TAKE}))
+    head = dfreq.take(cap_v + 1)
+    dfreq = rebind(dfreq, df.sparkSession)
     if len(head) <= cap_v:
         ordered = sorted((int(r["df"]), r["s"]) for r in head)
         tid_of: dict[str, int] | None = {
@@ -1033,20 +1029,17 @@ def ngram_jaccard_pairs(
         # one action (groups.count) materializes the whole chain. Only
         # the prefix fallback below pays the per_doc checkpoint.
         # the fill plan is scan → (statically-planned broadcast dic
-        # join) → groupBy(bm): aggregation-only shuffle, so the fill
-        # takes the scalar-action bracket (cache registered inside it
-        # — the persist-time compile rule, r14)
-        with scalar_action_confs(per_doc_dense.sparkSession):
-            groups = _keep_cache(
-                per_doc_dense.where(F.col("sz") > 0)
-                .groupBy("bm")
-                .agg(
-                    F.min("id").alias("gid"),
-                    F.collect_list("id").alias("members"),
-                    F.first("sz").alias("sz"),
-                )
+        # join) → groupBy(bm): aggregation-only shuffle, a
+        # SCALAR-posture fill
+        groups, n_reps = _scalar_fill(
+            per_doc_dense.where(F.col("sz") > 0)
+            .groupBy("bm")
+            .agg(
+                F.min("id").alias("gid"),
+                F.collect_list("id").alias("members"),
+                F.first("sz").alias("sz"),
             )
-            n_reps = groups.count()
+        )
         if n_reps <= allpairs_rep_cap:
             return _dense_allpairs(
                 groups,
@@ -1254,19 +1247,13 @@ def simhash_pairs(
     _retire_scope_caches()
     if sigs is None:
         sigs = simhash_signatures(df, text_col, id_col)
-    # aggregation-only fill (signatures → groupBy sim) — the scalar-
-    # action bracket folds its AQE stage wave into one job; cache
-    # registered inside (persist-time compile rule, r14)
-    from .util import scalar_action_confs
-
-    with scalar_action_confs(sigs.sparkSession):
-        groups = _keep_cache(
-            sigs.groupBy("sim").agg(
-                F.min("id").alias("gid"),
-                F.collect_list("id").alias("members"),
-            )
+    # aggregation-only fill (signatures → groupBy sim)
+    groups, n_reps = _scalar_fill(
+        sigs.groupBy("sim").agg(
+            F.min("id").alias("gid"),
+            F.collect_list("id").alias("members"),
         )
-        n_reps = groups.count()
+    )
     reps = groups.select(F.col("gid").alias("id"), "sim")
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     # The dense path is output-equivalent to banding ONLY inside the

@@ -67,7 +67,7 @@ from .dedup import (
     _retire_scope_caches,
 )
 from .hashing import xxh64
-from .util import local_rows_df, spread, tracked_checkpoint
+from .util import local_rows_df, rebind, spread, tracked_checkpoint
 
 
 def minhash_band_index(
@@ -550,8 +550,11 @@ def read_band_index(
         _main_cache is not None
         and _main_cache.get("src") == src
         and _main_cache.get("stat") == statkey
+        and _main_cache.get("df") is not None
     ):
-        df = _main_cache.get("df")
+        # the frame may come from another session (a sink batch's
+        # posture clone): plan it under the caller's own conf
+        df = rebind(_main_cache["df"], spark)
     if df is None:
         reader = spark.read
         if meta.get("schema"):
@@ -1092,7 +1095,7 @@ def _dedup_local_probe(
     from .dedup import _check_banding
 
     rows_per_band = _check_banding(num_hashes, bands)
-    from .util import one_shot_take
+    from .util import ONE_SHOT_TAKE, posture
 
     spark = new_df.sparkSession
     # ONE take over a tagged union: the delta's signatures PLUS its
@@ -1113,8 +1116,7 @@ def _dedup_local_probe(
         )
     )
     take_cap = 2 * _DRIVER_PROBE_DOC_CAP + 2
-    with one_shot_take(spark):
-        rows = probe_src.take(take_cap)
+    rows = posture(probe_src, ONE_SHOT_TAKE).take(take_cap)
     if len(rows) >= take_cap:  # either branch may be incomplete
         return None
     delta: list = []
@@ -1195,10 +1197,9 @@ def _dedup_local_probe(
         pruned = pruned.join(
             F.broadcast(kdf), ["band", "key"], "left_semi"
         )
-    with one_shot_take(spark):
-        old_rows = pruned.select("id", "sig").take(
-            _DRIVER_PROBE_ROW_CAP + 1
-        )
+    old_rows = posture(pruned.select("id", "sig"), ONE_SHOT_TAKE).take(
+        _DRIVER_PROBE_ROW_CAP + 1
+    )
     if len(old_rows) > _DRIVER_PROBE_ROW_CAP:
         return None
     # index-parameter guard: every pruned old row carries its

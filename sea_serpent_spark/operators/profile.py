@@ -315,11 +315,10 @@ def skew_report(
     counts = df.select(key.alias("key")).groupBy("key").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # scalar sizing count — no AQE job pair (r14, scalar_action_confs)
-    from .util import scalar_action_confs
+    # scalar sizing count — no AQE job pair (r14, SCALAR posture)
+    from .util import posture
 
-    with scalar_action_confs(df.sparkSession):
-        total_n = df.count() or 1
+    total_n = posture(df).count() or 1
     # orderBy+limit compiles to TakeOrderedAndProject (k-bounded per
     # partition, no global sort); rank/cum-share windows then run over
     # the k survivors only — never a single-partition window across all
@@ -402,11 +401,10 @@ def expect(
     # one conditional-count pass, zero-group output (each `unique`
     # rule adds an exact count-distinct — still partial-agg'd narrow
     # rows into its exchanges): AQE off for the action collapses the
-    # per-exchange job wave into one job (r14, scalar_action_confs)
-    from .util import scalar_action_confs
+    # per-exchange job wave into one job (r14, SCALAR posture)
+    from .util import posture
 
-    with scalar_action_confs(df.sparkSession):
-        row = df.agg(*aggs).collect()[0]
+    row = posture(df).agg(*aggs).collect()[0]
     spark = df.sparkSession
     from .util import local_rows_df
 
@@ -446,7 +444,7 @@ def dataset_diff(
     # old per-side limit(1).count() probes paid the full per-key
     # aggregation anyway (a limit over an agg cannot early-exit), plus
     # an AQE job wave per exchange; this is the same work as one job.
-    from .util import scalar_action_confs
+    from .util import posture
 
     probe = None
     for side, d in (("left", left), ("right", right)):
@@ -457,11 +455,10 @@ def dataset_diff(
             .select(F.lit(side).alias("__side"), "__mx")
         )
         probe = p if probe is None else probe.unionByName(p)
-    with scalar_action_confs(left.sparkSession):
-        dup_sides = {
-            r["__side"] for r in probe.collect()
-            if (r["__mx"] or 0) > 1
-        }
+    dup_sides = {
+        r["__side"] for r in posture(probe).collect()
+        if (r["__mx"] or 0) > 1
+    }
     for side in ("left", "right"):
         if side in dup_sides:
             raise ValueError(f"duplicate keys in {side} dataset")

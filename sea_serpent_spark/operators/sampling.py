@@ -255,14 +255,13 @@ def token_budget_mix(
         # group-cardinality collect (≤ num×|sources| rows); the range
         # repartition above has an explicit width AQE never touches,
         # so AQE off here only drops the per-exchange job wave (r14)
-        from .util import scalar_action_confs
+        from .util import posture
 
-        with scalar_action_confs(part.sparkSession):
-            sums = (
-                part.groupBy("__pid", source_col)
-                .agg(F.sum("__tok").alias("__t"))
-                .collect()
-            )
+        sums = (
+            posture(part).groupBy("__pid", source_col)
+            .agg(F.sum("__tok").alias("__t"))
+            .collect()
+        )
         # per-source cumulative offsets in partition order — a source's
         # rows sit in consecutive range partitions, so summing its
         # earlier partitions gives the exclusive prefix total
@@ -356,15 +355,14 @@ def temperature_rates(
         raise ValueError(f"alpha must be > 0, got {alpha}")
     # group-cardinality aggregate (partial-agg'd narrow rows into one
     # exchange) — AQE off per action, no job pair (r14)
-    from .util import scalar_action_confs
+    from .util import posture
 
-    with scalar_action_confs(df.sparkSession):
-        sizes = {
-            r[source_col]: r["n"]
-            for r in df.groupBy(source_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    sizes = {
+        r[source_col]: r["n"]
+        for r in posture(df).groupBy(source_col)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
     if not sizes:
         return {}
     # sum in SORTED source order: collect() row order varies run to run,

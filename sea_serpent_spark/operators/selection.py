@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 from .hashing import h48
 from .sampling import weighted_sample
 from .text import words
-from .util import fan_out, scalar_action_confs, tracked_checkpoint
+from .util import fan_out, posture, tracked_checkpoint
 
 DSIR_BUCKETS = 10_000
 
@@ -99,14 +99,13 @@ def _model_from_buckets(
         # ≤ ``buckets`` rows: materialize the model once — the total
         # collect below and the downstream broadcast join would
         # otherwise EACH run the full corpus featurization.
-        # aggregation-only fill → scalar-action bracket (r14)
+        # aggregation-only fill → SCALAR posture (r14)
         scalar_plan=True,
     )
     # counts is checkpoint-truncated (≤ ``buckets`` narrow rows), so
     # the total is a pure scalar agg — AQE's per-exchange job buys
-    # nothing here (r14, scalar_action_confs)
-    with scalar_action_confs(counts.sparkSession):
-        total = counts.agg(F.sum("n")).collect()[0][0] or 0
+    # nothing here (r14, SCALAR posture)
+    total = posture(counts).agg(F.sum("n")).collect()[0][0] or 0
     denom = math.log(total + alpha * buckets)
     lp = counts.select(
         "b", (F.log(F.col("n") + F.lit(alpha)) - F.lit(denom)).alias("logp")
@@ -234,19 +233,17 @@ def _dsir_scored(
     )
     # per_doc is checkpoint-truncated: both the max and the softmax
     # total below are scalar aggs over it — no AQE job pair (r14)
-    with scalar_action_confs(per_doc.sparkSession):
-        mx = per_doc.agg(F.max("dsir_logw")).collect()[0]
+    mx = posture(per_doc).agg(F.max("dsir_logw")).collect()[0]
     mx = mx[0] if mx and mx[0] is not None else 0.0
     pd_ck = per_doc
 
     def total() -> float:
-        with scalar_action_confs(pd_ck.sparkSession):
-            return float(
-                pd_ck.agg(
-                    F.sum(F.exp(F.col("dsir_logw") - F.lit(float(mx))))
-                ).collect()[0][0]
-                or 0.0
-            )
+        return float(
+            posture(pd_ck).agg(
+                F.sum(F.exp(F.col("dsir_logw") - F.lit(float(mx))))
+            ).collect()[0][0]
+            or 0.0
+        )
 
     scored = raw.join(
         per_doc, F.col(id_col) == F.col("__did"), "left"

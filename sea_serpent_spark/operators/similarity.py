@@ -622,21 +622,16 @@ def embedding_near_dup_pairs(
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
     if emit == "spanning":
-        from .dedup import _keep_cache
+        from .dedup import _scalar_fill
 
         keys = ([group_col] if group_col is not None else []) + [vec_col]
-        # aggregation-only fill — scalar-action bracket, cache
-        # registered inside (persist-time compile rule, r14)
-        from .util import scalar_action_confs
-
-        with scalar_action_confs(df.sparkSession):
-            groups = _keep_cache(
-                df.groupBy(*keys).agg(
-                    F.min(id_col).alias("__gid"),
-                    F.collect_list(id_col).alias("__members"),
-                )
+        # aggregation-only fill — SCALAR posture (r14)
+        groups, _ = _scalar_fill(
+            df.groupBy(*keys).agg(
+                F.min(id_col).alias("__gid"),
+                F.collect_list(id_col).alias("__members"),
             )
-            groups.count()
+        )
         reps = groups.select(
             F.col("__gid").alias(id_col),
             *([group_col] if group_col is not None else []),

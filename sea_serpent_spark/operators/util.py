@@ -10,10 +10,8 @@ from __future__ import annotations
 
 import logging
 import threading
-from contextlib import contextmanager
-from contextlib import nullcontext as _nullcontext
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _log = logging.getLogger(__name__)
 
@@ -189,24 +187,20 @@ def tracked_checkpoint(
     registry so :func:`release_checkpoints` can sweep it at the next
     quiesce point.
 
-    ``scalar_plan=True`` (r14) runs the eager fill under
-    :func:`scalar_action_confs` — for call sites whose plan is
-    aggregation-only (the single shuffle carries partial-agg'd narrow
-    rows), where AQE's per-exchange stage job is pure scheduler
-    latency. Leave False for plans carrying joins or explicit wide
-    repartitions AQE should re-plan."""
+    ``scalar_plan=True`` (r14) runs the eager fill in the ``SCALAR``
+    :func:`posture` — for call sites whose plan is aggregation-only (the
+    single shuffle carries partial-agg'd narrow rows), where AQE's
+    per-exchange stage job is pure scheduler latency. Leave False for
+    plans carrying joins or explicit wide repartitions AQE should
+    re-plan. The returned frame is bound to ``df``'s own session."""
     sc = df.sparkSession.sparkContext
-    ctx = (
-        scalar_action_confs(df.sparkSession)
-        if scalar_plan
-        else _nullcontext()
+    src = posture(df) if scalar_plan else df
+    out = rebind(
+        src.localCheckpoint(eager=True)
+        if storage_level is None
+        else src.localCheckpoint(eager=True, storageLevel=storage_level),
+        df.sparkSession,
     )
-    with ctx:
-        out = (
-            df.localCheckpoint(eager=True)
-            if storage_level is None
-            else df.localCheckpoint(eager=True, storageLevel=storage_level)
-        )
     try:
         # Dataset.localCheckpoint returns a LogicalRDD wrapping the
         # persisted internal RDD; its id is the unpersist target
@@ -329,104 +323,76 @@ def _quantizer_key(x):
     return float(x)
 
 
-#: Guards the one-shot-take conf flip below. RLock (not the streaming
-#: sinks' batch lock): a probe may run inside a sink batch that holds
-#: its own lock, and re-entry from the same thread must not deadlock.
-_TAKE_CONF_LOCK = threading.RLock()
-_INITIAL_PARTS_CONF = "spark.sql.limit.initialNumPartitions"
+#: Plan postures: the conf sets :func:`posture` applies to one action's
+#: session clone. ``SCALAR`` turns AQE off. AQE materializes every
+#: exchange as its own Spark job to re-plan with runtime stats; for a
+#: scalar/metadata-sized aggregate (count, sum, group-cardinality
+#: collect) partial aggregation has already shrunk each partition to a
+#: few narrow rows, so that re-plan buys nothing and each exchange
+#: still costs a driver job (measured r14: each 2-3-job wave becomes
+#: one job). The shuffle width stays the session's, so it is safe over
+#: corpus-sized inputs. Do NOT use it when the plan carries joins whose
+#: strategy AQE should pick at runtime.
+SCALAR = {"spark.sql.adaptive.enabled": "false"}
+
+#: ``take()`` scans 64 partitions in its FIRST job. ``executeTake``'s
+#: default scale-up (1 partition, then 4x per retry) suits LIMIT over a
+#: big scan; a capped probe collect over a handful of post-shuffle
+#: partitions that are ALL needed pays 2-4 retry jobs of scheduler
+#: latency per take (r14 audit: 8 of the LSH probe's 12 per-batch jobs).
+#: 64 one-shots every trigger-sized frame and bounds a cap-overflow
+#: take's overscan to one pass.
+ONE_SHOT_TAKE = {"spark.sql.limit.initialNumPartitions": "64"}
 
 
-@contextmanager
-def one_shot_take(spark, parts: int = 64):
-    """Make ``take()`` scan ``parts`` partitions in its FIRST job for
-    the duration of the block (restored on exit, lock-guarded).
-
-    ``executeTake``'s default scale-up loop (1 partition, then 4x per
-    retry) is the right shape for LIMIT over a big scan; for the local
-    micro-batch probe's capped collects — a handful of post-shuffle
-    partitions that will ALL be needed — it costs 2-4 extra Spark jobs
-    of pure scheduler latency per take (r14 job audit: 8 of the LSH
-    probe's 12 per-batch jobs were its two takes' scans, 5 of them
-    scale-up retries). 64 one-shots
-    every trigger-sized frame while keeping the overscan of a
-    pathological cap-overflow take bounded to one pass."""
-    with _TAKE_CONF_LOCK:
-        prev = spark.conf.get(_INITIAL_PARTS_CONF, None)
-        spark.conf.set(_INITIAL_PARTS_CONF, str(int(parts)))
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(_INITIAL_PARTS_CONF)
-            else:
-                spark.conf.set(_INITIAL_PARTS_CONF, prev)
+def micro(parts: int) -> dict:
+    """AQE off + a narrow static shuffle width: the posture for plans
+    the caller has already bounded to micro size (a single-bucket
+    commit, a trigger-sized stream batch). Callers whose data CAN be
+    large must size-gate first."""
+    return {**SCALAR, "spark.sql.shuffle.partitions": str(int(parts))}
 
 
-#: Guards the micro-plan conf bracket below (RLock: a micro-commit can
-#: run inside a caller that already holds it, e.g. a bundle flush
-#: committing several staged edits back-to-back on one thread).
-_MICRO_PLAN_LOCK = threading.RLock()
-
-#: Sessions with an :func:`overlap_build` in flight (id(session) →
-#: count). While a session is registered, the AQE conf brackets below
-#: become NO-OPS for that session (r15, closing the overlap × bracket
-#: race): a bracket that flipped the session-global
-#: ``spark.sql.adaptive.enabled`` would make SIBLING chains' unbracketed
-#: plan compilations timing-dependent — a deliberately-AQE-on fill
-#: could silently compile with AQE off. Keeping AQE ON during overlap
-#: is the conservative posture (the bracket's only job is shaving
-#: scheduler latency, and overlap hides that latency anyway); results
-#: are identical either way. Registration keys on the PYTHON session
-#: object id — safe because this package's sessions are module-cached
-#: singletons and streaming foreachBatch bodies receive per-query JVM
-#: clone sessions (verified: conf-isolated), which are never the
-#: registered object, so sink batch brackets keep their posture even
-#: while a foreground overlap is live.
-_OVERLAP_SESSIONS: dict = {}
+def rebind(df: DataFrame, spark) -> DataFrame:
+    """``df``'s ANALYZED plan as a frame of ``spark``. The analyzed plan,
+    not the logical one: a temp view created after a clone does not
+    exist in it, and an analyzed plan needs no catalog lookup. Persisted
+    and checkpointed data is shared across sessions, so the rebound
+    frame reads the same cache and checkpoint blocks."""
+    if df.sparkSession is spark:
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark)
 
 
-def _bracket_is_noop(spark) -> bool:
-    """True while an overlap_build is in flight on ``spark`` — AQE
-    brackets must not flip session-global conf under sibling chains.
-    Caller holds ``_MICRO_PLAN_LOCK``."""
-    return _OVERLAP_SESSIONS.get(id(spark), 0) > 0
+def posture(df: DataFrame, confs: dict = SCALAR) -> DataFrame:
+    """``df`` rebound into a clone of its session with ``confs`` set.
+
+    The ONE plan-posture mechanism: each action that wants a different
+    plan shape (``SCALAR``, ``micro(parts)``, ``ONE_SHOT_TAKE``) runs on
+    its own clone (about 6 ms of py4j round trips on a 4-core box,
+    clone included), so the parent session's conf is never
+    written. Concurrent threads, ``overlap_build`` sibling chains and
+    streaming queries keep planning under their own conf, and no lock or
+    restore step exists. The clone inherits the parent's confs,
+    registered query listeners, temp views and UDFs. Results never
+    depend on posture, only plans and job counts do.
+
+    Frames that outlive the action must go back through :func:`rebind`
+    to the caller's session, so downstream plans do not inherit the
+    posture."""
+    parent = df.sparkSession
+    clone = SparkSession(
+        parent.sparkContext, parent._jsparkSession.cloneSession()
+    )
+    for k, v in confs.items():
+        clone.conf.set(k, v)
+    return rebind(df, clone)
 
 
-@contextmanager
-def micro_plan_confs(spark, parts: int = 4):
-    """AQE off + a narrow static shuffle width for the duration of the
-    block (restored on exit, lock-guarded) — the streaming sinks'
-    per-batch posture (``streaming.dedup._batch_confs``), reusable for
-    any plan bracket whose input is KNOWN to be micro-sized at the call
-    site. AQE materializes every exchange as its own Spark job to
-    re-plan with runtime stats — the right trade for big unknown-stats
-    queries, pure scheduler latency for a bracket whose size the caller
-    has already bounded (mutation micro-commits gate on the table's
-    bucket count: single-bucket == auto-sized under 1M rows). Callers
-    whose data CAN be large must not enter the bracket — size-gate
-    first. The lock serializes concurrent brackets (and concurrent
-    plan-time conf reads of other threads see the flipped value for
-    the duration — parallelism-only impact, never results).
-
-    NO-OP while an :func:`overlap_build` is in flight on this session
-    (r15): flipping session-global conf under sibling chains would make
-    their plan posture timing-dependent."""
-    with _MICRO_PLAN_LOCK:
-        if _bracket_is_noop(spark):
-            yield
-            return
-        prev_shuf = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(parts)))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-
-def overlap_build(*thunks, workers: int = 3, spark=None) -> list:
+def overlap_build(*thunks, workers: int = 3) -> list:
     """Run independent member-builder thunks concurrently and return
     their results in SUBMISSION order (guide §2.6: Spark happily runs
     several jobs at once inside one application; member chains that
@@ -440,75 +406,14 @@ def overlap_build(*thunks, workers: int = 3, spark=None) -> list:
     deterministic frames/checkpoints); the caller assembles them in
     the same fixed order as the sequential formulation, so the output
     plan is identical. Exceptions re-raise at collection, preserving
-    the sequential error surface.
-
-    ``spark`` (r15): the session the chains compile against. While the
-    overlap is in flight, AQE conf brackets on that session
-    (:func:`scalar_action_confs` / :func:`micro_plan_confs`) become
-    no-ops so sibling chains' plan posture is deterministic (always
-    the session's steady-state AQE-on). Registration takes
-    ``_MICRO_PLAN_LOCK``, so an in-flight bracket fully exits (conf
-    restored) before any chain starts compiling."""
+    the sequential error surface. A chain's :func:`posture` actions
+    plan on their own session clones, so sibling chains keep the
+    session's steady-state conf."""
     from concurrent.futures import ThreadPoolExecutor
 
-    key = None
-    if spark is not None:
-        key = id(spark)
-        with _MICRO_PLAN_LOCK:
-            _OVERLAP_SESSIONS[key] = _OVERLAP_SESSIONS.get(key, 0) + 1
-    try:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futs = [pool.submit(t) for t in thunks]
-            return [f.result() for f in futs]
-    finally:
-        if key is not None:
-            with _MICRO_PLAN_LOCK:
-                n = _OVERLAP_SESSIONS.get(key, 0) - 1
-                if n > 0:
-                    _OVERLAP_SESSIONS[key] = n
-                else:
-                    _OVERLAP_SESSIONS.pop(key, None)
-
-
-@contextmanager
-def scalar_action_confs(spark):
-    """AQE off — shuffle width UNTOUCHED — for the duration of one
-    scalar/metadata-sized aggregate action (restored on exit,
-    lock-guarded; same lock as :func:`micro_plan_confs`).
-
-    AQE materializes every exchange as its own Spark job to re-plan
-    with runtime stats. For a *scalar* aggregate (count, sum, max,
-    group-cardinality collect) that trade buys nothing: partial
-    aggregation has already shrunk each upstream partition to a
-    handful of narrow rows before the exchange, so there is nothing
-    for AQE to coalesce or skew-split — but every exchange still
-    costs a full driver job of scheduler latency (measured r14:
-    each 2-3-job scalar-agg wave is one job without AQE, ~0.1-0.3 s
-    of wall per action on the bench box). Unlike
-    :func:`micro_plan_confs` this bracket leaves
-    ``spark.sql.shuffle.partitions`` alone, so it is safe for
-    aggregates over corpus-sized inputs: the plan is identical to
-    pre-AQE Spark at the deploy's static width.
-
-    Use ONLY around actions whose plan the call site bounds: an
-    aggregate directly over a checkpoint/persist-truncated frame, or
-    a partial-agg-first report over a source scan. Do NOT use when
-    the input plan carries joins whose strategy AQE should pick at
-    runtime (e.g. ``weighted_sample``'s generic total over an
-    arbitrary scored plan stays on AQE).
-
-    NO-OP while an :func:`overlap_build` is in flight on this session
-    (r15) — see :func:`micro_plan_confs`."""
-    with _MICRO_PLAN_LOCK:
-        if _bracket_is_noop(spark):
-            yield
-            return
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futs = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futs]
 
 
 #: local_rows_df falls back to createDataFrame past this many CELLS:
@@ -547,6 +452,24 @@ def _sql_lit(v) -> str:
     )
 
 
+def _normalizer(dt):
+    """→ a value fixer for data type ``dt``, or None when values pass
+    as they are. An int in a fractional column becomes a float: the
+    VALUES path would CAST it anyway, while createDataFrame's schema
+    verifier rejects it."""
+    from pyspark.sql import types as _T
+
+    if isinstance(dt, (_T.DoubleType, _T.FloatType)):
+        return lambda v: float(v) if isinstance(v, int) else v
+    if isinstance(dt, _T.ArrayType):
+        inner = _normalizer(dt.elementType)
+        if inner is not None:
+            return lambda v: (
+                [inner(x) for x in v] if isinstance(v, (list, tuple)) else v
+            )
+    return None
+
+
 def local_rows_df(spark, rows, schema: str):
     """Literal LocalRelation frame (r15). ``spark.createDataFrame``
     over a Python list parallelizes it into an RDD-backed scan
@@ -568,7 +491,12 @@ def local_rows_df(spark, rows, schema: str):
     honored — values for non-nullable fields must be non-NULL). Use
     for SMALL literal tables only (rule snapshots, driver-computed id
     lists, probe batches, single-row tags): the whole relation lives
-    in the plan and on the driver."""
+    in the plan and on the driver.
+
+    One input contract on both sides of the cell cap: values are
+    normalized against the schema once, before the size branch, and
+    rows holding a value with no SQL literal form (date, datetime,
+    Decimal, bytes) take the ``createDataFrame`` path at any size."""
     from pyspark.sql import types as _T
 
     fields = (
@@ -576,27 +504,38 @@ def local_rows_df(spark, rows, schema: str):
         if isinstance(schema, str)
         else schema
     )
+    fixers = [_normalizer(f.dataType) for f in fields]
+    if any(fixers):
+        rows = [
+            tuple(v if fx is None else fx(v) for fx, v in zip(fixers, row))
+            for row in rows
+        ]
     cells = sum(
         len(v) if isinstance(v, (list, tuple)) else 1
         for row in rows
         for v in row
     )
-    if not rows or cells > _LOCAL_ROWS_CELL_CAP:
-        if not rows:
-            return spark.createDataFrame(rows, schema)
-        # oversized fallback: parallelize with FEW slices.
-        # createDataFrame(list) defaults to defaultParallelism (32)
-        # slices, and every consuming job pays ~130 ms of
-        # Python-runner overhead PER SLICE (measured r15 — a 1700-row
-        # 32-slice frame cost ~4 s per write/scan); a handful of
-        # slices keeps the conversion parallel enough at this size
-        # with ~100× less runner overhead.
+    if not rows:
+        return spark.createDataFrame(rows, schema)
+    tuples = None
+    if cells <= _LOCAL_ROWS_CELL_CAP:
+        try:
+            tuples = [
+                "(" + ",".join(_sql_lit(v) for v in row) + ")"
+                for row in rows
+            ]
+        except TypeError:
+            pass  # no literal form for some value: createDataFrame
+    if tuples is None:
+        # parallelize with FEW slices. createDataFrame(list) defaults
+        # to defaultParallelism (32) slices, and every consuming job
+        # pays ~130 ms of Python-runner overhead PER SLICE (measured
+        # r15 — a 1700-row 32-slice frame cost ~4 s per write/scan); a
+        # handful of slices keeps the conversion parallel enough at
+        # this size with ~100× less runner overhead.
         n_slices = max(1, min(8, cells // _LOCAL_ROWS_CELL_CAP))
         rdd = spark.sparkContext.parallelize(list(rows), n_slices)
         return spark.createDataFrame(rdd, schema)
-    tuples = [
-        "(" + ",".join(_sql_lit(v) for v in row) + ")" for row in rows
-    ]
     raw_cols = ", ".join(f"c{j}" for j in range(len(fields)))
     # IF(TRUE, c, NULL) makes a column NULLABLE in the ANALYZED plan
     # (which is what df.schema reports — exact createDataFrame parity,

@@ -35,8 +35,6 @@ Design:
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -44,21 +42,9 @@ from pyspark.sql import types as T
 
 from ..operators.hashing import MINHASH_COEFFS, P, h32
 
-#: Guards the per-batch session-conf flip (shuffle partitions + fanout)
-#: shared by BOTH sinks in this module. Within one streaming query the
-#: batches run serially, but two concurrent queries on the same
-#: SparkSession would otherwise race the set/restore and one could
-#: restore the other's transient value (r12 advice). Held across the
-#: whole batch body — the conf is read at PLAN time throughout it —
-#: which serializes concurrent conf-flipping batches; parallelism-only
-#: impact, results unaffected either way.
-_CONF_FLIP_LOCK = threading.Lock()
-
-
-@contextmanager
-def _batch_confs(spark, batch_parallelism: int | None):
-    """Apply ``batch_parallelism`` to the session confs for one batch,
-    restoring the previous values on exit (no-op when unset).
+def _batch_posture(batch_df: DataFrame, batch_parallelism: int | None):
+    """→ ``batch_df`` in its own session clone with ``batch_parallelism``
+    as shuffle width and operator fan-out (as is when unset).
 
     Also disables ADAPTIVE execution for the batch (r13): AQE
     materializes every exchange as its own Spark job to re-plan at
@@ -68,28 +54,11 @@ def _batch_confs(spark, batch_parallelism: int | None):
     20 → 9 jobs/probe, identical survivors). Backfill-sized batches
     should leave ``batch_parallelism`` unset and keep AQE."""
     if not batch_parallelism:
-        yield
-        return
-    from ..operators.util import FANOUT_CONF
+        return batch_df
+    from ..operators.util import FANOUT_CONF, micro, posture
 
-    with _CONF_FLIP_LOCK:
-        prev_fan = spark.conf.get(FANOUT_CONF, None)
-        prev_shuf = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set(FANOUT_CONF, str(int(batch_parallelism)))
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(int(batch_parallelism))
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            if prev_fan is None:
-                spark.conf.unset(FANOUT_CONF)
-            else:
-                spark.conf.set(FANOUT_CONF, prev_fan)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    n = int(batch_parallelism)
+    return posture(batch_df, {**micro(n), FANOUT_CONF: str(n)})
 
 
 def streaming_minhash_signature(
@@ -252,7 +221,7 @@ def incremental_dedup_sink(
     sidecar unless overridden here) each batch reads only the bucket
     directories its documents touch — per-batch cost stays ~flat as the
     index accumulates instead of growing with history
-    (tools/rehearse_r9.py measures this). Survivor band rows are
+    (BENCH_NOTES "Prunable band-index layout"). Survivor band rows are
     appended in the same layout; pass ``compact_every=N`` to fold each
     bucket's accumulated small per-batch files back into one sorted
     file after every N batches (serial batches make the rewrite+swap
@@ -272,8 +241,8 @@ def incremental_dedup_sink(
     scheduler latency across the probe's ~30 jobs — the dominant term
     of the per-batch floor at high trigger cadence. Set it to roughly
     ``batch_rows / 50k`` (min 1); leave None for big-batch backfills.
-    The conf flips are scoped to the foreachBatch body and restored
-    after — safe because Structured Streaming runs batches serially.
+    The confs live on the batch's own session clone, so nothing else
+    planning on the query's session sees them.
 
     Replay semantics (at-least-once foreachBatch): a batch replayed
     AFTER its index append completed is dropped wholesale —
@@ -307,9 +276,8 @@ def incremental_dedup_sink(
     main_cache: dict = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with _batch_confs(spark, batch_parallelism):
-            _sink_body(spark, batch_df)
+        batch_df = _batch_posture(batch_df, batch_parallelism)
+        _sink_body(batch_df.sparkSession, batch_df)
 
     def _sink_body(spark, batch_df: DataFrame) -> None:
         idx = read_band_index(spark, index_path, _main_cache=main_cache)
@@ -480,8 +448,7 @@ def incremental_semantic_dedup_sink(
             compact_ivf_index(spark, index_path)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        with _batch_confs(spark, batch_parallelism):
-            _body(spark, batch_df)
+        batch_df = _batch_posture(batch_df, batch_parallelism)
+        _body(batch_df.sparkSession, batch_df)
 
     return _sink

@@ -361,26 +361,7 @@ def run_to_memory(stream: DataFrame, name: str, spark: SparkSession,
     micro-batch for a dev-scale drain. The conf is restored afterwards
     (Spark snapshots it into the query at start). Pass ``None`` to keep
     the session value (production streams size this deliberately)."""
-    conf = spark.conf
-    old = conf.get("spark.sql.shuffle.partitions", "200")
-    if state_partitions:
-        try:
-            clamp = str(min(int(old), int(state_partitions)))
-        except (TypeError, ValueError):
-            clamp = str(state_partitions)
-        conf.set("spark.sql.shuffle.partitions", clamp)
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(
-                mode or ("complete" if stream.isStreaming else "append")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions:
-            conf.set("spark.sql.shuffle.partitions", old)
+    start_to_memory(
+        stream, name, spark, mode=mode, state_partitions=state_partitions
+    ).awaitTermination()
     return spark.table(name)

@@ -506,7 +506,7 @@ def q70_profile_qa(spark, sf_dir):
     from .operators.util import overlap_build
 
     ex, sk, dd, cp, fun = overlap_build(
-        _m_expect, _m_skew, _m_diff, _m_corpus, _m_funnel, spark=spark
+        _m_expect, _m_skew, _m_diff, _m_corpus, _m_funnel
     )
     return (
         ex.unionByName(sk).unionByName(dd)
@@ -908,7 +908,7 @@ def q41_ann_topk(spark, sf_dir):
     from .operators.util import overlap_build
 
     (ivfp, ivfpq), (ivfa, ivfaq, ivfc) = overlap_build(
-        _chain_main, _chain_inc, workers=2, spark=spark
+        _chain_main, _chain_inc, workers=2
     )
     return (
         brute.unionByName(lsh).unionByName(mp)
@@ -1085,7 +1085,7 @@ def q43_embedding_near_dup(spark, sf_dir):
         return pairs, sem
 
     (inc, out_sink, out_idx), (pairs, sem) = overlap_build(
-        _chain_ingest, _chain_batch, workers=2, spark=spark
+        _chain_ingest, _chain_batch, workers=2
     )
     return (
         pairs.unionByName(sem).unionByName(inc)
@@ -1392,7 +1392,7 @@ def q60_deterministic_split(spark, sf_dir):
 
     packed, seqs, temp, (dsir, xent), wsamp = overlap_build(
         _chain_packed, _chain_seqs, _chain_temp, _chain_scores,
-        _chain_wsamp, spark=spark,
+        _chain_wsamp,
     )
     # round 11 — op='mix': mix_corpora survivors (training-mix recipe:
     # keep 100% of src0, 30% of src1, 65% of src2, drop the rest).

@@ -561,10 +561,11 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
     test_local_probe_job_budget: a steady-state probe+append cycle
     against a persisted IVF index stays within a small fixed job
     budget (measured 6 for the full sink-shaped batch; pinned with
-    slack) on the driver path. Runs under the sink's own per-batch
-    confs (``_batch_confs``) — AQE's per-exchange jobs are exactly
-    what the sink disables, so the pin measures the sink shape."""
-    from sea_serpent_spark.streaming.dedup import _batch_confs
+    slack) on the driver path. Runs in the sink's own per-batch
+    posture (``util.posture`` with ``micro(8)`` and an 8-way fan-out)
+    — AQE's per-exchange jobs are exactly what the sink disables, so
+    the pin measures the sink shape."""
+    from sea_serpent_spark.operators.util import FANOUT_CONF, micro, posture
 
     ed = vectors.withColumn(
         "embedding", F.col("embedding").cast("array<double>")
@@ -585,17 +586,13 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
         res: dict = {}
         sc.setJobGroup(f"sem-budget-{b}", "job-budget pin")
         try:
-            with _batch_confs(spark, 8):
-                kept = A.incremental_semantic_dedup(
-                    batch, p, threshold=0.9, ingest_out=res,
-                    _main_cache=cache,
-                )
-                kept.write.mode("append").parquet(
-                    str(tmp_path / "out")
-                )
-                A.append_to_ivf_index(
-                    kept.select("vec_id", "embedding"), p
-                )
+            batch = posture(batch, {**micro(8), FANOUT_CONF: "8"})
+            kept = A.incremental_semantic_dedup(
+                batch, p, threshold=0.9, ingest_out=res,
+                _main_cache=cache,
+            )
+            kept.write.mode("append").parquet(str(tmp_path / "out"))
+            A.append_to_ivf_index(kept.select("vec_id", "embedding"), p)
         finally:
             sc.setJobGroup(None, None)
         assert res.get("driver_path") is True

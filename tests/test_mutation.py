@@ -729,3 +729,22 @@ def test_upsert_key_only_source_inserts(base, mytable):
     pdf = mytable.to_frame()
     assert 777 in set(pdf["column1"])
     assert pdf["column1"].tolist().count(3) == 1
+
+
+def test_single_bucket_update_commit_job_budget(spark, base, mytable):
+    """A diff update of a single-bucket table runs its whole commit in
+    the micro posture (AQE off, 4 shuffle partitions): pinned at the 7
+    Spark jobs it took when the posture was a session-wide conf flip."""
+    assert base._bcount("mytable") == 1
+    sc = spark.sparkContext
+    sc.setJobGroup("commit-budget", "job-budget pin")
+    try:
+        mytable.column1.update([1, 2, 3, 40, 5, 6, 70, 8, 9, 10])
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("commit-budget"))
+    assert n_jobs <= 7, n_jobs
+    assert base.table("mytable").to_frame()["column1"].tolist() == [
+        1, 2, 3, 40, 5, 6, 70, 8, 9, 10,
+    ]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -1,23 +1,25 @@
-"""r15: overlap_build × AQE-conf-bracket determinism, and the
-thread-scoped pair-operator cache registries.
+"""Plan-posture isolation and the thread-scoped pair-operator cache
+registries.
 
-The race these pin down (r14 verdict item 5 / advice): a bracket that
-flips the session-global ``spark.sql.adaptive.enabled`` while an
-``overlap_build`` sibling chain compiles a plan would silently compile
-that plan with AQE off — posture nondeterminism (never results). The
-fix: while an overlap is registered on a session, the brackets are
-no-ops, so sibling compilations always see the steady-state conf.
+``util.posture`` runs one action on its own session clone. These tests
+pin what that buys over flipping the shared session's conf: a sibling
+thread compiling on the parent keeps its adaptive plan, a posture action
+inside an ``overlap_build`` chain still gets its posture, and the
+parent's conf never changes, not even when the action raises.
 """
 
+import sys
 import threading
+from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
 
 from sea_serpent_spark.operators.util import (
-    micro_plan_confs,
+    SCALAR,
+    micro,
     overlap_build,
-    scalar_action_confs,
+    posture,
 )
 
 
@@ -33,58 +35,60 @@ def _shuffle_plan(spark):
     )
 
 
-def test_bracket_flips_aqe_outside_overlap(spark):
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    with scalar_action_confs(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert "AdaptiveSparkPlan" not in _physical(_shuffle_plan(spark))
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_overlap_sibling_plan_stays_adaptive(spark):
-    """A sibling chain compiling WHILE another chain sits inside a
-    scalar_action_confs bracket must still plan adaptively."""
-    in_bracket = threading.Event()
+def test_sibling_thread_plans_adaptively_during_posture_action(spark):
+    """While thread A sits inside a posture action, a sibling thread
+    compiling on the parent session still plans with AQE."""
+    in_action = threading.Event()
     sibling_done = threading.Event()
     seen: dict = {}
 
-    def _bracketed():
-        with scalar_action_confs(spark):
-            seen["conf_in_bracket"] = spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            in_bracket.set()
-            assert sibling_done.wait(timeout=30)
-        return "a"
+    def _postured():
+        p = posture(_shuffle_plan(spark))
+        seen["posture_plan"] = _physical(p)
+        in_action.set()
+        assert sibling_done.wait(timeout=30)
+        return sorted(p.collect())
 
     def _sibling():
-        assert in_bracket.wait(timeout=30)
+        assert in_action.wait(timeout=30)
         try:
             seen["sibling_plan"] = _physical(_shuffle_plan(spark))
         finally:
             sibling_done.set()
-        return "b"
 
-    out = overlap_build(_bracketed, _sibling, workers=2, spark=spark)
-    assert out == ["a", "b"]
-    # the bracket no-opped: conf never flipped under the sibling
-    assert seen["conf_in_bracket"] == "true"
+    t = threading.Thread(target=_sibling)
+    t.start()
+    rows = _postured()
+    t.join(timeout=60)
+    assert not t.is_alive()
+    assert "AdaptiveSparkPlan" not in seen["posture_plan"]
     assert "AdaptiveSparkPlan" in seen["sibling_plan"]
-    # registration is refcounted away: brackets flip again afterwards
-    with micro_plan_confs(spark, parts=3):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert rows == sorted(_shuffle_plan(spark).collect())
 
 
-def test_overlap_registration_survives_thunk_error(spark):
-    with pytest.raises(RuntimeError, match="boom"):
-        overlap_build(
-            lambda: (_ for _ in ()).throw(RuntimeError("boom")),
-            spark=spark,
-        )
-    with scalar_action_confs(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+def test_posture_applies_inside_overlap_build(spark):
+    """A posture action in an ``overlap_build`` chain plans without AQE
+    while the sibling chain stays adaptive."""
+    postured, plain = overlap_build(
+        lambda: _physical(posture(_shuffle_plan(spark), micro(3))),
+        lambda: _physical(_shuffle_plan(spark)),
+        workers=2,
+    )
+    assert "AdaptiveSparkPlan" not in postured
+    assert "AdaptiveSparkPlan" in plain
+
+
+def test_parent_conf_untouched_by_posture_action(spark):
+    before = spark.conf.getAll
+    p = posture(_shuffle_plan(spark), {**micro(3), **SCALAR})
+    assert p.sparkSession.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert p.count() == 7
+    assert spark.conf.getAll == before
+    with pytest.raises(Exception, match="posture-boom"):
+        posture(spark.range(3)).select(
+            F.raise_error(F.lit("posture-boom"))
+        ).collect()
+    assert spark.conf.getAll == before
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
@@ -134,3 +138,78 @@ def test_default_scope_retire_still_works(spark):
     assert dfx.storageLevel.useMemory
     _retire_scope_caches()
     assert not dfx.storageLevel.useMemory
+
+
+class _Frame:
+    """Stand-in for a DataFrame: the cache registry only persists and
+    unpersists what it holds. Pure Python, so threads interleave at
+    bytecode granularity instead of queueing on JVM round trips."""
+
+    persisted = False
+
+    def persist(self, *_):
+        self.persisted = True
+        return self
+
+    def unpersist(self, *_):
+        self.persisted = False
+        return self
+
+
+def test_cache_registry_release_race():
+    """``release_caches`` sweeping while other threads keep and retire
+    frames: no thread pops a list another thread just emptied
+    (IndexError), no frame lands in a list the sweep already dropped,
+    and the final sweep leaves nothing persisted."""
+    from sea_serpent_spark.operators.dedup import (
+        _keep_cache,
+        _retire_scope_caches,
+        cache_scope,
+        release_caches,
+    )
+
+    release_caches()
+    frames: list = []
+    errors: list = []
+    stop = threading.Event()
+
+    def _worker(scoped: bool):
+        try:
+            for _ in range(2000):
+                with cache_scope() if scoped else nullcontext():
+                    frames.append(_keep_cache(_Frame()))
+                    frames.append(_keep_cache(_Frame()))
+                    _retire_scope_caches()
+                    frames.append(_keep_cache(_Frame()))
+        except Exception as e:  # noqa: BLE001 - surfaced below
+            errors.append(e)
+
+    def _sweeper():
+        while not stop.is_set():
+            try:
+                release_caches()
+            except Exception as e:  # noqa: BLE001 - surfaced below
+                errors.append(e)
+
+    workers = [
+        threading.Thread(target=_worker, args=(i % 2 == 1,))
+        for i in range(4)
+    ]
+    sweepers = [threading.Thread(target=_sweeper) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads often: widen the race
+    try:
+        for t in sweepers + workers:
+            t.start()
+        for w in workers:
+            w.join(timeout=120)
+        stop.set()
+        for t in sweepers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in sweepers + workers)
+    release_caches()
+    assert not errors, errors[:3]
+    assert len(frames) == 4 * 2000 * 3
+    assert not [f for f in frames if f.persisted]

@@ -533,3 +533,38 @@ def test_sink_band_append_rows_bit_parity(spark, sf_dir, tmp_path):
             for r in rows
         )
     assert keyed(got.collect()) == keyed(expect.collect())
+
+
+def test_sink_batch_fan_out_sees_batch_parallelism(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """``batch_parallelism`` reaches the operators through FANOUT_CONF
+    on the batch's session clone: every ``fan_out`` in the batch sizes
+    to it, and the caller's session never carries it."""
+    import pyspark.sql.functions as F
+
+    from sea_serpent_spark.operators import incremental as I
+    from sea_serpent_spark.operators import util
+    from sea_serpent_spark.streaming.dedup import incremental_dedup_sink
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idxp = str(tmp_path / "idx")
+    I.write_band_index(
+        I.minhash_band_index(docs.where(F.col("doc_id") < 60), key_buckets=4),
+        idxp, key_buckets=4,
+    )
+    targets: list = []
+    real = util._fanout_target
+
+    def _spy(df):
+        targets.append(real(df))
+        return targets[-1]
+
+    monkeypatch.setattr(util, "_fanout_target", _spy)
+    sink = incremental_dedup_sink(
+        idxp, str(tmp_path / "out"), batch_parallelism=3
+    )
+    sink(docs.where(F.col("doc_id").between(60, 119)), 0)
+    assert targets and set(targets) == {3}, targets
+    assert spark.conf.get(util.FANOUT_CONF, None) is None
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
