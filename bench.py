@@ -85,24 +85,14 @@ def main() -> None:
         garbage across 50 queries otherwise lands a multi-second GC
         pause inside whichever query happens to trigger it (observed
         6x outliers on late queries)."""
-        try:
-            from sea_serpent_spark.operators.dedup import release_caches
+        # one sweep frees operator caches AND localCheckpoint blocks (CC
+        # labels, loser sets, packed shards) — left to JVM GC they pile
+        # up across 50 queries and the round-4 driver bench measured the
+        # accumulation as a 7x warm-run outlier on q61. It swallows
+        # dead-JVM errors itself; anything else is a bug and surfaces.
+        from sea_serpent_spark.operators.util import release_checkpoints
 
-            release_caches()
-        except Exception:
-            pass
-        try:
-            # deterministically free localCheckpoint blocks (CC labels,
-            # loser sets, packed shards) — left to JVM GC they pile up
-            # across 50 queries and the round-4 driver bench measured
-            # the accumulation as a 7x warm-run outlier on q61
-            from sea_serpent_spark.operators.util import (
-                release_checkpoints,
-            )
-
-            release_checkpoints()
-        except Exception:
-            pass
+        release_checkpoints()
         try:
             spark.sparkContext._jvm.System.gc()
         except Exception:

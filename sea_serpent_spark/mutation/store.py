@@ -1878,7 +1878,9 @@ class Base:
         # (_id,_seq) scan of the table + the positional join). k narrow
         # rows — exactly the rows being written — truncated to a local
         # checkpoint both jobs read back.
-        upd = upd.localCheckpoint(eager=True)
+        from ..operators.util import tracked_checkpoint
+
+        upd, _ = tracked_checkpoint(upd)
         # MERGE-source broadcast gate: rows are narrow (_id string +
         # value ≈ 40 B), so 1M rows ≈ 40 MB — well inside executor
         # memory, and it converts BOTH downstream joins (oplog diff and
@@ -1998,6 +2000,8 @@ class Base:
         ``DeltaUnsupportedOperationException`` on duplicate matches."""
         import pandas as pd
 
+        from ..operators.util import tracked_checkpoint
+
         df = table.df
         spdf = None
         if isinstance(source, Table):
@@ -2028,9 +2032,8 @@ class Base:
             # are then enforced), checkpoint eagerly, and every later
             # pass reads the stored blocks instead of re-running the
             # source plan.
-            s_keyed = (
-                sdf.groupBy(*keys)
-                .agg(
+            s_keyed, _ = tracked_checkpoint(
+                sdf.groupBy(*keys).agg(
                     F.count(F.lit(1)).alias("__src_cnt"),
                     *[
                         F.first(c).alias(c)
@@ -2038,7 +2041,6 @@ class Base:
                         if c not in keys
                     ],
                 )
-                .localCheckpoint(eager=True)
             )
             if s_keyed.where(F.col("__src_cnt") > 1).limit(1).count():
                 raise ValueError("duplicate keys in upsert source")
@@ -2059,9 +2061,7 @@ class Base:
             # checkpoint the keyed join once: the matched-row count, the
             # per-column oplog scans, and the staged rewrite all read it —
             # uncheckpointed, each was a separate execution of the join
-            joined = df.join(s_sel, keys, "left").localCheckpoint(
-                eager=True
-            )
+            joined, _ = tracked_checkpoint(df.join(s_sel, keys, "left"))
             oplogs = []
             # counts matched rows — including matches whose new values
             # equal the old (the oplog records only real cell changes)

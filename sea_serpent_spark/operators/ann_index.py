@@ -454,16 +454,15 @@ def incremental_semantic_dedup(
 
     from .dedup import (
         BROADCAST_VERIFY_CAP,
-        _keep_cache,
         _maybe_broadcast,
-        _retire_scope_caches,
         connected_components,
     )
+    from .lifetime import _keep_cache, _retire_scope
 
     spark = new_df.sparkSession
     src, meta = _resolve(path)
     centroids = meta["centroids"]
-    _retire_scope_caches()
+    _retire_scope()
     delta = _keep_cache(
         ivf_assign(
             new_df.select(

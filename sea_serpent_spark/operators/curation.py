@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .lifetime import _pin
 from .text import round_half_up, words
 from .util import posture, tracked_checkpoint
 
@@ -317,11 +318,14 @@ def pack_shards(
         # Checkpoint by default: the baked offsets are only valid for
         # THIS materialization — a later recompute would re-sample the
         # range boundaries and shift pids. checkpoint=False hands back
-        # the lazy plan (inspection/tests); the persisted input is then
-        # deliberately left pinned to keep the offsets honest.
+        # the lazy plan (inspection/tests); the persisted input then
+        # stays pinned to keep the offsets honest, until the quiesce
+        # sweep frees it.
         if checkpoint:
             out, _ = tracked_checkpoint(out)
             pinned.unpersist()
+        else:
+            _pin(pinned)
         return out
     except Exception:
         pinned.unpersist()

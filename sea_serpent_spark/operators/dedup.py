@@ -26,15 +26,13 @@ portable hash arithmetic (workload_ext).
 from __future__ import annotations
 
 import math
-import threading
 import time
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 
 from .hashing import MINHASH_COEFFS, P, SIMHASH_BITS, h32, h48
+from .lifetime import _keep_cache, _retire_scope, _sweep
 from .text import fingerprint, words
 from .util import (ONE_SHOT_TAKE, SCALAR, fan_out, local_rows_df, posture,
                    rebind, release_all, spread as _spread,
@@ -63,87 +61,9 @@ def _maybe_broadcast(side: DataFrame, flag: bool) -> DataFrame:
     return F.broadcast(side) if flag else side
 
 
-#: Checkpoints (persisted DataFrames) created by the most recent pair
-#: operator call. A pair operator returns a *lazy* plan over its
-#: checkpoints, so they cannot be unpersisted before the caller
-#: materializes the result; instead each operator retires the previous
-#: call's checkpoints on entry, bounding live cache to one call's worth.
-#: Call :func:`release_caches` to drop them eagerly.
-#:
-#: r15 SCOPES: the retire-on-entry contract is per *cache scope*. By
-#: default every thread shares one scope (key ``None``), so sequential
-#: callers and streaming foreachBatch loops behave exactly as before —
-#: batch N retires batch N-1's frames. A member chain built under
-#: :func:`cache_scope` (an ``overlap_build`` worker) registers into its
-#: own private scope, so a concurrent operator's retire-on-entry (e.g.
-#: the semantic sink's per-batch ``incremental_semantic_dedup``) cannot
-#: drop the chain's still-lazy persisted frames mid-build — the q43
-#: ordering constraint this removes was worth +11 s when violated.
-#: Live cache stays bounded: one call's worth per scope, and scopes
-#: only exist while their chain is being built.
-_CACHE_SCOPES: dict = {}  # scope key (None: the shared default) → frames
-_SCOPE_LOCK = threading.Lock()
-_SCOPE_TLS = threading.local()
-
-
-@contextmanager
-def cache_scope():
-    """Private cache scope for the calling thread (r15): pair-operator
-    frames registered inside the block are invisible to other scopes'
-    retire-on-entry, and the block's own retires cannot drop other
-    scopes' frames. For ``overlap_build`` member chains whose lazy
-    results must survive a concurrent operator's entry.
-
-    The scope's frames are NOT unpersisted at exit — the chain's result
-    is still lazy, and concurrent default-scope operator entries (the
-    sink's per-batch retire) must keep not seeing them. The scope stays
-    registered until the next :func:`release_caches` sweep (the bench's
-    per-slot quiesce / slot teardown) unpersists it and drops the
-    entry."""
-    prev = getattr(_SCOPE_TLS, "scope", None)
-    _SCOPE_TLS.scope = object()
-    try:
-        yield
-    finally:
-        _SCOPE_TLS.scope = prev
-
-
-def _unpersist(frames: list) -> None:
-    for df in reversed(frames):  # newest first, as they were stacked
-        df.unpersist()
-
-
-def release_caches() -> None:
-    """Unpersist checkpoints from prior pair-operator calls — EVERY
-    scope (the public sweep: bench quiesce, tests, slot teardown);
-    finished private scopes are dropped from the registry here.
-    Results of those calls stay correct — they recompute from source
-    if re-used. The registry is swapped out under the lock and the
-    snapshot unpersisted outside it, so concurrent operator entries
-    and sink batches never share a list with the sweep."""
-    with _SCOPE_LOCK:
-        drained = list(_CACHE_SCOPES.values())
-        _CACHE_SCOPES.clear()
-    for frames in drained:
-        _unpersist(frames)
-
-
-def _retire_scope_caches() -> None:
-    """The pair-operator entry retire: drop the CURRENT scope's prior
-    frames only (the pre-r15 ``release_caches()`` at every operator
-    entry — now scope-local so concurrent chains can't drop each
-    other's)."""
-    with _SCOPE_LOCK:
-        frames = _CACHE_SCOPES.pop(getattr(_SCOPE_TLS, "scope", None), [])
-    _unpersist(frames)
-
-
-def _keep_cache(df: DataFrame) -> DataFrame:
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    key = getattr(_SCOPE_TLS, "scope", None)
-    with _SCOPE_LOCK:
-        _CACHE_SCOPES.setdefault(key, []).append(df)
-    return df
+#: The quiesce sweep under its pre-merge name (``util.release_checkpoints``
+#: is the same function): frees every persisted frame and checkpoint.
+release_caches = _sweep
 
 
 def _scalar_fill(df: DataFrame) -> tuple[DataFrame, int]:
@@ -610,7 +530,7 @@ def minhash_lsh_pairs(
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
     rows = num_hashes // bands
-    _retire_scope_caches()
+    _retire_scope()
     sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
 
     def _banded(src: DataFrame, keep: tuple = ()) -> DataFrame:
@@ -917,7 +837,7 @@ def ngram_jaccard_pairs(
     pair set is already its own spanning set."""
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
-    _retire_scope_caches()
+    _retire_scope()
     tok = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
@@ -1244,7 +1164,7 @@ def simhash_pairs(
     the dense path is both exact and strictly cheaper there."""
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
-    _retire_scope_caches()
+    _retire_scope()
     if sigs is None:
         sigs = simhash_signatures(df, text_col, id_col)
     # aggregation-only fill (signatures → groupBy sim)

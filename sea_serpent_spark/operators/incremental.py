@@ -55,7 +55,6 @@ from pyspark.sql import types as T
 from . import artifact
 from .dedup import (
     BROADCAST_VERIFY_CAP,
-    _keep_cache,
     _maybe_broadcast,
     _salted_pairs,
     _verify_gate,
@@ -64,9 +63,9 @@ from .dedup import (
     fingerprint,
     first_agreeing_band,
     minhash_signature,
-    _retire_scope_caches,
 )
 from .hashing import xxh64
+from .lifetime import _keep_cache, _retire_scope
 from .util import local_rows_df, rebind, spread, tracked_checkpoint
 
 
@@ -830,10 +829,10 @@ def incremental_minhash_pairs(
         new_sigs = _sigs
     else:
         # retire the previous call's persisted frames first (the
-        # dedup-module cache contract) — without this, a foreachBatch
+        # lifetime-scope contract) — without this, a foreachBatch
         # ingest loop pins one persisted band frame per micro-batch
         # forever
-        _retire_scope_caches()
+        _retire_scope()
         new_sigs = minhash_signature(
             new_df, text_col, id_col, num_hashes, shingle_n
         )
@@ -1454,7 +1453,7 @@ def incremental_dedup(
         if ingest_out is not None:
             ingest_out["sigs"] = None
     else:
-        _retire_scope_caches()
+        _retire_scope()
         new_sigs = _keep_cache(
             minhash_signature(new_df, text_col, id_col, num_hashes,
                               shingle_n)

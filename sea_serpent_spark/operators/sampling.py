@@ -314,11 +314,11 @@ def token_budget_mix(
         else:
             # the pin must outlive this call (resampling the range
             # boundaries on recompute would shift __pid and break the
-            # collected offsets), so hand it to the quiesce-sweep
-            # registry instead of leaking an unreleasable cache
-            from .util import track_pinned
+            # collected offsets), so hand it to the quiesce sweep
+            # instead of leaking an unreleasable cache
+            from .lifetime import _pin
 
-            track_pinned(pinned)
+            _pin(pinned)
     except Exception:
         pinned.unpersist()
         raise

@@ -8,12 +8,18 @@ and these become no-ops / cheap narrow shuffles.
 
 from __future__ import annotations
 
-import logging
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 
-_log = logging.getLogger(__name__)
+from .lifetime import (  # noqa: F401  (re-exported for the call sites)
+    _chain_scopes,
+    _sweep,
+    release_all,
+    tracked_checkpoint,
+)
+
+#: The quiesce sweep under its pre-merge name: frees every persisted
+#: frame and checkpoint in every lifetime scope.
+release_checkpoints = _sweep
 
 
 #: Session conf key overriding the operators' fan-out width. Default
@@ -60,222 +66,6 @@ def spread(df: DataFrame) -> DataFrame:
     tasks. An explicit repartition (which AQE honors) moves only narrow
     id-pairs and parallelizes the verify."""
     return df.repartition(_fanout_target(df))
-
-
-# ---------------------------------------------------------------------------
-# local-checkpoint lifecycle
-# ---------------------------------------------------------------------------
-#
-# ``DataFrame.localCheckpoint`` persists an RDD whose blocks are freed
-# only when the JVM garbage-collects the last reference and the
-# ContextCleaner notices — across a long session of iterative operators
-# (connected components checkpoints EVERY round) the blocks pile up in
-# the block manager, evicting execution memory and filling local disk.
-# That accumulation is invisible on a fast machine and a 7x warm-run
-# slowdown on a contended one (round-4 driver bench, q61). These helpers
-# make the lifetime explicit: every checkpoint records its persisted RDD
-# id at creation, and releases are deterministic unpersist calls instead
-# of GC luck.
-#
-# CONTRACT: unlike a cache unpersist, a released local checkpoint CANNOT
-# recompute — its lineage was truncated, and any frame still referencing
-# it fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. ``release()`` a handle
-# only once everything downstream of it is materialized;
-# ``release_checkpoints()`` only at a quiesce point (between bench
-# queries, after a pipeline's outputs are written).
-
-_TRACKED: list["LocalCheckpoint | PinnedFrame"] = []
-# Guards the registry only. RDD-id attribution needs no lock: the id is
-# read off the returned DataFrame's own LogicalRDD plan node, so a
-# concurrent driver thread's persist can never be mis-attributed (the
-# failure mode of the previous getPersistentRDDs set-diff, where a
-# wrong id meant a later release() unpersisted a LIVE checkpoint —
-# unrecoverable CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND downstream).
-_LOCK = threading.Lock()
-
-# release() must swallow ONLY "the JVM is gone" errors — anything else
-# (a bug in our id bookkeeping, a wrong handle) should surface, not
-# silently leak blocks.
-try:
-    from py4j.protocol import Py4JError as _Py4JError
-except ImportError:  # pragma: no cover - py4j ships with pyspark
-    _Py4JError = ()
-_DEAD_JVM_ERRORS = (_Py4JError, ConnectionError, EOFError, OSError)
-
-
-class LocalCheckpoint:
-    """Handle to the persistent RDD(s) behind one ``localCheckpoint``."""
-
-    __slots__ = ("_jsc", "rdd_ids", "released")
-
-    def __init__(self, jsc, rdd_ids: list[int]):
-        self._jsc = jsc
-        self.rdd_ids = rdd_ids
-        self.released = False
-
-    def release(self) -> None:
-        """Unpersist the checkpoint blocks NOW (idempotent). The
-        checkpointed frame and anything lazily built on it become
-        unusable — call only after downstream consumption."""
-        if self.released:
-            return
-        self.released = True
-        _untrack(self)
-        try:
-            live = self._jsc.getPersistentRDDs()
-            for i in self.rdd_ids:
-                r = live.get(i)
-                if r is not None:
-                    r.unpersist(False)
-        except _DEAD_JVM_ERRORS:
-            pass  # a dead/restarted JVM has nothing left to free
-
-
-class PinnedFrame:
-    """Handle to a ``persist()``-pinned DataFrame an operator must keep
-    alive for result determinism (e.g. ``token_budget_mix``'s range-
-    partitioned input, whose sampled boundaries must not be resampled
-    between the offset collect and the output scan). Unlike a released
-    checkpoint the frame CAN recompute after release — but possibly
-    with different partition boundaries, so the same quiesce-point
-    contract applies."""
-
-    __slots__ = ("_df", "released")
-
-    def __init__(self, df: DataFrame):
-        self._df = df
-        self.released = False
-
-    def release(self) -> None:
-        if self.released:
-            return
-        self.released = True
-        _untrack(self)
-        try:
-            self._df.unpersist(False)
-        except _DEAD_JVM_ERRORS:
-            pass
-
-
-def _untrack(handle) -> None:
-    with _LOCK:
-        try:
-            _TRACKED.remove(handle)
-        except ValueError:
-            pass  # not tracked, or already swept by release_checkpoints
-
-
-def track_pinned(df: DataFrame) -> PinnedFrame:
-    """Register an operator-pinned (persisted) frame for the quiesce
-    sweep and return its release handle."""
-    handle = PinnedFrame(df)
-    with _LOCK:
-        _TRACKED.append(handle)
-    return handle
-
-
-def tracked_checkpoint(
-    df: DataFrame, storage_level=None, track: bool = True,
-    scalar_plan: bool = False,
-) -> tuple[DataFrame, LocalCheckpoint]:
-    """``df.localCheckpoint(eager=True)`` + a release handle.
-
-    The persisted RDD id is read directly off the returned frame's
-    ``LogicalRDD`` plan node — exact attribution with zero extra JVM
-    round-trips, safe under concurrent driver threads (no global-state
-    diffing). With ``track=True`` the handle also lands in the module
-    registry so :func:`release_checkpoints` can sweep it at the next
-    quiesce point.
-
-    ``scalar_plan=True`` (r14) runs the eager fill in the ``SCALAR``
-    :func:`posture` — for call sites whose plan is aggregation-only (the
-    single shuffle carries partial-agg'd narrow rows), where AQE's
-    per-exchange stage job is pure scheduler latency. Leave False for
-    plans carrying joins or explicit wide repartitions AQE should
-    re-plan. The returned frame is bound to ``df``'s own session."""
-    sc = df.sparkSession.sparkContext
-    src = posture(df) if scalar_plan else df
-    out = rebind(
-        src.localCheckpoint(eager=True)
-        if storage_level is None
-        else src.localCheckpoint(eager=True, storageLevel=storage_level),
-        df.sparkSession,
-    )
-    try:
-        # Dataset.localCheckpoint returns a LogicalRDD wrapping the
-        # persisted internal RDD; its id is the unpersist target
-        ids = [int(out._jdf.queryExecution().analyzed().rdd().id())]
-    except _DEAD_JVM_ERRORS + (AttributeError,):
-        # Unknown plan shape / connect mode: the handle becomes a no-op,
-        # which means blocks are freed only by JVM GC again — the exact
-        # accumulation failure this lifecycle exists to prevent. Say so
-        # loudly instead of silently degrading (an iterative operator
-        # checkpointing every round would re-create the round-4
-        # warm-run regression with zero signal).
-        ids = []
-        _log.warning(
-            "tracked_checkpoint could not resolve the persisted RDD id "
-            "from the plan (unexpected plan shape or connect mode); "
-            "release() for this handle will be a no-op and checkpoint "
-            "blocks will only be freed by JVM GC"
-        )
-    handle = LocalCheckpoint(sc._jsc, ids)
-    if track:
-        with _LOCK:
-            _TRACKED.append(handle)
-    return out, handle
-
-
-def release_all(handles) -> None:
-    """Release a batch of handles with at most ONE ``getPersistentRDDs``
-    JVM round-trip (vs one per ``release()`` call) — for iterative
-    operators that supersede a checkpoint every round and would
-    otherwise pay a driver round-trip inside the convergence loop."""
-    cps = []
-    for h in handles:
-        if isinstance(h, LocalCheckpoint) and not h.released:
-            cps.append(h)
-        else:
-            h.release()
-    if not cps:
-        return
-    try:
-        live = cps[0]._jsc.getPersistentRDDs()
-    except _DEAD_JVM_ERRORS:
-        live = None  # dead/restarted JVM has nothing left to free
-    # Mark a handle released only AFTER its blocks are freed: a
-    # non-dead-JVM error from unpersist (bookkeeping bug, wrong handle)
-    # must leave the not-yet-freed handles retryable — released=True
-    # would make both retry and the registry sweep no-ops and leak the
-    # blocks. unpersist is idempotent, so re-releasing the handle that
-    # raised mid-batch is safe.
-    for h in cps:
-        if live is not None:
-            try:
-                for i in h.rdd_ids:
-                    r = live.get(i)
-                    if r is not None:
-                        r.unpersist(False)
-            except _DEAD_JVM_ERRORS:
-                live = None
-        h.released = True
-        _untrack(h)
-
-
-def release_checkpoints() -> None:
-    """Free every tracked checkpoint's / pinned frame's blocks.
-
-    QUIESCE-POINT ONLY — this is bench/driver plumbing, not a pipeline
-    call: released checkpoints cannot recompute, and released pins may
-    recompute differently, so every frame produced by earlier operator
-    calls must already be materialized (written / collected). Calling
-    it mid-pipeline silently corrupts any lazily-held operator output."""
-    while True:
-        with _LOCK:
-            if not _TRACKED:
-                return
-            handle = _TRACKED.pop()
-        handle.release()
 
 
 #: r14 plan-construction cache for data-independent Column trees (the
@@ -408,11 +198,17 @@ def overlap_build(*thunks, workers: int = 3) -> list:
     plan is identical. Exceptions re-raise at collection, preserving
     the sequential error surface. A chain's :func:`posture` actions
     plan on their own session clones, so sibling chains keep the
-    session's steady-state conf."""
+    session's steady-state conf. Each chain also keeps its persisted
+    frames in its own lifetime scope, so a sibling's operator-entry
+    retire cannot drop them mid-build; once every chain is done, the
+    caller's scope takes them over and retires them at its next
+    boundary."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        futs = [pool.submit(t) for t in thunks]
+    with _chain_scopes() as chain, ThreadPoolExecutor(
+        max_workers=workers
+    ) as pool:
+        futs = [pool.submit(chain(t)) for t in thunks]
         return [f.result() for f in futs]
 
 

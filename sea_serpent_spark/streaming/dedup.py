@@ -331,20 +331,23 @@ def incremental_dedup_sink(
             # materialize survivors BEFORE touching the index so the
             # band append below cannot observe its own output
             kept.persist()
-            kept.write.mode("append").parquet(output_path)
-            band_rows = minhash_band_index(
-                kept, text_col, id_col, num_hashes, bands, shingle_n,
-                key_buckets=nb,
-            )
-            if nb:
-                write_band_index(
-                    band_rows, index_path, mode="append", key_buckets=nb
+            try:
+                kept.write.mode("append").parquet(output_path)
+                band_rows = minhash_band_index(
+                    kept, text_col, id_col, num_hashes, bands, shingle_n,
+                    key_buckets=nb,
                 )
-            else:  # legacy flat layout — keep appends compatible
-                band_rows.write.mode("append").partitionBy(
-                    "band"
-                ).parquet(index_path)
-            kept.unpersist()
+                if nb:
+                    write_band_index(
+                        band_rows, index_path, mode="append",
+                        key_buckets=nb,
+                    )
+                else:  # legacy flat layout — keep appends compatible
+                    band_rows.write.mode("append").partitionBy(
+                        "band"
+                    ).parquet(index_path)
+            finally:
+                kept.unpersist()
         batches_seen["n"] += 1
         due = (
             compact_every
@@ -437,12 +440,14 @@ def incremental_semantic_dedup_sink(
             )
         else:
             kept.persist()
-            kept.write.mode("append").parquet(output_path)
-            append_to_ivf_index(
-                kept.select(id_col, vec_col), index_path,
-                id_col=id_col, vec_col=vec_col,
-            )
-            kept.unpersist()
+            try:
+                kept.write.mode("append").parquet(output_path)
+                append_to_ivf_index(
+                    kept.select(id_col, vec_col), index_path,
+                    id_col=id_col, vec_col=vec_col,
+                )
+            finally:
+                kept.unpersist()
         batches_seen["n"] += 1
         if compact_every and batches_seen["n"] % compact_every == 0:
             compact_ivf_index(spark, index_path)

@@ -963,7 +963,6 @@ def q43_embedding_near_dup(spark, sf_dir):
         incremental_semantic_dedup as _isd,
         read_ivf_index as _rivf,
     )
-    from .operators.dedup import cache_scope
     from .operators.util import overlap_build
     from .streaming.dedup import incremental_semantic_dedup_sink
 
@@ -974,14 +973,14 @@ def q43_embedding_near_dup(spark, sf_dir):
     # Two independent chains, overlapped (r15 — the q41 treatment).
     # The INGEST chain keeps its documented internal ordering: the
     # seed build, then inc (incremental_semantic_dedup retires the
-    # default cache scope on entry), then the drain whose per-batch
-    # _isd calls retire again — all entry-ordered within this one
-    # chain. The BATCH-member chain (pair/sem) builds under its own
-    # cache_scope, so its still-lazy persisted frames (the spanning
-    # path's group cache) are invisible to the ingest chain's
-    # retire-on-entry — the +11 s recompute the old sequential
-    # ordering constraint existed to avoid now cannot happen by
-    # construction, and the two chains only share read-only inputs.
+    # chain's lifetime scope on entry), then the drain whose per-batch
+    # _isd calls retire the streaming batches' shared default scope.
+    # overlap_build gives each chain its own scope, so the BATCH-member
+    # chain's still-lazy persisted frames (the spanning path's group
+    # cache) are invisible to the ingest chain's retires — the +11 s
+    # recompute the old sequential ordering constraint existed to
+    # avoid cannot happen by construction, and the two chains only
+    # share read-only inputs.
     def _chain_ingest():
         semi = _os.path.join(
             _tf.gettempdir(), "sea_serpent_scratch", f"seminc{sf_tag}"
@@ -1066,22 +1065,21 @@ def q43_embedding_near_dup(spark, sf_dir):
         return inc, out_sink, out_idx
 
     def _chain_batch():
-        with cache_scope():
-            pairs = S.embedding_near_dup_pairs(
-                e, threshold=0.45, nbits=0
-            ).withColumn("op", F.lit("pair"))
-            sem = S.semantic_dedup(
-                ed,
-                threshold=0.45,
-                centroids=SEMDEDUP_CENTROIDS,
-                keep="far_from_centroid",
-                nbits=0,
-            ).select(
-                F.col("vec_id").alias("id_a"),
-                F.lit(None).cast("long").alias("id_b"),
-                F.lit(None).cast("double").alias("cos"),
-                F.lit("semdedup").alias("op"),
-            )
+        pairs = S.embedding_near_dup_pairs(
+            e, threshold=0.45, nbits=0
+        ).withColumn("op", F.lit("pair"))
+        sem = S.semantic_dedup(
+            ed,
+            threshold=0.45,
+            centroids=SEMDEDUP_CENTROIDS,
+            keep="far_from_centroid",
+            nbits=0,
+        ).select(
+            F.col("vec_id").alias("id_a"),
+            F.lit(None).cast("long").alias("id_b"),
+            F.lit(None).cast("double").alias("cos"),
+            F.lit("semdedup").alias("op"),
+        )
         return pairs, sem
 
     (inc, out_sink, out_idx), (pairs, sem) = overlap_build(

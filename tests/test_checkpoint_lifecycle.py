@@ -1,4 +1,5 @@
-"""Checkpoint-lifecycle registry invariants (operators/util.py).
+"""Lifetime-registry invariants (operators/lifetime.py) for checkpoints
+and pinned frames.
 
 A long-running pipeline calls tracked_checkpoint thousands of times;
 the registry must not grow without bound when callers release handles
@@ -7,12 +8,16 @@ themselves, and a release must actually free the block-manager blocks.
 
 import pyspark.sql.functions as F
 
-from sea_serpent_spark.operators import util
+from sea_serpent_spark.operators import lifetime
 from sea_serpent_spark.operators.util import (
     release_checkpoints,
-    track_pinned,
     tracked_checkpoint,
 )
+
+
+def _entries() -> list:
+    with lifetime._LOCK:
+        return [h for held in lifetime._SCOPES.values() for h in held]
 
 
 def _live_ids(spark):
@@ -22,48 +27,43 @@ def _live_ids(spark):
 
 def test_release_untracks_and_frees_blocks(spark):
     df = spark.range(1000).withColumn("x", F.col("id") * 2)
-    n0 = len(util._TRACKED)
+    n0 = len(_entries())
     out, handle = tracked_checkpoint(df)
     out.count()
-    assert handle in util._TRACKED
+    assert handle in _entries() and not handle.recomputable
     assert handle.rdd_ids and set(handle.rdd_ids) <= _live_ids(spark)
     handle.release()
     # explicitly-released handles leave the registry — no slow leak of
     # _jsc-holding handles in library (non-bench) sessions
-    assert handle not in util._TRACKED
-    assert len(util._TRACKED) == n0
+    assert handle not in _entries()
+    assert len(_entries()) == n0
     assert not (set(handle.rdd_ids) & _live_ids(spark))
     handle.release()  # idempotent
-    assert len(util._TRACKED) == n0
+    assert len(_entries()) == n0
 
 
 def test_release_checkpoints_drains_registry(spark):
-    n0 = len(util._TRACKED)
-    frames = []
+    n0 = len(_entries())
     for i in range(3):
         out, _ = tracked_checkpoint(spark.range(100 + i))
-        frames.append(out.count())
-    assert len(util._TRACKED) == n0 + 3
+        out.count()
+    assert len(_entries()) == n0 + 3
     release_checkpoints()
-    assert len(util._TRACKED) == 0
+    assert _entries() == []
     release_checkpoints()  # idempotent on empty
 
 
-def test_track_pinned_release(spark):
+def test_pinned_frame_release(spark):
     df = spark.range(500).persist()
     df.count()
-    n0 = len(util._TRACKED)
-    handle = track_pinned(df)
-    assert len(util._TRACKED) == n0 + 1
+    n0 = len(_entries())
+    handle = lifetime._pin(df)
+    assert len(_entries()) == n0 + 1
+    # a pin is not recomputable: the scope's operator-entry retire
+    # leaves it persisted
+    lifetime._retire_scope()
+    assert df.storageLevel.useMemory and handle in _entries()
     handle.release()
-    assert handle not in util._TRACKED
-    assert not df.is_cached
+    assert handle not in _entries()
+    assert not df.storageLevel.useMemory
     handle.release()  # idempotent
-
-
-def test_untracked_checkpoint_skips_registry(spark):
-    n0 = len(util._TRACKED)
-    out, handle = tracked_checkpoint(spark.range(10), track=False)
-    out.count()
-    assert len(util._TRACKED) == n0
-    handle.release()

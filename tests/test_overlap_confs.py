@@ -1,25 +1,35 @@
-"""Plan-posture isolation and the thread-scoped pair-operator cache
-registries.
+"""Plan-posture isolation and the thread-scoped lifetime registry
+under ``overlap_build``.
 
 ``util.posture`` runs one action on its own session clone. These tests
 pin what that buys over flipping the shared session's conf: a sibling
 thread compiling on the parent keeps its adaptive plan, a posture action
 inside an ``overlap_build`` chain still gets its posture, and the
 parent's conf never changes, not even when the action raises.
+
+``overlap_build`` also runs each chain in its own lifetime scope: a
+sibling chain's operator-entry retire cannot drop a chain's frames, and
+the chains' frames move to the caller's scope, which retires them at
+its next boundary, so repeated overlapped builds do not pile up cache.
 """
 
 import sys
 import threading
-from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
 
+from sea_serpent_spark.operators.lifetime import (
+    _chain_scopes,
+    _keep_cache,
+    _retire_scope,
+)
 from sea_serpent_spark.operators.util import (
     SCALAR,
     micro,
     overlap_build,
     posture,
+    release_checkpoints,
 )
 
 
@@ -92,56 +102,102 @@ def test_parent_conf_untouched_by_posture_action(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_cache_scope_isolation(spark):
-    """Frames kept inside a cache_scope survive another thread's
-    operator-entry retire; the global release_caches sweep still drops
-    every scope."""
-    from sea_serpent_spark.operators.dedup import (
-        _keep_cache,
-        _retire_scope_caches,
-        cache_scope,
-        release_caches,
-    )
-
-    release_caches()  # clean slate
+def test_scope_isolation(spark):
+    """A frame kept inside a chain scope survives another thread's
+    default-scope retire while the chain's scopes are open; at exit it
+    moves to the caller's scope unreleased, and the sweep drops it."""
+    release_checkpoints()  # clean slate
     scoped: dict = {}
 
     def _chain():
-        with cache_scope():
-            dfx = _keep_cache(spark.range(100).withColumn("v", F.lit(1)))
-            dfx.count()
-            scoped["df"] = dfx
+        dfx = _keep_cache(spark.range(100).withColumn("v", F.lit(1)))
+        dfx.count()
+        scoped["df"] = dfx
 
-    t = threading.Thread(target=_chain)
-    t.start()
-    t.join(timeout=60)
-    assert "df" in scoped
-    assert scoped["df"].storageLevel.useMemory
-    # a DEFAULT-scope operator entry (what a concurrent sink batch
-    # does) must not see the scoped frame
-    _retire_scope_caches()
-    assert scoped["df"].storageLevel.useMemory
-    # the quiesce sweep drops every scope, including finished ones
-    release_caches()
+    with _chain_scopes() as chain:
+        t = threading.Thread(target=chain(_chain))
+        t.start()
+        t.join(timeout=60)
+        assert "df" in scoped
+        assert scoped["df"].storageLevel.useMemory
+        # a DEFAULT-scope operator entry (what a concurrent sink batch
+        # does) must not see the chain's frame
+        _retire_scope()
+        assert scoped["df"].storageLevel.useMemory
+    assert scoped["df"].storageLevel.useMemory  # handed over, not freed
+    release_checkpoints()
     assert not scoped["df"].storageLevel.useMemory
 
 
 def test_default_scope_retire_still_works(spark):
-    from sea_serpent_spark.operators.dedup import (
-        _keep_cache,
-        _retire_scope_caches,
-        release_caches,
-    )
-
-    release_caches()
+    release_checkpoints()
     dfx = _keep_cache(spark.range(10))
     assert dfx.storageLevel.useMemory
-    _retire_scope_caches()
+    _retire_scope()
     assert not dfx.storageLevel.useMemory
 
 
+def test_overlap_chains_isolated_from_sibling_retire(spark):
+    """Chain A's operator-entry retire, run between two of chain B's
+    keeps, leaves chain B's frames persisted; after ``overlap_build``
+    the caller's next boundary retires them."""
+    release_checkpoints()
+    b_kept = threading.Event()
+    a_retired = threading.Event()
+
+    def _chain_a():
+        assert b_kept.wait(timeout=60)
+        _retire_scope()
+        a_retired.set()
+
+    def _chain_b():
+        first = _keep_cache(spark.range(50))
+        first.count()
+        b_kept.set()
+        assert a_retired.wait(timeout=60)
+        second = _keep_cache(spark.range(60))
+        second.count()
+        return first, second
+
+    _, frames = overlap_build(_chain_a, _chain_b, workers=2)
+    assert all(f.storageLevel.useMemory for f in frames)
+    _retire_scope()
+    assert not any(f.storageLevel.useMemory for f in frames)
+
+
+def test_overlap_residency_stays_flat(spark):
+    """Six q43-style iterations with no global sweep: each is an
+    ``overlap_build`` of two chains that keep frames, then one
+    default-scope retire. Persisted-RDD residency does not grow from
+    iteration to iteration."""
+    release_checkpoints()
+    jsc = spark.sparkContext._jsc
+
+    def _chain(n, i):
+        # a fresh plan per iteration, as q43's frames sit on fresh
+        # checkpoints: an identical plan would reuse the cached entry
+        def build():
+            a = _keep_cache(spark.range(n).withColumn("v", F.lit(i)))
+            a.count()
+            b = _keep_cache(a.where(F.col("id") % 2 == 0))
+            b.count()
+            return b
+
+        return build
+
+    built, after = [], []
+    for i in range(6):
+        x, y = overlap_build(_chain(100, i), _chain(200, i), workers=2)
+        assert x.unionByName(y).count() == 150
+        built.append(jsc.getPersistentRDDs().size())
+        _retire_scope()
+        after.append(jsc.getPersistentRDDs().size())
+    assert built[5] == built[1] and after[5] == after[1], (built, after)
+    assert built[1] >= after[1] + 4  # the chains' frames were resident
+
+
 class _Frame:
-    """Stand-in for a DataFrame: the cache registry only persists and
+    """Stand-in for a DataFrame: the lifetime registry only persists and
     unpersists what it holds. Pure Python, so threads interleave at
     bytecode granularity instead of queueing on JVM round trips."""
 
@@ -157,37 +213,36 @@ class _Frame:
 
 
 def test_cache_registry_release_race():
-    """``release_caches`` sweeping while other threads keep and retire
-    frames: no thread pops a list another thread just emptied
-    (IndexError), no frame lands in a list the sweep already dropped,
-    and the final sweep leaves nothing persisted."""
-    from sea_serpent_spark.operators.dedup import (
-        _keep_cache,
-        _retire_scope_caches,
-        cache_scope,
-        release_caches,
-    )
-
-    release_caches()
+    """The sweep running while other threads keep, retire and hand
+    chain scopes over: no thread pops a list another thread just
+    emptied (IndexError), no frame lands in a list the sweep already
+    dropped, and the final sweep leaves nothing persisted."""
+    release_checkpoints()
     frames: list = []
     errors: list = []
     stop = threading.Event()
 
+    def _round():
+        frames.append(_keep_cache(_Frame()))
+        frames.append(_keep_cache(_Frame()))
+        _retire_scope()
+        frames.append(_keep_cache(_Frame()))
+
     def _worker(scoped: bool):
         try:
             for _ in range(2000):
-                with cache_scope() if scoped else nullcontext():
-                    frames.append(_keep_cache(_Frame()))
-                    frames.append(_keep_cache(_Frame()))
-                    _retire_scope_caches()
-                    frames.append(_keep_cache(_Frame()))
+                if scoped:
+                    with _chain_scopes() as chain:
+                        chain(_round)()
+                else:
+                    _round()
         except Exception as e:  # noqa: BLE001 - surfaced below
             errors.append(e)
 
     def _sweeper():
         while not stop.is_set():
             try:
-                release_caches()
+                release_checkpoints()
             except Exception as e:  # noqa: BLE001 - surfaced below
                 errors.append(e)
 
@@ -209,7 +264,7 @@ def test_cache_registry_release_race():
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in sweepers + workers)
-    release_caches()
+    release_checkpoints()
     assert not errors, errors[:3]
     assert len(frames) == 4 * 2000 * 3
     assert not [f for f in frames if f.persisted]

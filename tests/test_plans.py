@@ -378,21 +378,33 @@ def test_token_budget_mix_window_is_partition_local(spark, sf_dir):
     source (a source-keyed running sum funnels a dominant source — 80%
     of a 100 TB corpus — through a single thread; the pack_shards
     range-partition + broadcast-offset pattern is the scale shape)."""
-    from sea_serpent_spark.operators import util
+    from sea_serpent_spark.operators import lifetime
+    from sea_serpent_spark.operators.curation import pack_shards
     from sea_serpent_spark.operators.sampling import token_budget_mix
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", F.length("text").alias("n")
     )
-    n_tracked = len(util._TRACKED)
-    out = token_budget_mix(
+
+    def _entries():
+        with lifetime._LOCK:
+            return [h for hs in lifetime._SCOPES.values() for h in hs]
+
+    def _pinned(call):
+        # a checkpoint=False pin is registered for the quiesce sweep as
+        # a frame that retires skip, not leaked as an unreleasable cache
+        before = {id(h) for h in _entries()}
+        res = call()
+        new = [h for h in _entries() if id(h) not in before]
+        assert len(new) == 1, new
+        assert new[0].df is not None and not new[0].recomputable
+        return res, new[0]
+
+    out, pin = _pinned(lambda: token_budget_mix(
         d, "source", "n", {"src0": 100}, "doc_id", checkpoint=False
-    )
-    # the checkpoint=False pin is registered for the quiesce sweep, not
-    # leaked as an unreleasable cache
-    new_handles = util._TRACKED[n_tracked:]
-    assert len(new_handles) == 1 and isinstance(
-        new_handles[0], util.PinnedFrame
+    ))
+    _, shard_pin = _pinned(
+        lambda: pack_shards(d, "n", 1000, "doc_id", checkpoint=False)
     )
     plan = _plan(out)
     assert "SinglePartition" not in plan
@@ -402,9 +414,10 @@ def test_token_budget_mix_window_is_partition_local(spark, sf_dir):
     assert "windowspecdefinition(source" not in plan
     # the offsets ride a broadcast join, not a shuffle
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    # don't leak the pin into the shared test session
-    new_handles[0].release()
-    assert new_handles[0] not in util._TRACKED
+    # don't leak the pins into the shared test session
+    for h in (pin, shard_pin):
+        h.release()
+        assert h not in _entries() and not h.df.storageLevel.useMemory
 
 
 def test_edit_distance_join_no_cartesian(spark, sf_dir):

@@ -568,3 +568,55 @@ def test_sink_batch_fan_out_sees_batch_parallelism(
     assert targets and set(targets) == {3}, targets
     assert spark.conf.get(util.FANOUT_CONF, None) is None
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+@pytest.mark.parametrize("semantic", [False, True])
+def test_sink_releases_batch_frame_when_append_fails(
+    spark, sf_dir, tmp_path, monkeypatch, semantic
+):
+    """The sinks' distributed append path persists the batch's survivor
+    frame; a failed parquet append must still unpersist it, not leave it
+    cached and untracked."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from sea_serpent_spark.operators import ann_index as A
+    from sea_serpent_spark.operators import incremental as I
+    from sea_serpent_spark.streaming.dedup import (
+        incremental_dedup_sink,
+        incremental_semantic_dedup_sink,
+    )
+
+    # the dedup operator passes the batch through without a driver-path
+    # result, so the sink takes its persist-then-append branch
+    def _passthrough(batch_df, *args, **kwargs):
+        return batch_df
+
+    appended: list = []
+
+    def _failing_append(self, *args, **kwargs):
+        appended.append(self._df)
+        raise RuntimeError("append-boom")
+
+    if semantic:
+        monkeypatch.setattr(A, "incremental_semantic_dedup", _passthrough)
+        sink = incremental_semantic_dedup_sink(
+            str(tmp_path / "semidx"), str(tmp_path / "out")
+        )
+        batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    else:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        idxp = str(tmp_path / "idx")
+        I.write_band_index(
+            I.minhash_band_index(
+                docs.where(F.col("doc_id") < 60), key_buckets=4
+            ),
+            idxp, key_buckets=4,
+        )
+        monkeypatch.setattr(I, "incremental_dedup", _passthrough)
+        sink = incremental_dedup_sink(idxp, str(tmp_path / "out"))
+        batch = docs.where(F.col("doc_id").between(60, 119))
+    monkeypatch.setattr(DataFrameWriter, "parquet", _failing_append)
+    with pytest.raises(RuntimeError, match="append-boom"):
+        sink(batch, 0)
+    assert len(appended) == 1
+    assert not appended[0].storageLevel.useMemory

@@ -1,6 +1,7 @@
 """``operators.util`` contracts: ``local_rows_df`` accepts the same rows
-and returns the same frame on both sides of its cell cap, and no module
-flips a session-global conf outside the places that own one."""
+and returns the same frame on both sides of its cell cap, no module
+flips a session-global conf outside the places that own one, and no
+module cuts a lineage outside the lifetime registry."""
 
 import ast
 import datetime
@@ -65,6 +66,27 @@ def test_no_session_global_conf_flips():
         stray
     )
     assert found == _CONF_WRITERS  # the scan still sees the allowed ones
+
+
+def test_local_checkpoints_go_through_lifetime():
+    """Every lineage cut is a ``tracked_checkpoint``: a bare
+    ``.localCheckpoint(`` call leaves blocks no release or sweep can
+    reach, freed only by JVM GC."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "operators/lifetime.py":
+            continue
+        stray += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "localCheckpoint"
+        ]
+    assert not stray, "localCheckpoint outside operators/lifetime.py: " + (
+        ", ".join(stray)
+    )
 
 
 _SCHEMA = "k long, v double, d date, xs array<double>"

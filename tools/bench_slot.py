@@ -59,18 +59,9 @@ def main() -> None:
     ).save()
 
     def quiesce():
-        try:
-            from sea_serpent_spark.operators.dedup import release_caches
+        from sea_serpent_spark.operators.util import release_checkpoints
 
-            release_caches()
-        except Exception:
-            pass
-        try:
-            from sea_serpent_spark.operators.util import release_checkpoints
-
-            release_checkpoints()
-        except Exception:
-            pass
+        release_checkpoints()  # every persisted frame and checkpoint
         try:
             spark.sparkContext._jvm.System.gc()
         except Exception:

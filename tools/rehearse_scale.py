@@ -102,6 +102,7 @@ def main() -> None:
     print(f"# corpus rows: {corpus.count()}", file=sys.stderr)
 
     from sea_serpent_spark.operators import dedup as D
+    from sea_serpent_spark.operators.util import release_checkpoints
 
     def tracker():
         ui = spark.sparkContext.uiWebUrl
@@ -137,7 +138,7 @@ def main() -> None:
     for name, fn in ops.items():
         if chosen and name not in chosen:
             continue
-        D.release_caches()
+        release_checkpoints()
         first = tracker()
         t0 = time.perf_counter()
         rows = fn().count()
