@@ -7,7 +7,11 @@ Each query is fully executed with a ``noop``-format write: every result
 row is produced by the engine (no column pruning, unlike ``count()``)
 but nothing is serialized to the Python driver — so times measure the
 distributed plan, not single-threaded Py4J row deserialization. Times
-are end-to-end per query, excluding Spark session startup."""
+are end-to-end per query, excluding Spark session startup.
+
+Per-slot Janino compiles (count and milliseconds, cold and warm runs)
+go to a JSON sidecar, ``$SPARK_GRAFT_BENCH_SIDECAR`` (default
+``bench_sidecar.json`` in the working directory); stdout is unchanged."""
 
 from __future__ import annotations
 
@@ -98,17 +102,39 @@ def main() -> None:
         except Exception:
             pass
 
+    def _compiled() -> tuple[int, float]:
+        """(classes compiled, Janino ms) so far in this JVM: cache hits
+        compile nothing. JVM counters, readable with the UI off."""
+        org = spark.sparkContext._jvm.org
+        return (
+            org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount(),
+            org.apache.spark.sql.catalyst.expressions.codegen
+            .CodeGenerator.compileTime() / 1e6,
+        )
+
+    compiles: dict[str, dict] = {}
+
+    def _record(name: str, run: str, start: tuple[int, float]) -> None:
+        end = _compiled()
+        compiles.setdefault(name, {})[run] = {
+            "compiles": end[0] - start[0],
+            "compile_ms": round(end[1] - start[1], 1),
+        }
+
     times: dict[str, float] = {}
     warm_times: dict[str, float] = {}
     best_times: dict[str, float] = {}
     total = 0.0
     for name, fn in qs.items():
         _quiesce()
+        c0 = _compiled()
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            _record(name, "cold", c0)
             best_times[name] = dt
             for _ in range(repeat - 1):
                 # extra cold passes (repeat knob): per-slot min is the
@@ -131,8 +157,9 @@ def main() -> None:
                         file=sys.stderr,
                     )
             if dt > 2.0:
-                # slow queries also get a WARM run (JIT/codegen paid,
-                # plan cached) — reported separately so cold stays the
+                # slow queries also get a WARM run (codegen classes
+                # cached, JIT paid; the sidecar's warm compile count
+                # shows it) — reported separately so cold stays the
                 # headline: the round-2 best-of-two silently redefined
                 # the metric and flattered round-over-round
                 # comparisons. Same failure isolation as the repeat
@@ -140,6 +167,7 @@ def main() -> None:
                 try:
                     _quiesce()  # warm measures the plan, not the cold
                     # run's leftover checkpoint blocks / GC debt
+                    c0 = _compiled()
                     t0 = time.perf_counter()
                     fn(spark, sf_dir).write.format("noop").mode(
                         "overwrite"
@@ -147,6 +175,7 @@ def main() -> None:
                     warm_times[name] = round(
                         time.perf_counter() - t0, 3
                     )
+                    _record(name, "warm", c0)
                     best_times[name] = min(
                         best_times[name], warm_times[name]
                     )
@@ -216,6 +245,13 @@ def main() -> None:
         if d_total <= 0:
             return None
         return round(100.0 * d_steal / d_total, 2)
+
+    sidecar = os.environ.get(
+        "SPARK_GRAFT_BENCH_SIDECAR", "bench_sidecar.json"
+    )
+    with open(sidecar, "w") as f:
+        json.dump({"sf": sf, "compiles": compiles}, f, indent=1)
+    print(f"# sidecar {os.path.abspath(sidecar)}", file=sys.stderr)
     # Compact totals to STDERR (r15, verdict task 6): the r13
     # round-over-round comparison died because the driver's 2000-char
     # tail capture of the stdout line lost the totals to the per-slot

@@ -230,10 +230,13 @@ class Column:
 
     # -- existence probe (base.py:1782-1792) -------------------------------
     def __contains__(self, value) -> bool:
-        """``value in column`` → pushdown LIMIT-1 probe."""
-        return (
-            self.table.df.where(self.expr == _rhs(value)).limit(1).count() > 0
-        )
+        """``value in column`` → a pushdown 1-row take: one job that
+        stops each partition at its first match, with no limit operator
+        (whose JVM-wide numbered counter would recompile every call)."""
+        from ..operators.util import ONE_SHOT_TAKE, posture
+
+        hits = self.table.df.where(self.expr == _rhs(value))
+        return len(posture(hits, ONE_SHOT_TAKE).take(1)) > 0
 
     # -- aggregates --------------------------------------------------------
     def __len__(self) -> int:  # base.py:1720-1722

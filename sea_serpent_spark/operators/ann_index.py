@@ -80,15 +80,29 @@ def _probe_frame(spark, q_plan, label_col: str = "label"):
     IEEE754 doubles both sides, so the rebuilt literals score
     bit-identically. Oversized batches keep the r10 checkpointed flow
     (one materialization serving the label collect, the count gate and
-    the candidate join)."""
+    the candidate join).
+
+    ``q_plan`` is cached for the take, so an oversized batch's
+    checkpoint reads the partitions the take already computed: probe
+    selection runs once per row on both paths. The cache is dropped
+    once the rows are in hand or the checkpoint is filled."""
+    from .lifetime import _keep_cache
     from .util import ONE_SHOT_TAKE, local_rows_df, posture
 
-    rows = posture(q_plan, ONE_SHOT_TAKE).take(_LOCAL_PROBE_QUERY_CAP + 1)
-    if len(rows) <= _LOCAL_PROBE_QUERY_CAP:
-        probed = sorted({int(r[label_col]) for r in rows})
-        q = local_rows_df(spark, [tuple(r) for r in rows], q_plan.schema)
-        return q, probed, True
-    q, _ = tracked_checkpoint(q_plan)
+    _keep_cache(q_plan)
+    try:
+        rows = posture(q_plan, ONE_SHOT_TAKE).take(
+            _LOCAL_PROBE_QUERY_CAP + 1
+        )
+        if len(rows) <= _LOCAL_PROBE_QUERY_CAP:
+            probed = sorted({int(r[label_col]) for r in rows})
+            q = local_rows_df(
+                spark, [tuple(r) for r in rows], q_plan.schema
+            )
+            return q, probed, True
+        q, _ = tracked_checkpoint(q_plan)
+    finally:
+        q_plan.unpersist(False)
     probed = sorted(
         {
             int(r[label_col])

@@ -125,6 +125,10 @@ def _quantizer_key(x):
 #: strategy AQE should pick at runtime.
 SCALAR = {"spark.sql.adaptive.enabled": "false"}
 
+#: Optimizer rules a posture turns off. :func:`posture` appends to the
+#: session's own list instead of replacing it.
+EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+
 #: ``take()`` scans 64 partitions in its FIRST job. ``executeTake``'s
 #: default scale-up (1 partition, then 4x per retry) suits LIMIT over a
 #: big scan; a capped probe collect over a handful of post-shuffle
@@ -132,7 +136,17 @@ SCALAR = {"spark.sql.adaptive.enabled": "false"}
 #: latency per take (r14 audit: 8 of the LSH probe's 12 per-batch jobs).
 #: 64 one-shots every trigger-sized frame and bounds a cap-overflow
 #: take's overscan to one pass.
-ONE_SHOT_TAKE = {"spark.sql.limit.initialNumPartitions": "64"}
+#:
+#: It also excludes ``LimitPushDown``. That rule puts a ``LocalLimit``
+#: into each branch of a union under the take, and Spark names each
+#: limit's counter from a JVM-global sequence (``_limit_counter_N``), so
+#: every such take generated new source and missed the codegen cache.
+#: Results cannot change, because ``executeTake`` already stops each
+#: partition at n rows.
+ONE_SHOT_TAKE = {
+    "spark.sql.limit.initialNumPartitions": "64",
+    EXCLUDED_RULES: "org.apache.spark.sql.catalyst.optimizer.LimitPushDown",
+}
 
 
 def micro(parts: int) -> dict:
@@ -178,6 +192,10 @@ def posture(df: DataFrame, confs: dict = SCALAR) -> DataFrame:
         parent.sparkContext, parent._jsparkSession.cloneSession()
     )
     for k, v in confs.items():
+        if k == EXCLUDED_RULES:
+            held = clone.conf.get(k, None)
+            if held:
+                v = f"{held},{v}"
         clone.conf.set(k, v)
     return rebind(df, clone)
 

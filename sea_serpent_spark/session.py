@@ -31,6 +31,15 @@ _DEFAULTS = {
     # mutates conf mid-query.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
+    # Janino-compiled codegen classes are cached by source text in one
+    # JVM-wide LRU (static conf, so it holds only for sessions built
+    # here). Spark's 100 entries is below the working set: q43 alone
+    # generates about 200 classes and the 50-slot suite about 1,800,
+    # so every class was evicted before its plan ran again and a
+    # repeat run recompiled all of it (about 1.2 s of Janino time per
+    # q43 run on 4 cores, plus the JIT's work on the new classes).
+    # 2048 holds the suite's working set for about 10 MB of Metaspace.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 #: local-mode JVM sizing. Spark's 1g driver default is far too small for
@@ -61,4 +70,11 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # The JVM sizes its codegen cache once, from the conf of the thread
+    # that first touches the code generator. A thread with no active
+    # session (``df.rdd`` in an overlap_build chain) reads Spark's
+    # defaults instead, so touch it here, where this session is active.
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    codegen.CodeGenerator.compileTime()
+    return spark

@@ -600,3 +600,31 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
             len(sc.statusTracker().getJobIdsForGroup(f"sem-budget-{b}"))
         )
     assert all(n <= 9 for n in per_batch[1:]), per_batch
+
+
+@pytest.mark.parametrize("cap", [8, 1000])
+def test_probe_selection_runs_once(spark, monkeypatch, tmp_path, cap):
+    """Probe selection runs once per row on both sides of
+    ``_LOCAL_PROBE_QUERY_CAP``: an over-cap take's partitions stay
+    cached, so the fallback checkpoint does not select again. Each
+    evaluation appends a line to a file: an accumulator would miss the
+    evaluations of a task the take stops early."""
+    log = str(tmp_path / "selected")
+
+    def select(i):
+        with open(log, "a") as f:
+            f.write(f"{i}\n")
+        return int(i % 3)
+
+    n = 40
+    q_plan = spark.range(0, n, 1, 4).select(
+        F.col("id").alias("query_id"),
+        F.udf(select, "int")("id").alias("label"),
+    )
+    monkeypatch.setattr(A, "_LOCAL_PROBE_QUERY_CAP", cap)
+    q, probed, _ = A._probe_frame(spark, q_plan)
+    assert sorted(r["query_id"] for r in q.collect()) == list(range(n))
+    assert probed == [0, 1, 2]
+    with open(log) as f:
+        assert sorted(int(x) for x in f) == list(range(n))
+    assert not q_plan.is_cached

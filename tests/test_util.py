@@ -1,7 +1,8 @@
 """``operators.util`` contracts: ``local_rows_df`` accepts the same rows
 and returns the same frame on both sides of its cell cap, no module
-flips a session-global conf outside the places that own one, and no
-module cuts a lineage outside the lifetime registry."""
+flips a session-global conf outside the places that own one, no
+module cuts a lineage outside the lifetime registry, and a repeated plan
+or bounded take compiles no new codegen class."""
 
 import ast
 import datetime
@@ -121,3 +122,90 @@ def test_local_rows_df_same_frame_across_cap(spark, monkeypatch, with_date):
     assert got[0]["xs"] == [0.0, 1.25]
     if with_date:
         assert got[1]["d"] == datetime.date(2024, 2, 29)
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (a codegen-cache hit does not
+    count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeat_plan_hits_codegen_cache(spark):
+    """The session's codegen cache holds more than Spark's default 100
+    classes, so a plan repeated after 120 others compiles nothing."""
+
+    def run(i):
+        return spark.range(8).selectExpr(f"id + {i} AS v").collect()
+
+    first = run(0)
+    for i in range(1, 121):  # each inlines its literal: a new class
+        run(i)
+    before = _compiles(spark)
+    assert run(0) == first
+    assert _compiles(spark) - before == 0
+
+
+def test_repeat_take_compiles_nothing(spark):
+    """A bounded take over a union, repeated, generates the same source:
+    ``ONE_SHOT_TAKE`` keeps ``LimitPushDown`` from adding per-branch
+    limits, whose counter names come from a JVM-global sequence."""
+    a = spark.range(100).selectExpr("id", "id * 2 AS v")
+    b = spark.range(50).selectExpr("id", "id * 3 AS v")
+
+    def take():
+        return util.posture(a.unionByName(b), util.ONE_SHOT_TAKE).take(10)
+
+    first = take()
+    before = _compiles(spark)
+    assert take() == first
+    assert _compiles(spark) - before == 0
+
+
+def test_posture_appends_to_session_excluded_rules(spark):
+    held = "org.apache.spark.sql.catalyst.optimizer.ConstantFolding"
+    session = spark.newSession()
+    session.conf.set(util.EXCLUDED_RULES, held)
+    df = util.posture(session.range(3), util.ONE_SHOT_TAKE)
+    assert df.sparkSession.conf.get(util.EXCLUDED_RULES) == (
+        held + "," + util.ONE_SHOT_TAKE[util.EXCLUDED_RULES]
+    )
+    assert session.conf.get(util.EXCLUDED_RULES) == held
+    assert df.collect() == session.range(3).collect()
+
+
+_FIRST_PLAN_ON_A_THREAD = """
+import threading
+from sea_serpent_spark.session import get_spark
+spark = get_spark(app_name="codegen-cache-init", shuffle_partitions=2)
+df = spark.range(8).selectExpr("id + 1000 AS v")
+t = threading.Thread(target=lambda: df.rdd.getNumPartitions())
+t.start()
+t.join()
+metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+run = lambda i: spark.range(8).selectExpr(f"id + {i} AS v").collect()
+for i in range(121):
+    run(i)
+before = metrics.METRIC_COMPILATION_TIME().getCount()
+run(0)
+print("repeat compiles", metrics.METRIC_COMPILATION_TIME().getCount() - before)
+"""
+
+
+def test_codegen_cache_sized_when_first_plan_runs_on_a_thread():
+    """``get_spark`` sizes the JVM's codegen cache itself: a first plan
+    on a thread with no active session (here ``df.rdd``, as in an
+    overlap_build chain) would otherwise size it from Spark's defaults
+    for the life of the JVM."""
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _FIRST_PLAN_ON_A_THREAD],
+        cwd=PKG.parent, env=env, capture_output=True, text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "repeat compiles 0" in out.stdout
