@@ -778,11 +778,11 @@ class Base:
         elif touched == "oplog" and prev is not None and oplog is not None:
             # read back ONLY this commit's oplog files (listed above) —
             # the change-diff plan still runs once, and the probe no
-            # longer scans an O(history) directory
+            # longer scans an O(history) directory. They hold this
+            # commit's rows alone, so no op_id filter: its literal would
+            # make every commit's scan new generated code.
             if new_oplog_files:
-                opl = spark.read.parquet(*new_oplog_files).where(
-                    F.col("op_id") == v
-                )
+                opl = spark.read.parquet(*new_oplog_files)
             else:
                 opl = spark.read.parquet(opdir).where(
                     F.col("op_id") == v
@@ -1573,21 +1573,34 @@ class Base:
         table.df = fresh.df
         table._version = fresh._version
 
+    def _oplog_stamp(self, table: Table):
+        """The commit's op-log stamp, expanding to ``user``, ``app``,
+        ``op_time`` and ``op_id``. Time and version ride in one
+        array-of-struct literal that ``inline`` unpacks per row:
+        whole-stage codegen writes a long or timestamp literal into the
+        generated source, so as plain literals every commit would compile
+        new classes, while an array literal reaches the code as a reference.
+        One element, so one output row per input row."""
+        return F.inline(F.array(F.struct(
+            F.lit(self.user).alias("user"),
+            F.lit("sea-serpent-spark").alias("app"),
+            F.lit(datetime.now(timezone.utc)).alias("op_time"),
+            F.lit(self._current_version(table.name) + 1)
+            .cast("long")
+            .alias("op_id"),
+        )))
+
     def _oplog_entries(
         self, table: Table, old_df: DataFrame, new_col: str, new_expr
     ) -> DataFrame:
         """Changed cells only (NA-aware diff — Column.update semantics,
         base.py:2171-2203 / is_equal_array utils.py:676-731 — via
         eqNullSafe, the exact semantic match)."""
-        v = self._current_version(table.name) + 1
         changed = old_df.withColumn("__new", new_expr).where(
             ~F.col(new_col).eqNullSafe(F.col("__new"))
         )
         return changed.select(
-            F.lit(self.user).alias("user"),
-            F.lit("sea-serpent-spark").alias("app"),
-            F.lit(datetime.now(timezone.utc)).alias("op_time"),
-            F.lit(v).cast("long").alias("op_id"),
+            self._oplog_stamp(table),
             F.col("_id").alias("row_id"),
             F.lit(new_col).alias("column"),
             F.col(new_col).cast("string").alias("old_value"),
@@ -2139,12 +2152,8 @@ class Base:
     def delete_rows(self, table: Table, rows) -> None:
         dfp = self._rows_pred(table, rows)
         removed = dfp.where(F.col("__pred")).drop("__pred")
-        v = self._current_version(table.name) + 1
         oplog = removed.select(
-            F.lit(self.user).alias("user"),
-            F.lit("sea-serpent-spark").alias("app"),
-            F.lit(datetime.now(timezone.utc)).alias("op_time"),
-            F.lit(v).cast("long").alias("op_id"),
+            self._oplog_stamp(table),
             F.col("_id").alias("row_id"),
             F.lit("_row").alias("column"),
             F.lit("present").alias("old_value"),

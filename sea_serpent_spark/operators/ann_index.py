@@ -33,9 +33,6 @@ beyond-reference LLM-pipeline extension (SURVEY §7 Phase 5).
 
 from __future__ import annotations
 
-import json
-import os
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -43,16 +40,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from . import artifact
 from .similarity import dot, ivf_assign, kmeans_fit, norm
-from .util import fan_out, rebind, tracked_checkpoint
+from .util import fan_out, tracked_checkpoint
 
 _ANN_META = "_ivf_index_meta.json"
-
-#: Unsorted append tail (LSM L0) under a generation — the same shape
-#: as the band index's ``_tail`` (operators/incremental.py): per-batch
-#: appends land here as a few flat files (label as a DATA column)
-#: instead of fanning tiny files across every list directory;
-#: underscore-prefixed so the main partitioned scan ignores it.
-_ANN_TAIL = "_tail"
 
 #: Query batches at or under this many (query, probe) rows broadcast in
 #: the candidate join; ~512 B/row at dim=64 → ≈250 MB worst case.
@@ -149,189 +139,25 @@ def build_ivf_index(
         from .similarity import pq_encode
 
         assigned = pq_encode(assigned, codebooks, vec_col=vec_col)
-    # single-writer lease across stage + publish (r11): two concurrent
-    # builders would otherwise stage into the same generation name
-    with artifact.writer_lease(path, owner="ivf-build"):
-        legacy = artifact.read_manifest(path) is None and os.path.exists(
-            os.path.join(path, _ANN_META)
-        )
-        gen, staging = artifact.new_generation_dir(path)
-        (
-            assigned.repartition("label")
-            .sortWithinPartitions("label", id_col)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staging)
-        )
-        # the full schema (incl. the label partition column) rides the
-        # sidecar so every open skips the footer-inference job (r13 —
-        # the band-index sidecar pattern)
-        meta = {
-            "centroids": centroids,
-            "id_col": id_col,
-            "schema": assigned.schema.json(),
-        }
-        if codebooks is not None:
-            meta["codebooks"] = codebooks
-        with open(os.path.join(staging, _ANN_META), "w") as fh:
-            json.dump(meta, fh)
-        artifact.publish_generation(path, gen)
-        if legacy:
-            artifact.clear_legacy_layout(path)
-            legacy_meta = os.path.join(path, _ANN_META)
-            if os.path.exists(legacy_meta):
-                os.remove(legacy_meta)
+    meta = {"centroids": centroids, "id_col": id_col}
+    if codebooks is not None:
+        meta["codebooks"] = codebooks
+    artifact.write_generation(
+        path, "ivf-build",
+        lambda staging: artifact.write_layout(
+            assigned, staging, ["label"], [id_col], _ANN_META, meta
+        ),
+    )
     return centroids
 
 
-#: r14: parsed sidecars keyed by generation dir. A published
-#: generation is IMMUTABLE (builds/compactions cut new dirs), so the
-#: parse is valid for the dir's lifetime; a streaming sink otherwise
-#: re-reads and re-parses the quantizer JSON every micro-batch — and,
-#: worse, hands fresh centroid list objects to the expression cache.
-#: Legacy flat layouts (meta at the index root) are mutable and are
-#: never cached. Bounded like the expression cache.
-_META_CACHE: dict = {}
-_META_CACHE_MAX = 32
-
-
-def _resolve(path: str) -> tuple[str, dict]:
-    """→ (pinned generation dir, its sidecar meta) — legacy flat
-    layouts (meta at the root) resolve to the root."""
-    src = artifact.current_dir(path)
-    meta = os.path.join(src, _ANN_META)
-    if not os.path.exists(meta):  # legacy layout — mutable, no cache
-        meta = os.path.join(path, _ANN_META)
-        with open(meta) as fh:
-            return path, json.load(fh)
-    if src == path:
-        # flat layout whose sidecar sits in the MUTABLE root (no
-        # manifest): an in-place rewrite would go unseen by the cache,
-        # so read fresh — generation dirs below are immutable by the
-        # publish contract and safe to cache
-        with open(meta) as fh:
-            return src, json.load(fh)
-    # a PUBLISHED generation never mutates, but the whole artifact can
-    # be deleted and rebuilt at the same path — the fresh build reuses
-    # the generation NAME (g00001) with new files, so the dir path
-    # alone is not an identity. The sidecar's stat triple is: every
-    # (re)build writes a new meta file (r14 — caught by the q43
-    # decomposition's rebuild-in-one-session, which served a frame of
-    # already-deleted parquet paths).
-    st = os.stat(meta)
-    statkey = (st.st_ino, st.st_mtime_ns, st.st_size)
-    cached = _META_CACHE.get((src, statkey))
-    if cached is None:
-        with open(meta) as fh:
-            cached = json.load(fh)
-        if len(_META_CACHE) >= _META_CACHE_MAX:
-            _META_CACHE.clear()
-        _META_CACHE[(src, statkey)] = cached
-    return src, cached
-
-
-#: r14 (verdict task 5): analyzed-frame cache for DIRECT probe calls.
-#: The streaming sinks own a ``main_cache`` dict across their batches;
-#: a caller probing the index per micro-batch through the public
-#: ``ivf_index_topk`` / ``ivf_index_pq_topk`` has no such handle, so it
-#: re-paid the main layout's file listing + analysis every call. Keyed
-#: by (application id, generation dir, sidecar stat triple): a
-#: PUBLISHED generation dir is immutable (appends only touch
-#: ``_tail``, which ``_index_frame`` re-lists fresh every call;
-#: compaction cuts a NEW dir and misses by key), but a delete+rebuild
-#: at the same path reuses the generation NAME with new files — the
-#: stat triple catches that; the app id bars a restarted session from
-#: being served dead JVM plan handles. Legacy flat layouts never get
-#: here (``_resolve`` short-circuits them above).
-_MAIN_FRAME_CACHE: dict = {}
-_MAIN_FRAME_CACHE_MAX = 16
-
-
-def _direct_main_cache(spark: SparkSession, src: str, path: str) -> dict | None:
-    """→ the per-generation ``main_cache`` slot for a direct probe, or
-    ``None`` for mutable (legacy flat) layouts."""
-    if src == path:  # legacy flat layout — mutable dir, never cache
-        return None
-    try:
-        st = os.stat(os.path.join(src, _ANN_META))
-    except OSError:
-        return None
-    key = (
-        spark.sparkContext.applicationId, src,
-        (st.st_ino, st.st_mtime_ns, st.st_size),
-    )
-    slot = _MAIN_FRAME_CACHE.get(key)
-    if slot is None:
-        if len(_MAIN_FRAME_CACHE) >= _MAIN_FRAME_CACHE_MAX:
-            _MAIN_FRAME_CACHE.clear()
-        slot = {}
-        _MAIN_FRAME_CACHE[key] = slot
-    return slot
-
-
-def _index_frame(
-    spark: SparkSession,
-    src: str,
-    meta: dict | None = None,
-    main_cache: dict | None = None,
-) -> DataFrame:
-    """The generation's corpus frame: sorted list-partitioned layout
-    UNION any append tail (:func:`append_to_ivf_index`). The main
-    schema is GIVEN to the tail read — an all-filtered append writes
-    zero data files and a schema-less read of that fails inference
-    (the band-index lesson, incremental.py r9).
-
-    r13, the band-index openers ported over: a ``schema`` entry in the
-    sidecar ``meta`` skips the per-open footer-inference job (corrupt/
-    missing entries fall back; pre-r13 sidecars carry none), and
-    ``main_cache`` (a caller-owned dict) reuses the main layout's
-    analyzed frame while the generation is unchanged — appends only
-    touch the tail (re-listed fresh every call), compaction cuts a new
-    generation and misses the cache by key."""
-    # rebuild identity: the sidecar's stat triple (the module-level
-    # caches key on it too — same-path rebuilds reuse generation
-    # names, so the dir path alone is not an identity). No readable
-    # sidecar → no identity → never cache.
-    statkey = None
-    try:
-        st = os.stat(os.path.join(src, _ANN_META))
-        statkey = (st.st_ino, st.st_mtime_ns, st.st_size)
-    except OSError:
-        main_cache = None
-    df = None
-    if (
-        main_cache is not None
-        and main_cache.get("src") == src
-        and main_cache.get("stat") == statkey
-        and main_cache.get("df") is not None
-    ):
-        # the frame may come from another session (a sink batch's
-        # posture clone): plan it under the caller's own conf
-        df = rebind(main_cache["df"], spark)
-    if df is None:
-        reader = spark.read
-        sj = (meta or {}).get("schema")
-        if sj:
-            try:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read.schema(
-                    StructType.fromJson(json.loads(sj))
-                )
-            except Exception:
-                reader = spark.read
-        df = reader.parquet(src)
-        if main_cache is not None:
-            main_cache["src"] = src
-            main_cache["stat"] = statkey
-            main_cache["df"] = df
-    tdir = os.path.join(src, _ANN_TAIL)
-    if os.path.isdir(tdir):
-        df = df.unionByName(
-            spark.read.schema(df.schema).parquet(tdir)
-            .select(*df.columns)
-        )
-    return df
+def _open(spark: SparkSession, path: str) -> artifact.Generation:
+    """The index's pinned generation; its sidecar carries the
+    quantizer (``centroids``), ``id_col`` and any PQ ``codebooks``."""
+    gen = artifact.open_generation(spark, path, _ANN_META)
+    if "centroids" not in gen.meta:
+        raise FileNotFoundError(f"no IVF index sidecar under {path}")
+    return gen
 
 
 def read_ivf_index(
@@ -340,14 +166,8 @@ def read_ivf_index(
     """→ (list-partitioned corpus frame incl. any append tail,
     quantizer centroids), pinned to the manifest's current
     generation."""
-    src, meta = _resolve(path)
-    return (
-        _index_frame(
-            spark, src, meta,
-            main_cache=_direct_main_cache(spark, src, path),
-        ),
-        meta["centroids"],
-    )
+    gen = _open(spark, path)
+    return artifact.open_frame(spark, gen), gen.meta["centroids"]
 
 
 def append_to_ivf_index(
@@ -382,7 +202,8 @@ def append_to_ivf_index(
     path the probe read)."""
     spark = new_vectors.sparkSession
     with artifact.writer_lease(path, owner="ivf-append"):
-        src, meta = _resolve(path)
+        gen = _open(spark, path)
+        meta = gen.meta
         if _assigned is not None:
             assigned = _assigned.select(id_col, vec_col, "label")
         else:
@@ -396,18 +217,10 @@ def append_to_ivf_index(
             assigned = pq_encode(
                 assigned, meta["codebooks"], vec_col=vec_col
             )
-        # micro-batch appends (the sink's pre-assigned hand-off) write
-        # from one task — no shuffle stage for a few-hundred-row batch;
-        # backfill-sized appends keep the parallel label repartition
-        shaped = (
-            assigned.coalesce(1)
-            if _assigned is not None
-            else assigned.repartition("label")
-        )
-        (
-            shaped.sortWithinPartitions("label", id_col)
-            .write.mode("append")
-            .parquet(os.path.join(src, _ANN_TAIL))
+        # the sink's pre-assigned hand-off is a micro-batch append
+        artifact.append_tail(
+            assigned, gen.dir, "label", [id_col],
+            micro=_assigned is not None, partitioned=False,
         )
 
 
@@ -418,7 +231,6 @@ def incremental_semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     ingest_out: dict | None = None,
-    _main_cache: dict | None = None,
 ) -> DataFrame:
     """Surviving rows of ``new_df`` after SEMANTIC dedup against a
     persisted IVF index AND within the delta itself — the SemDeDup
@@ -474,8 +286,8 @@ def incremental_semantic_dedup(
     from .lifetime import _keep_cache, _retire_scope
 
     spark = new_df.sparkSession
-    src, meta = _resolve(path)
-    centroids = meta["centroids"]
+    gen = _open(spark, path)
+    centroids = gen.meta["centroids"]
     _retire_scope()
     delta = _keep_cache(
         ivf_assign(
@@ -495,10 +307,10 @@ def incremental_semantic_dedup(
     ).collect()
     labels = sorted(int(r["label"]) for r in lab_rows)
     n_delta = sum(int(r["n"]) for r in lab_rows)
-    # ONE open per probe (sidecar-pinned schema, caller-cacheable main
+    # ONE open per probe (sidecar-pinned schema, per-generation main
     # frame) shared by the pruned scan AND the reingest id scan — two
     # separate opens each paid a footer-inference job before r13
-    full = _index_frame(spark, src, meta, _main_cache)
+    full = artifact.open_frame(spark, gen)
     pruned = _keep_cache(
         full
         .where(_F.col("label").isin(labels))
@@ -681,44 +493,21 @@ def compact_ivf_index(spark: SparkSession, path: str) -> dict:
     layout → ``{"files_before": n, "files_after": m}``. The compacted
     layout lands in a fresh generation published by the atomic
     manifest swap (a concurrent probe keeps the generation it pinned)
-    — the same commit discipline as ``compact_band_index``."""
-    def _nfiles(p: str) -> int:
-        return sum(
-            1 for root, _, files in os.walk(p)
-            for f in files if f.endswith(".parquet")
-        )
+    — the same commit discipline as ``compact_band_index``
+    (``artifact.compact``)."""
 
-    with artifact.writer_lease(path, owner="ivf-compact"):
-        src, meta = _resolve(path)
-        before = _nfiles(src)
-        full = _index_frame(
-            spark, src, meta,
-            main_cache=_direct_main_cache(spark, src, path),
-        )
-        # refresh/upgrade the sidecar schema alongside the rewrite
-        # (pre-r13 sidecars carry none)
-        meta = {**meta, "schema": full.schema.json()}
+    def stage(gen, full, staging):
         # sort key = the id column the build recorded in the sidecar
         # (r13); the first-non-label-column fallback only serves
         # pre-r13 indexes whose sidecar predates the key
-        id_sort = meta.get("id_col") or [
+        id_sort = gen.meta.get("id_col") or [
             c for c in full.columns if c not in ("label",)
         ][0]
-        gen, staging = artifact.new_generation_dir(path)
-        (
-            full.repartition("label")
-            .sortWithinPartitions("label", id_sort)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staging)
+        artifact.write_layout(
+            full, staging, ["label"], [id_sort], _ANN_META, gen.meta
         )
-        with open(os.path.join(staging, _ANN_META), "w") as fh:
-            json.dump(meta, fh)
-        artifact.publish_generation(path, gen)
-    return {
-        "files_before": before,
-        "files_after": _nfiles(artifact.current_dir(path)),
-    }
+
+    return artifact.compact(spark, path, _ANN_META, "ivf-compact", stage)
 
 
 #: Above this many centroid×dim literal terms, probe selection switches
@@ -842,8 +631,8 @@ def ivf_index_topk(
     id is deliberately low-cardinality, so the shuffle fallback bounds
     parallelism by |probed| — split bulk batches instead); ranking is
     the standard per-query window."""
-    src, meta = _resolve(path)
-    centroids = meta["centroids"]
+    gen = _open(spark, path)
+    centroids = gen.meta["centroids"]
     q = ivf_probes(
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -861,10 +650,7 @@ def ivf_index_topk(
     # the checkpointed flow inside the helper)
     q, probed, bcast = _probe_frame(spark, q)
     idx = fan_out(
-        _index_frame(
-            spark, src, meta,
-            main_cache=_direct_main_cache(spark, src, path),
-        ).where(F.col("label").isin(probed))
+        artifact.open_frame(spark, gen).where(F.col("label").isin(probed))
     ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -923,9 +709,9 @@ def ivf_index_pq_topk(
     ``pq_topk`` over the full corpus (every list probed — tested); the
     probe order/tie rules match ``ivf_index_topk`` so the q41 oracle
     replays the whole pipeline in SQL."""
-    src, meta = _resolve(path)
-    centroids = meta["centroids"]
-    codebooks = meta.get("codebooks")
+    gen = _open(spark, path)
+    centroids = gen.meta["centroids"]
+    codebooks = gen.meta.get("codebooks")
     if not codebooks:
         raise ValueError(
             "index was built without PQ codebooks — rebuild with "
@@ -942,10 +728,7 @@ def ivf_index_pq_topk(
     # ONE bounded take serves the label collect and the join side
     # (r15 — see ivf_index_topk; pq_topk broadcasts q itself)
     q, probed, _bcast = _probe_frame(spark, q)
-    idx = _index_frame(
-        spark, src, meta,
-        main_cache=_direct_main_cache(spark, src, path),
-    ).where(
+    idx = artifact.open_frame(spark, gen).where(
         F.col("label").isin(probed)
     ).select(id_col, "pq_code", "label")
     # assignment partitions the corpus, so a neighbor sits in exactly

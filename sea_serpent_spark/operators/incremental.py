@@ -44,7 +44,6 @@ dedupes nothing) — this is a beyond-reference LLM-pipeline extension
 
 from __future__ import annotations
 
-import json
 import os
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -52,6 +51,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..lease import LEASE_NAME
 from . import artifact
 from .dedup import (
     BROADCAST_VERIFY_CAP,
@@ -66,7 +66,7 @@ from .dedup import (
 )
 from .hashing import xxh64
 from .lifetime import _keep_cache, _retire_scope
-from .util import local_rows_df, rebind, spread, tracked_checkpoint
+from .util import local_rows_df, spread, tracked_checkpoint
 
 
 def minhash_band_index(
@@ -103,10 +103,6 @@ def minhash_band_index(
 #: Sidecar filename for the on-disk band-index layout parameters.
 #: Underscore-prefixed, so Spark's parquet reader ignores it.
 _INDEX_META = "_band_index_meta.json"
-
-#: Unsorted append tail (LSM L0) under the index root — also
-#: underscore-prefixed so the main bucket scan never double-reads it.
-_TAIL_DIR = "_tail"
 
 #: Id-bloom sidecar of a generation (main layout ids) plus per-append
 #: delta blobs — the r10 fix for the reingest check's one remaining
@@ -354,7 +350,8 @@ def write_band_index(
     (``read_band_index`` unions it in; underscore-prefixed paths are
     invisible to the main directory scan). :func:`compact_band_index`
     folds the tail back into the sorted bucket layout; run it every N
-    batches to keep the unpruned tail bounded.
+    batches to keep the unpruned tail bounded. An append to a path
+    holding no index yet builds the first generation instead.
 
     The layout parameters are recorded in a ``_band_index_meta.json``
     sidecar so probes can recover ``key_buckets`` without the caller
@@ -383,98 +380,71 @@ def write_band_index(
     # a second concurrent writer errors instead of interleaving tail
     # files / staging into the same generation name (r11)
     with artifact.writer_lease(path, owner="band-index-write"):
-        return _write_band_index_locked(
-            idx, path, mode, key_buckets, ids_hint
+        cur = artifact.current_dir(path)
+        # an append to an existing index (a generation, or a legacy flat
+        # layout at the root) lands in its tail; one to nothing builds
+        if mode == "append" and os.path.isdir(cur) and any(
+            d != LEASE_NAME for d in os.listdir(cur)
+        ):
+            _append_bloom_delta(idx, cur, ids_hint)
+            # L0 tail: kb rides as a DATA column (partition-dir layouts
+            # cannot mix depths under one root); ≤ `bands` files per
+            # batch. Micro-batch appends (ids_hint in hand and small,
+            # r13) write from one task.
+            artifact.append_tail(
+                idx, cur, "band", ["key"],
+                micro=ids_hint is not None
+                and len(ids_hint) <= _DRIVER_PROBE_DOC_CAP,
+                partitioned=True,
+            )
+            return
+        artifact.write_generation(
+            path, "band-index-write",
+            lambda staging: _write_layout(idx, staging, key_buckets),
         )
 
 
-def _write_band_index_locked(idx, path, mode, key_buckets,
-                             ids_hint=None):
-    cur = artifact.current_dir(path)
-    if mode == "append" and os.path.exists(
-        os.path.join(cur, _INDEX_META)
-    ):
-        # bloom delta FIRST: a crash between the two writes then leaves
-        # ids in the bloom that never landed in the tail — false
-        # positives (harmless extra verification), never false
-        # negatives (which would silently re-ingest duplicates)
-        main_bloom = os.path.join(cur, _BLOOM_FILE)
-        if os.path.exists(main_bloom):
-            import struct as _struct
-            import uuid as _uuid
-
-            with open(main_bloom, "rb") as fh:
-                m, kk = _struct.unpack("<QQ", fh.read(16))
-            if ids_hint is not None:
-                blob = build_id_bloom_local(
-                    ids_hint, params=(int(m), int(kk))
-                )
-            else:
-                blob = build_id_bloom(
-                    idx.where(F.col("band") == 0).select("id"),
-                    params=(int(m), int(kk)),
-                )
-            tdir = os.path.join(cur, _BLOOM_TAIL_DIR)
-            os.makedirs(tdir, exist_ok=True)
-            tmp = os.path.join(tdir, f".{_uuid.uuid4().hex}.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.rename(tmp, os.path.join(
-                tdir, f"{_uuid.uuid4().hex}.bin"
-            ))
-        # L0 tail: kb rides as a DATA column (partition-dir layouts
-        # cannot mix depths under one root); ≤ `bands` files per batch.
-        # Micro-batch appends (ids_hint in hand and small, r13) skip
-        # the band repartition — coalesce(1) + the within-task sort
-        # writes the same ≤`bands` sorted files from ONE task, no
-        # shuffle stage; big backfill appends keep the parallel write.
-        if ids_hint is not None and len(ids_hint) <= _DRIVER_PROBE_DOC_CAP:
-            shaped = idx.coalesce(1)
-        else:
-            shaped = idx.repartition("band")
-        (
-            shaped.sortWithinPartitions("band", "key")
-            .write.mode("append")
-            .partitionBy("band")
-            .parquet(os.path.join(cur, _TAIL_DIR))
-        )
+def _append_bloom_delta(idx: DataFrame, cur: str, ids_hint) -> None:
+    """Add the appended ids to the generation's id bloom as a delta
+    blob. Written BEFORE the tail: a crash between the two writes then
+    leaves ids in the bloom that never landed in the tail — false
+    positives (harmless extra verification), never false negatives
+    (which would silently re-ingest duplicates)."""
+    main_bloom = os.path.join(cur, _BLOOM_FILE)
+    if not os.path.exists(main_bloom):
         return
-    legacy = artifact.read_manifest(path) is None and os.path.exists(
-        os.path.join(path, _INDEX_META)
-    )
-    gen, staging = artifact.new_generation_dir(path)
-    _write_layout(idx, staging, key_buckets)
-    artifact.publish_generation(path, gen, {"key_buckets": key_buckets})
-    if legacy:  # readers already resolve the generation — clear the old
-        artifact.clear_legacy_layout(path)
+    import struct as _struct
+    import uuid as _uuid
+
+    with open(main_bloom, "rb") as fh:
+        m, kk = _struct.unpack("<QQ", fh.read(16))
+    if ids_hint is not None:
+        blob = build_id_bloom_local(ids_hint, params=(int(m), int(kk)))
+    else:
+        blob = build_id_bloom(
+            idx.where(F.col("band") == 0).select("id"),
+            params=(int(m), int(kk)),
+        )
+    tdir = os.path.join(cur, _BLOOM_TAIL_DIR)
+    os.makedirs(tdir, exist_ok=True)
+    tmp = os.path.join(tdir, f".{_uuid.uuid4().hex}.tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(blob)
+    os.rename(tmp, os.path.join(tdir, f"{_uuid.uuid4().hex}.bin"))
 
 
 def _write_layout(
     idx: DataFrame, target: str, key_buckets: int | None
 ) -> None:
-    """The physical bucket write: one (band, kb) group per task →
-    exactly one sorted file per partition directory; the writer streams
-    because the within-task sort leads with the partition columns. An
-    id-bloom sidecar is built from the written files' band-0 ids (one
-    narrow partition-pruned column scan at build time) so probes can
-    short-circuit the reingest check."""
-    part_cols = ["band", "kb"] if key_buckets else ["band"]
-    (
-        idx.repartition(*part_cols)
-        .sortWithinPartitions(*part_cols, "key")
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(target)
+    """The physical bucket write (``artifact.write_layout``: one sorted
+    file per (band, kb) directory, sidecar with ``key_buckets`` and the
+    schema), then an id-bloom sidecar built from the written files'
+    band-0 ids (one narrow partition-pruned column scan at build time)
+    so probes can short-circuit the reingest check."""
+    artifact.write_layout(
+        idx, target, ["band", "kb"] if key_buckets else ["band"], ["key"],
+        _INDEX_META, {"key_buckets": key_buckets},
     )
-    with open(os.path.join(target, _INDEX_META), "w") as fh:
-        # the full schema (incl. partition columns) rides in the
-        # sidecar so every open skips the footer-read schema-inference
-        # job — one job per probe call, which a streaming ingest loop
-        # pays per micro-batch (r12 probe-floor fold)
-        json.dump(
-            {"key_buckets": key_buckets, "schema": idx.schema.json()},
-            fh,
-        )
     # the schema is GIVEN to the read-back: an EMPTY index frame (all
     # seed docs sig-less) writes zero data files and a schema-less
     # read of that fails inference (r14 fuzz — the same lesson the r9
@@ -489,11 +459,7 @@ def _write_layout(
     os.rename(tmp, os.path.join(target, _BLOOM_FILE))
 
 
-def read_band_index(
-    spark: SparkSession,
-    path: str,
-    _main_cache: dict | None = None,
-) -> DataFrame:
+def read_band_index(spark: SparkSession, path: str) -> DataFrame:
     """Open a persisted band index — the sorted bucket layout UNION any
     append tail (:func:`write_band_index` ``mode="append"``) — with the
     layout parameters from the sidecar re-attached as column metadata on
@@ -501,100 +467,26 @@ def read_band_index(
     apply partition pruning automatically (to the bucketed part; the
     tail is small by the compaction contract and scans whole).
 
-    The read PINS the artifact's current generation (atomic manifest
-    resolution, ``operators/artifact.py``): a compaction publishing a
-    new generation never changes the files under an already-opened
-    frame, and the previous generation is retained through one publish
-    for exactly that reader.
-
-    ``_main_cache`` (r13, the ingest loop's plan-size lever): a dict
-    the CALLER owns across probe calls. The main bucket layout's
-    analyzed frame (file listing + resolved schema over bands ×
-    key_buckets directories) is stored under the generation dir it was
-    opened for and REUSED while the generation is unchanged — appends
-    only touch the ``_tail`` dir, which is re-listed fresh every call,
-    and a compaction cuts a new generation, which misses the cache by
-    key. One directory-tree walk + analysis per generation instead of
-    per micro-batch. LEGACY flat layouts never use the cache (r14):
-    their appends land in the MAIN directory, so a reused frame's file
-    listing would silently miss every batch appended after it was
-    opened — r13's flow only dodged this by accident (the persisted
-    pruned frame made each append's ``refreshByPath`` re-list the
-    shared relation in place), which the r14 local probe no longer
-    relies on."""
-    src = artifact.current_dir(path)
-    if src == path:  # legacy flat layout — mutable dir, never cache
-        _main_cache = None
-    meta_path = os.path.join(src, _INDEX_META)
-    meta: dict = {}
-    statkey = None
-    if os.path.exists(meta_path):
-        try:
-            st = os.stat(meta_path)
-            statkey = (st.st_ino, st.st_mtime_ns, st.st_size)
-            with open(meta_path) as fh:
-                meta = json.load(fh)
-        except (OSError, ValueError):
-            meta = {}  # unreadable sidecar never blocks the open
-            statkey = None
-    if statkey is None:
-        # no (readable) sidecar means no rebuild-identity to key on —
-        # an rmtree+rebuild at the same path reuses the generation
-        # NAME with new files, so a path-only key could serve a frame
-        # over deleted parquet (the r14 ann_index lesson); skip the
-        # cache rather than risk it
-        _main_cache = None
-    df = None
-    if (
-        _main_cache is not None
-        and _main_cache.get("src") == src
-        and _main_cache.get("stat") == statkey
-        and _main_cache.get("df") is not None
-    ):
-        # the frame may come from another session (a sink batch's
-        # posture clone): plan it under the caller's own conf
-        df = rebind(_main_cache["df"], spark)
-    if df is None:
-        reader = spark.read
-        if meta.get("schema"):
-            # sidecar-pinned schema (r12): skips the per-open
-            # footer-read inference job — a per-micro-batch cost in
-            # the streaming ingest loop. A corrupt/missing schema
-            # entry falls back to inference; layouts written before
-            # r12 carry none.
-            try:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read.schema(
-                    StructType.fromJson(json.loads(meta["schema"]))
-                )
-            except Exception:
-                reader = spark.read
-        df = reader.parquet(src)
-        if _main_cache is not None:
-            _main_cache["src"] = src
-            _main_cache["stat"] = statkey
-            _main_cache["df"] = df
-    tail_dir = os.path.join(src, _TAIL_DIR)
-    if os.path.isdir(tail_dir):
-        # the main schema is GIVEN to the tail read: an all-duplicate
-        # batch appends zero rows (no data files, just _SUCCESS), and a
-        # schema-less read of that empty dir fails inference
-        df = df.unionByName(
-            spark.read.schema(df.schema).parquet(tail_dir)
-            .select(*df.columns)
-        )
-    if "kb" in df.columns and meta.get("key_buckets"):
+    The read PINS the artifact's current generation and reuses its
+    analyzed main frame across opens (``artifact.open_generation`` /
+    ``open_frame``): a compaction publishing a new generation never
+    changes the files under an already-opened frame, appends only touch
+    the re-listed tail, and a streaming ingest loop pays one
+    directory-tree walk and analysis per generation instead of per
+    micro-batch."""
+    gen = artifact.open_generation(spark, path, _INDEX_META)
+    df = artifact.open_frame(spark, gen)
+    if "kb" in df.columns and gen.meta.get("key_buckets"):
         df = df.withMetadata(
-            "kb", {"key_buckets": int(meta["key_buckets"])}
+            "kb", {"key_buckets": int(gen.meta["key_buckets"])}
         )
     if "id" in df.columns and os.path.exists(
-        os.path.join(src, _BLOOM_FILE)
+        os.path.join(gen.dir, _BLOOM_FILE)
     ):
         # the probe discovers the id bloom from the frame itself, like
         # key_buckets — the generation dir is pinned, so the sidecar a
         # later probe loads matches the files this frame reads
-        df = df.withMetadata("id", {"bloom_dir": src})
+        df = df.withMetadata("id", {"bloom_dir": gen.dir})
     return df
 
 
@@ -605,50 +497,26 @@ def compact_band_index(
     sorted file per (band, kb) bucket. Returns
     ``{"files_before": n, "files_after": m}``.
 
-    Versioned-manifest commit (round 10, replacing the r9 rename swap
-    and its crash window): the compacted layout is written COMPLETELY
-    into a fresh generation directory, then published by the atomic
-    manifest-file swap (``operators/artifact.py``); the previous
-    generation is retained through one publish so a concurrent reader
-    that resolved it keeps a consistent snapshot, and there is no
-    instant at which the index path does not exist. A crash mid-write
-    leaves the old generation live and the staging directory as
-    unreferenced garbage for the next publish's GC."""
-    src = artifact.current_dir(path)
-    meta_path = os.path.join(src, _INDEX_META)
-    if key_buckets is None and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            key_buckets = json.load(fh).get("key_buckets")
+    Versioned-manifest commit (``artifact.compact``): the compacted
+    layout is written COMPLETELY into a fresh generation directory
+    under the writer lease, then published by the atomic manifest-file
+    swap; the previous generation is retained through one publish so a
+    concurrent reader that resolved it keeps a consistent snapshot, and
+    there is no instant at which the index path does not exist. A crash
+    mid-write leaves the old generation live and the staging directory
+    as unreferenced garbage for the next publish's GC."""
 
-    def _nfiles(p: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
+    def stage(gen, main, staging):
+        kb = key_buckets
+        if kb is None:
+            kb = gen.meta.get("key_buckets")
+        if kb and "kb" not in main.columns:
+            main = main.withColumn("kb", _kb_expr(kb))
+        _write_layout(main, staging, kb)
 
-    before = _nfiles(src)
-    main = spark.read.parquet(src)  # ignores the _-prefixed tail
-    tail_dir = os.path.join(src, _TAIL_DIR)
-    if os.path.isdir(tail_dir):  # fold the L0 tail into the buckets
-        main = main.unionByName(
-            spark.read.schema(main.schema).parquet(tail_dir)
-            .select(*main.columns)
-        )
-    if key_buckets and "kb" not in main.columns:
-        main = main.withColumn("kb", _kb_expr(key_buckets))
-    with artifact.writer_lease(path, owner="band-index-compact"):
-        legacy = artifact.read_manifest(path) is None
-        gen, staging = artifact.new_generation_dir(path)
-        _write_layout(main, staging, key_buckets)
-        artifact.publish_generation(path, gen, {"key_buckets": key_buckets})
-        if legacy:
-            artifact.clear_legacy_layout(path)
-    return {
-        "files_before": before,
-        "files_after": _nfiles(artifact.current_dir(path)),
-    }
+    return artifact.compact(
+        spark, path, _INDEX_META, "band-index-compact", stage
+    )
 
 
 def _check_index_width(index: DataFrame, num_hashes: int) -> None:

@@ -40,6 +40,12 @@ _DEFAULTS = {
     # q43 run on 4 cores, plus the JIT's work on the new classes).
     # 2048 holds the suite's working set for about 10 MB of Metaspace.
     "spark.sql.codegen.cache.maxEntries": "2048",
+    # That cache is keyed by the generated source, and a whole-stage
+    # class is named after its codegen stage id by default. AQE numbers
+    # the same stage differently from run to run, so a repeat plan
+    # would compile again; without the id in the name, the id lives only in a
+    # source comment, which the cache key leaves out.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 #: local-mode JVM sizing. Spark's 1g driver default is far too small for

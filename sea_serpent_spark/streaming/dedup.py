@@ -267,20 +267,13 @@ def incremental_dedup_sink(
     )
 
     batches_seen = {"n": 0}
-    # analyzed-frame cache for the index's main bucket layout (r13):
-    # one directory-tree listing + schema resolution per GENERATION
-    # instead of per micro-batch — appends only touch the _tail dir
-    # (re-listed fresh each call), compaction cuts a new generation
-    # (which misses this cache by key). Owned by the sink closure, so
-    # its lifetime is the streaming query's.
-    main_cache: dict = {}
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _batch_posture(batch_df, batch_parallelism)
         _sink_body(batch_df.sparkSession, batch_df)
 
     def _sink_body(spark, batch_df: DataFrame) -> None:
-        idx = read_band_index(spark, index_path, _main_cache=main_cache)
+        idx = read_band_index(spark, index_path)
         nb = key_buckets
         if nb is None and "kb" in idx.columns:
             nb = (idx.schema["kb"].metadata or {}).get("key_buckets")
@@ -319,14 +312,10 @@ def incremental_dedup_sink(
             ).select("id", "band", "key", "sig")
             if nb:
                 band_rows = band_rows.withColumn("kb", _kb_expr(nb))
-                write_band_index(
-                    band_rows, index_path, mode="append",
-                    key_buckets=nb, ids_hint=out["survivor_ids"],
-                )
-            else:
-                band_rows.write.mode("append").partitionBy(
-                    "band"
-                ).parquet(index_path)
+            write_band_index(
+                band_rows, index_path, mode="append",
+                key_buckets=nb, ids_hint=out["survivor_ids"],
+            )
         else:
             # materialize survivors BEFORE touching the index so the
             # band append below cannot observe its own output
@@ -337,15 +326,9 @@ def incremental_dedup_sink(
                     kept, text_col, id_col, num_hashes, bands, shingle_n,
                     key_buckets=nb,
                 )
-                if nb:
-                    write_band_index(
-                        band_rows, index_path, mode="append",
-                        key_buckets=nb,
-                    )
-                else:  # legacy flat layout — keep appends compatible
-                    band_rows.write.mode("append").partitionBy(
-                        "band"
-                    ).parquet(index_path)
+                write_band_index(
+                    band_rows, index_path, mode="append", key_buckets=nb,
+                )
             finally:
                 kept.unpersist()
         batches_seen["n"] += 1
@@ -355,19 +338,10 @@ def incremental_dedup_sink(
         )
         if not due and compact_tail_files:
             from ..operators import artifact as _art
-            from ..operators.incremental import _TAIL_DIR
 
-            tdir = os.path.join(
-                _art.current_dir(index_path), _TAIL_DIR
-            )
-            if os.path.isdir(tdir):
-                n_tail = sum(
-                    1
-                    for root, _, files in os.walk(tdir)
-                    for f in files
-                    if f.endswith(".parquet")
-                )
-                due = n_tail > compact_tail_files
+            due = _art.parquet_files(os.path.join(
+                _art.current_dir(index_path), _art.TAIL
+            )) > compact_tail_files
         if due:
             compact_band_index(spark, index_path, key_buckets=nb)
 
@@ -406,16 +380,12 @@ def incremental_semantic_dedup_sink(
     )
 
     batches_seen = {"n": 0}
-    # analyzed-frame cache for the IVF main layout, one per sink
-    # lifetime (r13 — the band sink's generation-keyed pattern)
-    main_cache: dict = {}
 
     def _body(spark, batch_df: DataFrame) -> None:
         out: dict = {}
         kept = incremental_semantic_dedup(
             batch_df, index_path, threshold=threshold,
             id_col=id_col, vec_col=vec_col, ingest_out=out,
-            _main_cache=main_cache,
         )
         if out.get("driver_path") and out.get("assigned") is not None:
             # r13 collapsed append: survivors' labels come from the

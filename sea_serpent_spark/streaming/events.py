@@ -307,10 +307,13 @@ def drop_stale_sinks(spark: SparkSession, prefix: str) -> None:
     CALLER CONTRACT: every prefix-matching view from a prior invocation
     must already be fully consumed (collected / written) — the lazy
     frame a previous call returned reads its view on execution, and
-    this sweep drops ALL prefix matches, not just dead ones."""
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.name.startswith(prefix):
-            spark.catalog.dropTempView(t.name)
+    this sweep drops ALL prefix matches, not just dead ones.
+
+    The listing is ``SHOW VIEWS``, a command that runs no Spark job;
+    ``catalog.listTables()`` launches several per call."""
+    for r in spark.sql("SHOW VIEWS").collect():
+        if r["isTemporary"] and r["viewName"].startswith(prefix):
+            spark.catalog.dropTempView(r["viewName"])
 
 
 def start_to_memory(stream: DataFrame, name: str, spark: SparkSession,

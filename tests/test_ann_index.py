@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from sea_serpent_spark.operators import ann_index as A
+from sea_serpent_spark.operators import artifact as ART
 from sea_serpent_spark.operators import similarity as S
 from sea_serpent_spark.operators.pinned import SEMDEDUP_CENTROIDS
 
@@ -98,8 +99,6 @@ def test_rebuild_is_versioned_and_probe_consistent(
     before the rebuild keeps its pinned (retained) generation, a fresh
     probe resolves the new one, and a second rebuild GCs the oldest."""
     import os
-
-    from sea_serpent_spark.operators import artifact as ART
 
     p = str(tmp_path / "idx")
     A.build_ivf_index(vectors, p, centroids=SEMDEDUP_CENTROIDS)
@@ -288,14 +287,14 @@ def test_append_equals_full_build(spark, vectors, tmp_path):
     ) == _ranks(A.ivf_index_pq_topk(spark, full_p, q, k=3, nprobe=2))
 
     # tail exists pre-compaction, is folded afterwards
-    src, _ = A._resolve(inc_p)
-    assert os.path.isdir(os.path.join(src, A._ANN_TAIL))
+    src = ART.current_dir(inc_p)
+    assert os.path.isdir(os.path.join(src, ART.TAIL))
     stats = A.compact_ivf_index(spark, inc_p)
     assert stats["files_after"] <= stats["files_before"]
-    src2, meta2 = A._resolve(inc_p)
-    assert src2 != src  # fresh generation
-    assert not os.path.isdir(os.path.join(src2, A._ANN_TAIL))
-    assert meta2.get("codebooks")  # sidecar carried over
+    gen2 = ART.open_generation(spark, inc_p, A._ANN_META)
+    assert gen2.dir != src  # fresh generation
+    assert not os.path.isdir(os.path.join(gen2.dir, ART.TAIL))
+    assert gen2.meta.get("codebooks")  # sidecar carried over
     assert _ranks(
         A.ivf_index_topk(spark, inc_p, q, k=3, nprobe=2)
     ) == _ranks(A.ivf_index_topk(spark, full_p, q, k=3, nprobe=2))
@@ -473,8 +472,17 @@ def test_semantic_driver_path_matches_distributed(
     assert drv == over
 
 
+def _frame_entries(spark, gen_dir):
+    """The shared artifact cache's entries for ``gen_dir`` in this
+    application."""
+    return [
+        v for k, v in ART._MAIN_FRAME_CACHE.items()
+        if k[0] == spark.sparkContext.applicationId and k[1] == gen_dir
+    ]
+
+
 def test_direct_probe_frame_cache_per_generation(spark, vectors, tmp_path):
-    """r14: direct (non-sink) probes reuse the analyzed main frame per
+    """Direct (non-sink) probes reuse the analyzed main frame per
     generation — appends stay visible (the tail is re-listed every
     call), compaction cuts a new generation and misses the cache by
     key, and results are identical cache-hot vs cache-cold."""
@@ -487,31 +495,21 @@ def test_direct_probe_frame_cache_per_generation(spark, vectors, tmp_path):
         centroids=SEMDEDUP_CENTROIDS,
     )
     q = ed.where(F.col("vec_id") < 20)
-    A._MAIN_FRAME_CACHE.clear()
+    ART._MAIN_FRAME_CACHE.clear()
     cold = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
-    src, _ = A._resolve(p)
-
-    def _key_for(gen_dir):
-        ks = [
-            k for k in A._MAIN_FRAME_CACHE
-            if k[0] == spark.sparkContext.applicationId
-            and k[1] == gen_dir
-        ]
-        assert len(ks) == 1, ks
-        return ks[0]
-
-    key = _key_for(src)
-    slot = A._MAIN_FRAME_CACHE[key]
-    frame_id = id(slot.get("df"))
-    # hot probe: same slot object served, same result
+    src = ART.current_dir(p)
+    (entry,) = _frame_entries(spark, src)
+    frame = entry[1]
+    assert frame is not None
+    # hot probe: same cached frame served, same result
     hot = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
     assert hot == cold
-    assert id(A._MAIN_FRAME_CACHE[key].get("df")) == frame_id
+    assert _frame_entries(spark, src)[0][1] is frame
     # an append lands in _tail only — the cached main frame stays
     # valid and the new rows are visible through the fresh tail read
     A.append_to_ivf_index(ed.where(F.col("vec_id") % 2 == 1), p)
     with_tail = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
-    assert id(A._MAIN_FRAME_CACHE[key].get("df")) == frame_id
+    assert _frame_entries(spark, src)[0][1] is frame
     full_ref = str(tmp_path / "ref")
     A.build_ivf_index(ed, full_ref, centroids=SEMDEDUP_CENTROIDS)
     assert with_tail == _ranks(
@@ -519,19 +517,18 @@ def test_direct_probe_frame_cache_per_generation(spark, vectors, tmp_path):
     )
     # compaction publishes a fresh generation → new cache key
     A.compact_ivf_index(spark, p)
-    src2, _ = A._resolve(p)
+    src2 = ART.current_dir(p)
     assert src2 != src
     post = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
     assert post == with_tail
-    _key_for(src2)  # the fresh generation got its own cache slot
+    assert len(_frame_entries(spark, src2)) == 1  # its own cache slot
 
 
 def test_probe_caches_survive_same_path_rebuild(spark, vectors, tmp_path):
-    """r14: deleting the artifact and REBUILDING at the same path
-    reuses the generation name (g00001) with new files — the meta and
-    frame caches must miss (sidecar stat identity), not serve frames
-    over deleted parquet paths. Caught live by the q43 decomposition
-    (bench.py's warm rerun replays exactly this in one process)."""
+    """Deleting the artifact and REBUILDING at the same path reuses the
+    generation name (g00001) with new files — the cache must miss
+    (sidecar stat identity), not serve frames over deleted parquet
+    paths. bench.py's warm rerun replays exactly this in one process."""
     import shutil
 
     ed = vectors.withColumn(
@@ -544,10 +541,10 @@ def test_probe_caches_survive_same_path_rebuild(spark, vectors, tmp_path):
         centroids=SEMDEDUP_CENTROIDS,
     )
     half = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
-    src1, _ = A._resolve(p)
+    src1 = ART.current_dir(p)
     shutil.rmtree(p)
     A.build_ivf_index(ed, p, centroids=SEMDEDUP_CENTROIDS)
-    src2, _ = A._resolve(p)
+    src2 = ART.current_dir(p)
     assert src1 == src2  # same generation NAME — the trap
     full = _ranks(A.ivf_index_topk(spark, p, q, k=3, nprobe=2))
     ref = str(tmp_path / "ref")
@@ -576,7 +573,6 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
         centroids=SEMDEDUP_CENTROIDS,
     )
     sc = spark.sparkContext
-    cache: dict = {}
     per_batch: list = []
     for b in range(3):
         lo = 200 + b * 150
@@ -589,7 +585,6 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
             batch = posture(batch, {**micro(8), FANOUT_CONF: "8"})
             kept = A.incremental_semantic_dedup(
                 batch, p, threshold=0.9, ingest_out=res,
-                _main_cache=cache,
             )
             kept.write.mode("append").parquet(str(tmp_path / "out"))
             A.append_to_ivf_index(kept.select("vec_id", "embedding"), p)

@@ -673,7 +673,6 @@ def test_local_probe_job_budget(spark, sf_dir, tmp_path):
         minhash_band_index(docs.where(F.col("doc_id") < 120)),
         root, key_buckets=4,
     )
-    main_cache: dict = {}
     per_batch: list = []
     for b in range(3):
         lo = 120 + b * 120
@@ -682,7 +681,7 @@ def test_local_probe_job_budget(spark, sf_dir, tmp_path):
         )
         sc.setJobGroup(f"probe-budget-{b}", "job-budget pin")
         try:
-            idx = read_band_index(spark, root, _main_cache=main_cache)
+            idx = read_band_index(spark, root)
             res: dict = {}
             kept = incremental_dedup(
                 batch, idx, key_buckets=4, ingest_out=res

@@ -748,3 +748,29 @@ def test_single_bucket_update_commit_job_budget(spark, base, mytable):
         1, 2, 3, 40, 5, 6, 70, 8, 9, 10,
     ]
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_repeat_commit_compiles_nothing(spark, base, mytable):
+    """A commit's op-log stamp (time and version) reaches generated code
+    by reference, not as inlined literals: a second update, and a third
+    delete, of the same shape compile no new classes."""
+    from test_util import _compiles
+
+    mytable.column1.update([x + 10 for x in range(1, 11)])
+    before = _compiles(spark)
+    base.table("mytable").column1.update([x + 20 for x in range(1, 11)])
+    assert _compiles(spark) - before == 0
+    assert base.table("mytable").to_frame()["column1"].tolist() == [
+        x + 20 for x in range(1, 11)
+    ]
+    # string literals are not inlined, so deletes by label share a shape
+    for label in "AB":
+        t = base.table("mytable")
+        t.delete_rows(t.labels == label)
+    before = _compiles(spark)
+    t = base.table("mytable")
+    t.delete_rows(t.labels == "C")
+    assert _compiles(spark) - before == 0
+    assert base.table("mytable").to_frame()["column1"].tolist() == [
+        x + 20 for x in range(4, 11)
+    ]

@@ -245,7 +245,9 @@ def test_streaming_dedup_against_static_index(spark, sf_dir):
     assert not (set(got["fp"]) & old_fps)
 
 
-@pytest.mark.parametrize("layout", ["legacy_flat", "bucketed_compacting"])
+@pytest.mark.parametrize(
+    "layout", ["legacy_flat", "bucketed_compacting", "unbucketed"]
+)
 def test_incremental_dedup_sink_loop(spark, sf_dir, tmp_path, layout):
     """The foreachBatch ingest loop: multi-batch stream deduped against
     a seeded index; survivors land in the output, their bands grow the
@@ -272,6 +274,8 @@ def test_incremental_dedup_sink_loop(spark, sf_dir, tmp_path, layout):
     sink_kw = {}
     if layout == "legacy_flat":
         I.minhash_band_index(hist).write.partitionBy("band").parquet(idxp)
+    elif layout == "unbucketed":  # versioned, no kb: appends reach it too
+        I.write_band_index(I.minhash_band_index(hist), idxp, key_buckets=None)
     else:
         I.write_band_index(
             I.minhash_band_index(hist, key_buckets=8), idxp, key_buckets=8
@@ -354,7 +358,6 @@ def test_sink_size_based_autocompaction(spark, sf_dir, tmp_path):
     from sea_serpent_spark.operators import artifact as ART
     from sea_serpent_spark.operators import dedup as D
     from sea_serpent_spark.operators import incremental as I
-    from sea_serpent_spark.operators.incremental import _TAIL_DIR
     from sea_serpent_spark.streaming.dedup import incremental_dedup_sink
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -368,13 +371,7 @@ def test_sink_size_based_autocompaction(spark, sf_dir, tmp_path):
     ]
 
     def tail_files(p):
-        t = os.path.join(ART.current_dir(p), _TAIL_DIR)
-        if not os.path.isdir(t):
-            return 0
-        return sum(
-            1 for root, _, files in os.walk(t)
-            for f in files if f.endswith(".parquet")
-        )
+        return ART.parquet_files(os.path.join(ART.current_dir(p), ART.TAIL))
 
     outs = {}
     for tag, kw in (("auto", {"compact_tail_files": 2}), ("plain", {})):
@@ -620,3 +617,27 @@ def test_sink_releases_batch_frame_when_append_fails(
         sink(batch, 0)
     assert len(appended) == 1
     assert not appended[0].storageLevel.useMemory
+
+
+def test_drop_stale_sinks_runs_no_job(spark):
+    """The sink sweep lists views with ``SHOW VIEWS``, which runs no
+    Spark job, and drops only the temporary views whose name carries
+    the prefix."""
+    from sea_serpent_spark.streaming.events import drop_stale_sinks
+
+    for name in ("sweep_sink_a", "sweep_sink_b", "sweep_keep"):
+        spark.range(3).createOrReplaceTempView(name)
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-sweep", "sweep job count")
+    try:
+        drop_stale_sinks(spark, "sweep_sink_")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("sink-sweep") == []
+    left = {
+        r["viewName"] for r in spark.sql("SHOW VIEWS").collect()
+        if r["viewName"].startswith("sweep_")
+    }
+    assert left == {"sweep_keep"}
+    assert spark.table("sweep_keep").count() == 3
+    spark.catalog.dropTempView("sweep_keep")

@@ -146,6 +146,22 @@ def test_repeat_plan_hits_codegen_cache(spark):
     assert _compiles(spark) - before == 0
 
 
+def test_stage_code_compiles_once_under_two_stage_ids(spark):
+    """The codegen stage id is not part of the generated source: a
+    stage compiled as stage 1 is a cache hit when the next plan numbers
+    the same code stage 2 (a union's second child)."""
+    a = spark.range(10).selectExpr("id + 9187 AS x")
+    b = spark.range(10).selectExpr("id * 9187 AS x")
+    a.collect()  # a's code is codegen stage 1
+    before = _compiles(spark)
+    spark.range(10).selectExpr("id - 9187 AS x").collect()
+    one_stage = _compiles(spark) - before
+    assert one_stage > 0
+    before = _compiles(spark)
+    assert len(b.union(a).collect()) == 20  # b is stage 1, a stage 2
+    assert _compiles(spark) - before == one_stage  # b's stage only
+
+
 def test_repeat_take_compiles_nothing(spark):
     """A bounded take over a union, repeated, generates the same source:
     ``ONE_SHOT_TAKE`` keeps ``LimitPushDown`` from adding per-branch
