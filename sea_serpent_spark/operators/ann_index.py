@@ -64,11 +64,11 @@ def _probe_frame(spark, q_plan, label_col: str = "label"):
     Trigger-sized batches: ONE ``take`` executes probe selection once;
     the probed label set and the row count come from the in-hand rows,
     and the join side is rebuilt as a driver-local relation (a
-    LocalRelation when small enough — its broadcast build then runs
-    driver-side with no Spark job and no codegen; see
-    ``util.local_rows_df``). Values round-trip exactly: floats are
-    IEEE754 doubles both sides, so the rebuilt literals score
-    bit-identically. Oversized batches keep the r10 checkpointed flow
+    LocalRelation when small enough; its broadcast build still runs a
+    Spark job, but over one scan task per row instead of a
+    parallelized list's full slice count — see ``util.local_rows_df``).
+    Values round-trip exactly: floats are IEEE754 doubles both sides,
+    so the rebuilt literals score bit-identically. Oversized batches keep the r10 checkpointed flow
     (one materialization serving the label collect, the count gate and
     the candidate join).
 
@@ -273,16 +273,20 @@ def incremental_semantic_dedup(
     becomes an ``isin`` predicate — no CC checkpoint/take, no loser
     checkpoint, no separate reingest job. Output bit-identical
     (parity-tested); oversized collects fall back to the distributed
-    flow. ``ingest_out`` receives ``survivor_ids``/``loser_ids`` and
-    ``assigned`` (the cached pinned-quantizer assignment) so the
-    streaming sink can append without re-assigning."""
+    flow. Both paths make the band probe's decision through the same
+    helpers (``incremental._ingest_keep_local`` /
+    ``_ingest_keep_distributed``).
+
+    ``ingest_out`` follows ``incremental_dedup``'s contract: on the
+    driver path ``driver_path=True``, ``survivor_ids`` and
+    ``survivors`` — here the cached pinned-quantizer assignment
+    (``id``, ``v``, ``label``) restricted to survivors, so the
+    streaming sink appends without re-assigning; the distributed flow
+    leaves it empty. The survivors frame stays persisted until the
+    caller's next operator boundary."""
     import pyspark.sql.functions as _F
 
-    from .dedup import (
-        BROADCAST_VERIFY_CAP,
-        _maybe_broadcast,
-        connected_components,
-    )
+    from .dedup import BROADCAST_VERIFY_CAP, _maybe_broadcast
     from .lifetime import _keep_cache, _retire_scope
 
     spark = new_df.sparkSession
@@ -360,11 +364,11 @@ def incremental_semantic_dedup(
         )
         .where(_F.col("cos") >= float(threshold))
     )
-    if ingest_out is not None:
-        ingest_out["assigned"] = delta
     from .incremental import (
         _DRIVER_PROBE_DOC_CAP,
         _DRIVER_PROBE_ROW_CAP,
+        _ingest_keep_distributed,
+        _ingest_keep_local,
     )
 
     if n_delta <= _DRIVER_PROBE_DOC_CAP:
@@ -403,18 +407,16 @@ def incremental_semantic_dedup(
             )
             .unionByName(reing)
         )
-        from .util import ONE_SHOT_TAKE, posture
+        from .util import ONE_SHOT_TAKE, MinRootUnionFind, posture
 
         rows = posture(payload, ONE_SHOT_TAKE).take(
             _DRIVER_PROBE_ROW_CAP + 1
         )
         if len(rows) <= _DRIVER_PROBE_ROW_CAP:
-            from .util import MinRootUnionFind
-
             uf = MinRootUnionFind()
             old: set = set()
-            delta_ids: list = []
-            losers: set = set()
+            delta_ids: dict = {}  # distinct, in take order
+            hits: list = []
             for r in rows:
                 t = r["__t"]
                 if t == "e":
@@ -422,69 +424,17 @@ def incremental_semantic_dedup(
                 elif t == "o":
                     old.add(r["id_a"])
                 elif t == "d":
-                    delta_ids.append(r["id_a"])
+                    delta_ids[r["id_a"]] = None
                 else:  # 'r' — already-ingested id (idempotent replay)
-                    losers.add(r["id_a"])
-            for ms in uf.components().values():
-                news = [m for m in ms if m not in old]
-                if len(news) != len(ms):  # indexed witness wins
-                    losers.update(news)
-                elif news:  # pure-new component: min id keeps
-                    news.remove(min(news))
-                    losers.update(news)
-            if ingest_out is not None:
-                ingest_out["driver_path"] = True
-                ingest_out["loser_ids"] = list(losers)
-                ingest_out["survivor_ids"] = [
-                    v for v in delta_ids if v not in losers
-                ]
-            if not losers:
-                return new_df
-            return new_df.where(
-                _F.col(id_col).isNull()
-                | ~_F.col(id_col).isin(list(losers))
+                    hits.append(r["id_a"])
+            return _ingest_keep_local(
+                uf, old, list(delta_ids), hits, new_df, id_col, delta,
+                ingest_out,
             )
-    comp = connected_components(pairs)
-    old_ids = pruned.select("id").distinct().withColumn(
-        "__old", _F.lit(True)
-    )
-    lab = comp.join(old_ids, "id", "left")
-    keep_new = (
-        lab.groupBy("component")
-        .agg(
-            _F.max(_F.coalesce("__old", _F.lit(False))).alias("has_old"),
-            _F.min(
-                _F.when(_F.col("__old").isNull(), _F.col("id"))
-            ).alias("min_new"),
-        )
-        .where(~_F.col("has_old"))
-        .select(_F.col("min_new").alias("id"))
-    )
-    new_in_pairs = comp.join(old_ids.select("id"), "id", "left_anti")
-    losers = new_in_pairs.join(keep_new, "id", "left_anti").select(
-        _F.col("id").alias("__lid")
-    )
-    # idempotent-replay drop: ids already ingested, checked against the
-    # FULL index's id column (an id reused for different content may
-    # live in a list the delta does not touch)
-    delta_ids = new_df.select(_F.col(id_col).alias("id")).distinct()
-    bcast = n_delta <= BROADCAST_VERIFY_CAP
-    idx_ids = full.select(
-        _F.col(id_col).alias("id")
-    )
-    if bcast:
-        reingested = idx_ids.join(
-            _F.broadcast(delta_ids), "id", "left_semi"
-        ).distinct().select(_F.col("id").alias("__lid"))
-    else:
-        reingested = delta_ids.join(
-            idx_ids, "id", "left_semi"
-        ).select(_F.col("id").alias("__lid"))
-    losers = losers.unionByName(reingested)
-    losers, _ = tracked_checkpoint(losers)
-    losers = _maybe_broadcast(losers, bcast)
-    return new_df.join(
-        losers, _F.col(id_col) == _F.col("__lid"), "left_anti"
+    return _ingest_keep_distributed(
+        new_df, id_col, pairs, pruned.select("id"),
+        full.select(_F.col(id_col).alias("id")),
+        n_delta <= BROADCAST_VERIFY_CAP,
     )
 
 

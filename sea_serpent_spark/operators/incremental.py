@@ -183,6 +183,19 @@ _ISIN_PRED_CAP = 20_000
 _BLOOM_DRIVER_CAP = 100_000
 
 
+def _bloom_bits(ids, m: int, k: int) -> bytearray:
+    """The ONE bit-setting loop: an ``m``-bit bitmap with each non-NULL
+    id's ``k`` positions set. The driver build and the per-partition
+    fold both run it, so their blobs are byte-identical."""
+    bm = bytearray((m + 7) // 8)
+    for v in ids:
+        if v is None:
+            continue
+        for p in _bloom_positions(str(v), m, k):
+            bm[p >> 3] |= 1 << (p & 7)
+    return bm
+
+
 def build_id_bloom_local(ids: list, fp: float = 0.01,
                          params: tuple[int, int] | None = None) -> bytes:
     """Bloom build from a DRIVER-LOCAL id list → the same blob format
@@ -195,14 +208,7 @@ def build_id_bloom_local(ids: list, fp: float = 0.01,
         m, k = params
     else:
         m, k = _bloom_params(len(ids), fp)
-    nb = (m + 7) // 8
-    bm = bytearray(nb)
-    for v in ids:
-        if v is None:
-            continue
-        for p in _bloom_positions(str(v), m, k):
-            bm[p >> 3] |= 1 << (p & 7)
-    return _struct.pack("<QQ", m, k) + bytes(bm)
+    return _struct.pack("<QQ", m, k) + bytes(_bloom_bits(ids, m, k))
 
 
 def build_id_bloom(ids: DataFrame, id_col: str = "id",
@@ -220,40 +226,22 @@ def build_id_bloom(ids: DataFrame, id_col: str = "id",
 
     head = ids.select(id_col).take(_BLOOM_DRIVER_CAP + 1)
     if len(head) <= _BLOOM_DRIVER_CAP:
-        if params is not None:
-            m, k = params
-        else:
-            m, k = _bloom_params(len(head), fp)
-        nb = (m + 7) // 8
-        bm = bytearray(nb)
-        for r in head:
-            v = r[0]
-            if v is None:
-                continue
-            for p in _bloom_positions(str(v), m, k):
-                bm[p >> 3] |= 1 << (p & 7)
-        return _struct.pack("<QQ", m, k) + bytes(bm)
+        return build_id_bloom_local([r[0] for r in head], fp, params)
     if params is not None:
         m, k = params
     else:
         n = ids.count()
         m, k = _bloom_params(n, fp)
-    nbytes = (m + 7) // 8
 
     def _part(rows):
-        bm = np.zeros(nbytes, dtype=np.uint8)
-        for r in rows:
-            v = r[0]
-            if v is None:
-                continue
-            for p in _bloom_positions(str(v), m, k):
-                bm[p >> 3] |= 1 << (p & 7)
-        yield bm
+        yield np.frombuffer(
+            _bloom_bits((r[0] for r in rows), m, k), dtype=np.uint8
+        )
 
     # fold, not reduce: an all-duplicate batch appends ZERO ids and an
     # empty RDD must still yield the (empty) bitmap
     agg = ids.select(id_col).rdd.mapPartitions(_part).fold(
-        np.zeros(nbytes, dtype=np.uint8),
+        np.zeros((m + 7) // 8, dtype=np.uint8),
         lambda a, b: np.bitwise_or(a, b),
     )
     return _struct.pack("<QQ", m, k) + agg.tobytes()
@@ -917,6 +905,105 @@ def _id_collision_check(idx_band0, dsig, bcast_delta, stats,
         )
 
 
+def _without_ids(df: DataFrame, col: str, losers: set) -> DataFrame:
+    """``df`` minus the rows whose ``col`` is a loser. An ``isin``
+    predicate, not an anti-join: NULL-id rows are kept, matching the
+    distributed anti-join (a NULL join key never matches)."""
+    if not losers:
+        return df
+    return df.where(F.col(col).isNull() | ~F.col(col).isin(list(losers)))
+
+
+def _ingest_keep_local(uf, old_ids: set, delta_ids: list, hits,
+                       new_df: DataFrame, id_col: str, cached: DataFrame,
+                       ingest_out: dict | None) -> DataFrame:
+    """The ingest decision on the driver, shared by the band and IVF
+    probes once each has gathered its inputs: duplicate edges unioned
+    into ``uf`` (min-root), the probed ``old_ids``, the distinct
+    ``delta_ids`` and the replay ``hits`` (delta ids already indexed).
+
+    A component with an indexed witness keeps no new rows (history
+    wins); a pure-new component keeps its min id; a replayed id is
+    dropped. Returns the kept rows of ``new_df`` — ``new_df`` itself
+    when nothing loses — and fills ``ingest_out`` with ``driver_path``,
+    ``survivor_ids`` and ``survivors`` (the probe's ``cached`` delta
+    frame, keyed ``id``, restricted to survivors)."""
+    losers = set(hits)
+    for ms in uf.components().values():
+        news = [m for m in ms if m not in old_ids]
+        if len(news) != len(ms):  # indexed witness — history wins
+            losers.update(news)
+        elif news:  # pure-new component: min id keeps
+            news.remove(min(news))
+            losers.update(news)
+    if ingest_out is not None:
+        ingest_out["driver_path"] = True
+        ingest_out["survivor_ids"] = [
+            v for v in delta_ids if v not in losers
+        ]
+        ingest_out["survivors"] = _without_ids(cached, "id", losers)
+    return _without_ids(new_df, id_col, losers)
+
+
+def _ingest_keep_distributed(new_df: DataFrame, id_col: str,
+                             pairs: DataFrame, old_ids: DataFrame,
+                             idx_ids: DataFrame, bcast: bool,
+                             reingested: DataFrame | None = None
+                             ) -> DataFrame:
+    """The same decision as :func:`_ingest_keep_local`, as a plan:
+    ``pairs`` are the delta-touching duplicate edges, ``old_ids`` the
+    probed index ids (pair endpoints ⊆ delta ∪ probed old docs, so
+    labeling against the PRUNED index is exact — and delta-bounded),
+    ``idx_ids`` the FULL index's id column for the replay drop, and
+    ``bcast`` says the delta is broadcast-sized. A caller that already
+    narrowed the replay check (the band probe's bloom) passes its
+    ``reingested`` frame of ``__lid`` ids instead."""
+    comp = connected_components(pairs)
+    old = old_ids.distinct().withColumn("__old", F.lit(True))
+    keep_new = (
+        comp.join(old, "id", "left")
+        .groupBy("component")
+        .agg(
+            F.max(F.coalesce("__old", F.lit(False))).alias("has_old"),
+            F.min(
+                F.when(F.col("__old").isNull(), F.col("id"))
+            ).alias("min_new"),
+        )
+        .where(~F.col("has_old"))
+        .select(F.col("min_new").alias("id"))
+    )
+    # new ids that appear in any duplicate pair but are not a keeper
+    new_in_pairs = comp.join(old.select("id"), "id", "left_anti")
+    losers = new_in_pairs.join(keep_new, "id", "left_anti").select(
+        F.col("id").alias("__lid")
+    )
+    # already-indexed ids: duplicates of history by construction (the
+    # idempotent replay) — the component logic never sees them, their
+    # only witness pair is a self-loop. Checked against the FULL index
+    # (an id reused for different content may live outside the probed
+    # buckets): broadcast the delta's ids and stream the index's id
+    # column past them — no index shuffle.
+    if reingested is None:
+        delta_ids = new_df.select(F.col(id_col).alias("id")).distinct()
+        if bcast:
+            reingested = idx_ids.join(
+                F.broadcast(delta_ids), "id", "left_semi"
+            ).distinct().select(F.col("id").alias("__lid"))
+        else:  # delta too big to broadcast — plain shuffle semi-join
+            reingested = delta_ids.join(
+                idx_ids, "id", "left_semi"
+            ).select(F.col("id").alias("__lid"))
+    losers = losers.unionByName(reingested)
+    # materialize the (delta-sized) loser set once — the anti-join
+    # would otherwise re-run the pairs + components + keeper subtree.
+    # losers ⊆ the delta's distinct ids, so ``bcast`` bounds them too.
+    losers, _ = tracked_checkpoint(losers)
+    return new_df.join(
+        _maybe_broadcast(losers, bcast),
+        F.col(id_col) == F.col("__lid"), "left_anti",
+    )
+
+
 def _dedup_local_probe(
     new_df: DataFrame,
     new_sigs: DataFrame,
@@ -937,13 +1024,13 @@ def _dedup_local_probe(
     ≤ ``_DRIVER_PROBE_DOC_CAP`` docs) and the pruned index's (id, sig)
     rows (job 2, ≤ ``_DRIVER_PROBE_ROW_CAP`` rows), then run banding,
     signature canonicalization, bucket pair enumeration, the agreement
-    estimate, min-root union-find, the witness/keeper rule, and the
-    bloom reingest test ALL on the driver. The per-batch Spark plan
-    shrinks to the minhash aggregation plus one broadcast-semi-join
-    index scan — the r13 path re-analyzed the full groups-agg +
-    rep-banding + probe-join + 3-way-payload tree every micro-batch,
-    and that Catalyst analysis (~1-1.5 s/batch, the r13 verdict's one
-    `weak`) is exactly what this removes.
+    estimate, min-root union-find, the bloom reingest test and the
+    witness/keeper rule (:func:`_ingest_keep_local`) ALL on the driver.
+    The per-batch Spark plan shrinks to the minhash aggregation plus
+    one broadcast-semi-join index scan — the r13 path re-analyzed the
+    full groups-agg + rep-banding + probe-join + 3-way-payload tree
+    every micro-batch, and that Catalyst analysis (~1-1.5 s/batch, the
+    r13 verdict's one `weak`) is exactly what this removes.
 
     Bit-parity with the distributed flow (tested, same suite as r13):
     banding replicates ``banded_signatures``' layout; the key bucket
@@ -1161,16 +1248,6 @@ def _dedup_local_probe(
             for mid in ids:
                 if mid != gid:
                     _union(gid, mid)
-    old_ids = set(old_by_id)
-    comps = uf.components()
-    losers: set = set()
-    for ms in comps.values():
-        news = [m for m in ms if m not in old_ids]
-        if len(news) != len(ms):  # indexed witness — history wins
-            losers.update(news)
-        elif news:  # pure-new component: min id keeps
-            news.remove(min(news))
-            losers.update(news)
     # reingest check (the idempotent-replay contract — by id, against
     # the FULL index): bloom membership on the driver; only positives
     # (real replays or bloom false positives) pay an exact verify job
@@ -1184,6 +1261,7 @@ def _dedup_local_probe(
             ]
     if cand is None:  # no usable bloom — verify every delta id exactly
         cand = [v for v in delta_ids if v is not None]
+    hits: list = []
     if cand:
         # candidates are bloom POSITIVES (a handful of replays/false
         # positives; the whole delta only when no bloom is usable) —
@@ -1194,25 +1272,18 @@ def _dedup_local_probe(
         # driver-side, and the match volume is bounded by the index
         # rows of ≤|cand| ids — skipping it removes the verify's only
         # shuffle.
-        hits = idx_band0.select("id").where(F.col("id").isin(cand))
-        losers.update(r["id"] for r in hits.collect())
+        hits = [
+            r["id"]
+            for r in idx_band0.select("id")
+            .where(F.col("id").isin(cand)).collect()
+        ]
     if stats is not None or on_id_collision == "error":
         _id_collision_check(
             idx_band0, new_sigs, True, stats, on_id_collision
         )
-    if ingest_out is not None:
-        ingest_out["driver_path"] = True
-        ingest_out["loser_ids"] = list(losers)
-        ingest_out["survivor_ids"] = [
-            v for v in delta_ids if v not in losers
-        ]
-    if not losers:
-        return new_df
-    # isin predicate instead of an anti-join: NULL-id rows are kept,
-    # matching the distributed anti-join (a NULL join key never
-    # matches)
-    return new_df.where(
-        F.col(id_col).isNull() | ~F.col(id_col).isin(list(losers))
+    return _ingest_keep_local(
+        uf, set(old_by_id), delta_ids, hits, new_df, id_col, new_sigs,
+        ingest_out,
     )
 
 
@@ -1293,10 +1364,16 @@ def incremental_dedup(
     flow (same banding layout, same rounding, same min-root canonical
     choice — parity-tested); oversized collects fall back to it.
 
-    ``ingest_out`` (r13): a dict the ingest sink passes to receive
-    ``survivor_ids`` (driver path only) and ``sigs`` (the cached
-    delta signature frame) — lets the sink derive the survivors' band
-    rows and bloom delta without re-reading text or re-hashing."""
+    ``ingest_out``: a dict the ingest sink passes; the contract is the
+    same for :func:`ann_index.incremental_semantic_dedup`. On the
+    driver path it receives ``driver_path=True``, ``survivor_ids``
+    (the distinct delta ids minus losers) and ``survivors`` (the
+    probe's cached delta frame — here the signatures, keyed ``id`` —
+    already restricted to survivors), so the sink derives the
+    survivors' band rows and bloom delta without re-reading text or
+    re-hashing; the distributed flow leaves it empty. The survivors
+    frame stays persisted until the caller's next operator boundary
+    (``lifetime``'s scope retire)."""
     if on_id_collision not in ("drop", "error"):
         raise ValueError(
             f"on_id_collision must be 'drop' or 'error', "
@@ -1318,16 +1395,12 @@ def incremental_dedup(
             jaccard_threshold, emit="spanning", prune_index=False,
         )
         pidx = index
-        if ingest_out is not None:
-            ingest_out["sigs"] = None
     else:
         _retire_scope()
         new_sigs = _keep_cache(
             minhash_signature(new_df, text_col, id_col, num_hashes,
                               shingle_n)
         )
-        if ingest_out is not None:
-            ingest_out["sigs"] = new_sigs
         # r14 local probe first: micro-batch-sized deltas resolve the
         # whole loser set from two small collects (delta sigs + pruned
         # old rows) with the banding/pairing/component logic on the
@@ -1355,38 +1428,6 @@ def incremental_dedup(
             jaccard_threshold, emit="spanning", _sigs=new_sigs,
             _raw=index, _n_delta=n_delta,
         )
-    comp = connected_components(pairs)
-    # pair endpoints ⊆ delta ∪ bucket-matching old docs, so labeling
-    # against the PRUNED index is exact — and delta-bounded
-    old_ids = pidx.select("id").distinct().withColumn(
-        "__old", F.lit(True)
-    )
-    lab = comp.join(old_ids, "id", "left")
-    keep_new = (
-        lab.groupBy("component")
-        .agg(
-            F.max(F.coalesce("__old", F.lit(False))).alias("has_old"),
-            F.min(
-                F.when(F.col("__old").isNull(), F.col("id"))
-            ).alias("min_new"),
-        )
-        .where(~F.col("has_old"))
-        .select(F.col("min_new").alias("id"))
-    )
-    # new ids that appear in any duplicate pair but are not a keeper
-    new_in_pairs = comp.join(old_ids.select("id"), "id", "left_anti")
-    losers = new_in_pairs.join(keep_new, "id", "left_anti").select(
-        F.col("id").alias("__lid")
-    )
-    # already-indexed ids: duplicates of history by construction (the
-    # idempotent-replay case above) — the component logic never sees
-    # them because their only witness pair is a self-loop. This check
-    # must run against the FULL index (pruning sees only the delta's
-    # buckets; an id reused for different content may live elsewhere),
-    # so flip the semi-join: broadcast the delta's ids and stream the
-    # index's id column past them — no index shuffle, and only band 0's
-    # partition directories are read when the index is band-partitioned
-    # (every doc has a band-0 row).
     delta_ids = new_df.select(F.col(id_col).alias("id")).distinct()
     # the cached signature count (an upper bound on distinct delta ids)
     # gates the broadcast for free; only the unpruned path pays a count
@@ -1427,19 +1468,6 @@ def incremental_dedup(
                     .distinct()
                     .select(F.col("id").alias("__lid"))
                 )
-    if reingested is None:
-        if bcast_delta:
-            reingested = (
-                idx_band0.select("id")
-                .join(F.broadcast(delta_ids), "id", "left_semi")
-                .distinct()
-                .select(F.col("id").alias("__lid"))
-            )
-        else:  # delta too big to broadcast — plain shuffle semi-join
-            reingested = delta_ids.join(
-                idx_band0.select("id"), "id", "left_semi"
-            ).select(F.col("id").alias("__lid"))
-    losers = losers.unionByName(reingested)
     if stats is not None or on_id_collision == "error":
         dsig = new_sigs if prune_index else minhash_signature(
             new_df, text_col, id_col, num_hashes, shingle_n
@@ -1447,17 +1475,11 @@ def incremental_dedup(
         _id_collision_check(
             idx_band0, dsig, bcast_delta, stats, on_id_collision
         )
-    # materialize the (delta-sized) loser set once — the broadcast
-    # gate and the anti-join would otherwise EACH re-run the pairs +
-    # components + keeper subtree. Gate the broadcast on the DELTA
-    # size already in hand: losers ⊆ the delta's distinct ids by
-    # construction (pair losers and reingested ids are both delta
-    # ids), so bcast_delta bounds them and the separate count job the
-    # gate used to run on the checkpoint is free (r12 probe-floor fold).
-    losers, _ = tracked_checkpoint(losers)
-    losers = _maybe_broadcast(losers, bcast_delta)
-    return new_df.join(
-        losers, F.col(id_col) == F.col("__lid"), "left_anti"
+    # only band 0's partition directories are read for the replay drop
+    # when the index is band-partitioned (every doc has a band-0 row)
+    return _ingest_keep_distributed(
+        new_df, id_col, pairs, pidx.select("id"), idx_band0.select("id"),
+        bcast_delta, reingested,
     )
 
 

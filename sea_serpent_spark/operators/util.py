@@ -287,12 +287,15 @@ def _normalizer(dt):
 def local_rows_df(spark, rows, schema: str):
     """Literal LocalRelation frame (r15). ``spark.createDataFrame``
     over a Python list parallelizes it into an RDD-backed scan
-    (``LogicalRDD``), so every consumer — in particular every
-    BROADCAST build over it — pays a real Spark job plus a
-    whole-stage-codegen compile on first execution (measured: a
-    5-row broadcast build side costs ~1-1.5 s cold, ~0.4 s warm; the
-    LocalRelation twin is driver-collected with neither). A VALUES
-    relation folds to a ``LocalTableScan``.
+    (``LogicalRDD``) of ``defaultParallelism`` slices of pickled rows.
+    A VALUES relation folds to a ``LocalTableScan`` instead, whose
+    scan has one task per row up to that parallelism. A BROADCAST
+    build over either form still runs its own Spark job: a 5-row
+    broadcast join collects in 2 jobs both ways (at a default
+    parallelism of 32: 5 and 32 tasks local, 32 and 32 parallelized;
+    at 4: 4 and 4 both ways). So the local form saves the
+    parallelized scan's surplus slices and pickled-row decoding, not a
+    job.
 
     Values are INLINED as SQL literals in one statement — one py4j
     round trip total (the named-parameter form measured ~5 ms/cell of

@@ -283,7 +283,7 @@ def incremental_dedup_sink(
             num_hashes, bands, shingle_n, jaccard_threshold,
             key_buckets=nb, ingest_out=out,
         )
-        if out.get("driver_path") and out.get("sigs") is not None:
+        if out.get("driver_path"):
             # r15 NOTE: a driver-built local band frame (from the
             # probe's collected delta sigs) was tried here and REVERTED
             # after an interleaved A/B showed +4-5 s PER BATCH: a
@@ -292,23 +292,16 @@ def incremental_dedup_sink(
             # 32 default slices -> ~4 s), while this JVM path scans the
             # already-persisted signature cache with no Python anywhere.
             # See BENCH_NOTES "round 15".
-            # r13 collapsed append path: the probe already holds the
-            # loser/survivor id lists and the delta's cached signature
-            # frame — derive the survivors' band rows from the cache
-            # (zero re-shingling, zero text re-read) and build the
-            # bloom delta locally from the survivor ids (zero jobs).
-            # No persist needed: the output write is the only scan of
-            # the batch data, and the band append scans the sig cache.
+            # r13 collapsed append path: the probe hands over the
+            # survivor ids and its cached signature frame restricted to
+            # survivors — derive the band rows from the cache (zero
+            # re-shingling, zero text re-read) and build the bloom
+            # delta locally from the survivor ids (zero jobs). No
+            # persist needed: the output write is the only scan of the
+            # batch data, and the band append scans the sig cache.
             kept.write.mode("append").parquet(output_path)
-            losers = out["loser_ids"]
-            keep_sigs = out["sigs"]
-            if losers:
-                keep_sigs = keep_sigs.where(
-                    F.col("id").isNull()
-                    | ~F.col("id").isin(list(losers))
-                )
             band_rows = banded_signatures(
-                keep_sigs, num_hashes, bands, keep=("sig",)
+                out["survivors"], num_hashes, bands, keep=("sig",)
             ).select("id", "band", "key", "sig")
             if nb:
                 band_rows = band_rows.withColumn("kb", _kb_expr(nb))
@@ -387,22 +380,16 @@ def incremental_semantic_dedup_sink(
             batch_df, index_path, threshold=threshold,
             id_col=id_col, vec_col=vec_col, ingest_out=out,
         )
-        if out.get("driver_path") and out.get("assigned") is not None:
+        if out.get("driver_path"):
             # r13 collapsed append: survivors' labels come from the
             # probe's cached pinned-quantizer assignment — no
             # re-assignment, no persist (the output write is the only
             # scan of the batch data; the append scans the cache)
             kept.write.mode("append").parquet(output_path)
-            surv = out["assigned"]
-            if out["loser_ids"]:
-                surv = surv.where(
-                    F.col("id").isNull()
-                    | ~F.col("id").isin(list(out["loser_ids"]))
-                )
             append_to_ivf_index(
                 kept.select(id_col, vec_col), index_path,
                 id_col=id_col, vec_col=vec_col,
-                _assigned=surv.select(
+                _assigned=out["survivors"].select(
                     F.col("id").alias(id_col),
                     F.col("v").alias(vec_col),
                     "label",

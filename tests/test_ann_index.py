@@ -459,6 +459,10 @@ def test_semantic_driver_path_matches_distributed(
     drv, out_drv = survivors()
     assert out_drv.get("driver_path") is True
     assert sorted(out_drv["survivor_ids"]) == drv
+    # the sink's hand-off: the cached assignment restricted to survivors
+    assert sorted(
+        r["id"] for r in out_drv["survivors"].select("id").collect()
+    ) == drv
     # indexed ids 280-299 are reingest drops — never survivors
     assert all(v >= 300 for v in drv)
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)

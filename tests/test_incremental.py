@@ -369,10 +369,13 @@ def test_legacy_flat_layout_migrates_on_compaction(spark, halves, tmp_path):
     assert before == after and before
 
 
-def test_id_bloom_primitive(spark):
+def test_id_bloom_primitive(spark, monkeypatch):
     """Bloom invariants: every inserted id is a member (NO false
     negatives — the correctness contract); absent ids false-positive at
-    roughly the design rate, not wildly above it."""
+    roughly the design rate, not wildly above it. ``build_id_bloom``
+    writes the blob ``build_id_bloom_local`` writes, byte for byte, on
+    both sides of ``_BLOOM_DRIVER_CAP`` (NULL ids and duplicates
+    included, free or pinned parameters)."""
     from sea_serpent_spark.operators.incremental import (
         _bloom_contains,
         _load_id_bloom,
@@ -393,6 +396,15 @@ def test_id_bloom_primitive(spark):
     )
     assert fp < 4000 * 0.05, fp
     assert _load_id_bloom("/nonexistent") is None
+    vals = [f"doc_{i % 700}" if i % 11 else None for i in range(1000)]
+    df = spark.createDataFrame([(v,) for v in vals], "id string")
+    df = df.repartition(4)
+    for params in (None, (4096, 3)):
+        want = I.build_id_bloom_local(vals, params=params)
+        monkeypatch.setattr(I, "_BLOOM_DRIVER_CAP", 100_000)
+        assert build_id_bloom(df, params=params) == want  # driver take
+        monkeypatch.setattr(I, "_BLOOM_DRIVER_CAP", 100)
+        assert build_id_bloom(df, params=params) == want  # fold
 
 
 def test_reingest_check_through_bloom(spark, halves, tmp_path):
@@ -560,6 +572,10 @@ def test_driver_path_matches_distributed(spark, halves, tmp_path,
     drv, out_drv = survivors()
     assert out_drv.get("driver_path") is True
     assert sorted(out_drv["survivor_ids"]) == drv
+    # the sink's hand-off: the signature cache restricted to survivors
+    assert sorted(
+        r["id"] for r in out_drv["survivors"].select("id").collect()
+    ) == drv
     # force the distributed flow: doc cap 0 disqualifies the gate
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     dist, out_dist = survivors()
@@ -614,6 +630,87 @@ def test_driver_path_string_ids(spark, tmp_path):
     assert out.get("driver_path") is True
     # the duplicate pair {'2','10'} keeps '10' (lexicographic min)
     assert kept == sorted(["10", "b", "a9"])
+
+
+# one hand-built ingest decision per id type: edges, probed old ids,
+# the full index's ids and a delta holding a replayed id and a NULL id
+_RULE_CASES = {
+    "int": dict(
+        idt="long",
+        # {1,10,11}: indexed witness 1 drops 10 and 11; {13,12,14} and
+        # {21,20}: pure-new, min id keeps
+        edges=[(1, 10), (10, 11), (13, 12), (13, 14), (21, 20)],
+        old=[1, 2, 3],
+        index=[1, 2, 3, 50],
+        delta=[10, 11, 12, 13, 14, 20, 21, 30, 50, None, 12],
+        kept=[12, 12, 20, 30, None],
+    ),
+    "str": dict(
+        idt="string",
+        # '10' < '9' in the id column's own (code-point) order
+        edges=[("a1", "x"), ("x", "y"), ("9", "10"), ("z", "zz")],
+        old=["a1", "b2"],
+        index=["a1", "b2", "r"],
+        delta=["x", "y", "9", "10", "z", "zz", "q", "r", None],
+        kept=["10", "q", "z", None],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RULE_CASES))
+def test_ingest_rule_same_on_both_paths(spark, case):
+    """The ingest decision both probes share, pinned directly: a
+    component with an indexed witness keeps no new rows, a pure-new
+    component keeps its min id, a replayed id is dropped and NULL-id
+    rows are kept. The driver helper and the distributed helper (both
+    broadcast settings) keep the same rows and the same survivor ids,
+    and the driver's survivor hand-off holds exactly those ids."""
+    from sea_serpent_spark.operators.util import MinRootUnionFind
+
+    c = _RULE_CASES[case]
+    idt = c["idt"]
+    new_df = spark.createDataFrame(
+        [(v, f"t{i}") for i, v in enumerate(c["delta"])],
+        f"doc_id {idt}, text string",
+    )
+    cached = new_df.select(F.col("doc_id").alias("id"), "text")
+
+    def ids(vals):
+        return spark.createDataFrame([(v,) for v in vals], f"id {idt}")
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.collect()),
+            key=lambda t: (t[0] is None, t[0] or "", t[1]),
+        )
+
+    def id_list(vals):
+        return sorted(vals, key=lambda v: (v is None, v or ""))
+
+    uf = MinRootUnionFind()
+    for a, b in c["edges"]:
+        uf.union(a, b)
+    out: dict = {}
+    drv = I._ingest_keep_local(
+        uf, set(c["old"]), list(dict.fromkeys(c["delta"])),
+        [v for v in c["delta"] if v in set(c["index"])],
+        new_df, "doc_id", cached, out,
+    )
+    assert out["driver_path"] is True
+    assert id_list(r["doc_id"] for r in drv.collect()) == id_list(c["kept"])
+    assert id_list(out["survivor_ids"]) == id_list(set(c["kept"]))
+    assert id_list(
+        r["id"] for r in out["survivors"].collect()
+    ) == id_list(c["kept"])
+    pairs = spark.createDataFrame(c["edges"], f"id_a {idt}, id_b {idt}")
+    for bcast in (True, False):
+        dist = I._ingest_keep_distributed(
+            new_df, "doc_id", pairs, ids(c["old"]), ids(c["index"]), bcast,
+        )
+        assert rows(dist) == rows(drv), bcast
+        assert id_list(
+            {r["doc_id"] for r in dist.collect()}
+        ) == id_list(out["survivor_ids"])
 
 
 def test_xxh64_matches_spark(spark):
@@ -687,13 +784,9 @@ def test_local_probe_job_budget(spark, sf_dir, tmp_path):
                 batch, idx, key_buckets=4, ingest_out=res
             )
             kept.write.mode("append").parquet(str(tmp_path / "out"))
-            ks = res["sigs"]
-            if res["loser_ids"]:
-                ks = ks.where(
-                    F.col("id").isNull()
-                    | ~F.col("id").isin(list(res["loser_ids"]))
-                )
-            br = banded_signatures(ks, 16, 4, keep=("sig",)).select(
+            br = banded_signatures(
+                res["survivors"], 16, 4, keep=("sig",)
+            ).select(
                 "id", "band", "key", "sig"
             ).withColumn("kb", _kb_expr(4))
             write_band_index(
