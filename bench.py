@@ -55,8 +55,8 @@ def main() -> None:
     ticks_start = _cpu_ticks()
     # optional extra cold passes per slot (SPARK_GRAFT_BENCH_REPEAT=N):
     # per-slot best-of feeds best_total below; default 1 keeps the
-    # driver's wall-clock budget (the >2s warm rerun is already a
-    # second full pass and participates in best-of either way)
+    # driver's wall-clock budget (the warm rerun is already a second
+    # full pass and participates in best-of either way)
     try:
         repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "1")))
     except ValueError:
@@ -156,34 +156,34 @@ def main() -> None:
                         f"# bench repeat error {name}: {re_err}",
                         file=sys.stderr,
                     )
-            if dt > 2.0:
-                # slow queries also get a WARM run (codegen classes
-                # cached, JIT paid; the sidecar's warm compile count
-                # shows it) — reported separately so cold stays the
-                # headline: the round-2 best-of-two silently redefined
-                # the metric and flattered round-over-round
-                # comparisons. Same failure isolation as the repeat
-                # passes: a warm-pass crash keeps the cold number.
-                try:
-                    _quiesce()  # warm measures the plan, not the cold
-                    # run's leftover checkpoint blocks / GC debt
-                    c0 = _compiled()
-                    t0 = time.perf_counter()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    warm_times[name] = round(
-                        time.perf_counter() - t0, 3
-                    )
-                    _record(name, "warm", c0)
-                    best_times[name] = min(
-                        best_times[name], warm_times[name]
-                    )
-                except Exception as warm_err:
-                    print(
-                        f"# bench warm error {name}: {warm_err}",
-                        file=sys.stderr,
-                    )
+            # every slot also gets a WARM run (codegen classes cached,
+            # JIT paid; the sidecar's warm compile count shows it), so
+            # warm and best totals always cover the same slot set —
+            # reported separately so cold stays the headline: the
+            # round-2 best-of-two silently redefined the metric and
+            # flattered round-over-round comparisons. Same failure
+            # isolation as the repeat passes: a warm-pass crash keeps
+            # the cold number.
+            try:
+                _quiesce()  # warm measures the plan, not the cold
+                # run's leftover checkpoint blocks / GC debt
+                c0 = _compiled()
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                warm_times[name] = round(
+                    time.perf_counter() - t0, 3
+                )
+                _record(name, "warm", c0)
+                best_times[name] = min(
+                    best_times[name], warm_times[name]
+                )
+            except Exception as warm_err:
+                print(
+                    f"# bench warm error {name}: {warm_err}",
+                    file=sys.stderr,
+                )
         except Exception as e:  # a failing query must not hide the rest
             print(f"# bench error {name}: {e}", file=sys.stderr)
             dt = -1.0
@@ -282,8 +282,8 @@ def main() -> None:
                 },
                 "warm_outliers": warm_outliers,
                 # headline value = COLD sum (first-execution times, what a
-                # one-shot pipeline pays); warm re-runs of >2s queries are
-                # reported alongside, never substituted
+                # one-shot pipeline pays); warm re-runs of every query
+                # are reported alongside, never substituted
                 "metric": "workload_total",
                 "unit": "sec",
                 "sf": sf,
@@ -301,7 +301,7 @@ def main() -> None:
                 "warm_total": round(warm_total, 3),
                 "warm_total_ex_outliers": round(warm_total_ex, 3),
                 # best_total = per-slot min over every pass taken (cold
-                # passes + the >2s warm rerun) — the load-robust
+                # passes + the warm rerun) — the load-robust
                 # round-over-round comparator (r14); `value` below stays
                 # the first-pass cold sum, the headline since round 1
                 "best_total": round(best_total, 3),

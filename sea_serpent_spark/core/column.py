@@ -233,10 +233,9 @@ class Column:
         """``value in column`` → a pushdown 1-row take: one job that
         stops each partition at its first match, with no limit operator
         (whose JVM-wide numbered counter would recompile every call)."""
-        from ..operators.util import ONE_SHOT_TAKE, posture
+        from ..operators.util import has_rows
 
-        hits = self.table.df.where(self.expr == _rhs(value))
-        return len(posture(hits, ONE_SHOT_TAKE).take(1)) > 0
+        return has_rows(self.table.df.where(self.expr == _rhs(value)))
 
     # -- aggregates --------------------------------------------------------
     def __len__(self) -> int:  # base.py:1720-1722

@@ -2013,7 +2013,7 @@ class Base:
         ``DeltaUnsupportedOperationException`` on duplicate matches."""
         import pandas as pd
 
-        from ..operators.util import tracked_checkpoint
+        from ..operators.util import has_rows, tracked_checkpoint
 
         df = table.df
         spdf = None
@@ -2055,7 +2055,7 @@ class Base:
                     ],
                 )
             )
-            if s_keyed.where(F.col("__src_cnt") > 1).limit(1).count():
+            if has_rows(s_keyed.where(F.col("__src_cnt") > 1)):
                 raise ValueError("duplicate keys in upsert source")
             src = s_keyed.drop("__src_cnt")
         # update_cols=None → every common non-key column; an explicit []

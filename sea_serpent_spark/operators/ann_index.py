@@ -38,7 +38,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from . import artifact
+from . import artifact, similarity
 from .similarity import dot, ivf_assign, kmeans_fit, norm
 from .util import fan_out, tracked_checkpoint
 
@@ -76,15 +76,14 @@ def _probe_frame(spark, q_plan, label_col: str = "label"):
     checkpoint reads the partitions the take already computed: probe
     selection runs once per row on both paths. The cache is dropped
     once the rows are in hand or the checkpoint is filled."""
+    from .dedup import _verify_gate
     from .lifetime import _keep_cache
-    from .util import ONE_SHOT_TAKE, local_rows_df, posture
+    from .util import local_rows_df, take_upto
 
     _keep_cache(q_plan)
     try:
-        rows = posture(q_plan, ONE_SHOT_TAKE).take(
-            _LOCAL_PROBE_QUERY_CAP + 1
-        )
-        if len(rows) <= _LOCAL_PROBE_QUERY_CAP:
+        rows = take_upto(q_plan, _LOCAL_PROBE_QUERY_CAP)
+        if rows is not None:
             probed = sorted({int(r[label_col]) for r in rows})
             q = local_rows_df(
                 spark, [tuple(r) for r in rows], q_plan.schema
@@ -99,7 +98,7 @@ def _probe_frame(spark, q_plan, label_col: str = "label"):
             for r in q.select(label_col).distinct().collect()
         }
     )  # ≤ len(centroids) rows — constant-bounded collect
-    return q, probed, q.count() <= _QUERY_BROADCAST_CAP
+    return q, probed, _verify_gate(q, None, _QUERY_BROADCAST_CAP)
 
 
 def build_ivf_index(
@@ -407,12 +406,10 @@ def incremental_semantic_dedup(
             )
             .unionByName(reing)
         )
-        from .util import ONE_SHOT_TAKE, MinRootUnionFind, posture
+        from .util import MinRootUnionFind, take_upto
 
-        rows = posture(payload, ONE_SHOT_TAKE).take(
-            _DRIVER_PROBE_ROW_CAP + 1
-        )
-        if len(rows) <= _DRIVER_PROBE_ROW_CAP:
+        rows = take_upto(payload, _DRIVER_PROBE_ROW_CAP)
+        if rows is not None:
             uf = MinRootUnionFind()
             old: set = set()
             delta_ids: dict = {}  # distinct, in take order
@@ -460,15 +457,6 @@ def compact_ivf_index(spark: SparkSession, path: str) -> dict:
     return artifact.compact(spark, path, _ANN_META, "ivf-compact", stage)
 
 
-#: Above this many centroid×dim literal terms, probe selection switches
-#: from the constant-folded expression to an Arrow-batched numpy UDF:
-#: the literal form embeds k·dim literals inside k sorted structs, and
-#: Catalyst analysis/codegen of that tree grows superlinearly — the
-#: r10 rehearsal measured a k=64/dim=64 probe spending MORE wall in
-#: plan compilation than brute force spends scanning (BENCH_NOTES r10).
-_PROBE_LITERAL_CAP = 1024
-
-
 def ivf_probes(
     df: DataFrame,
     centroids: list[list[float]],
@@ -481,17 +469,15 @@ def ivf_probes(
     ascending on ties.
 
     Two physical forms, same semantics: small quantizers (k·dim ≤
-    ``_PROBE_LITERAL_CAP``) use the pure broadcast-literal expression
-    (no shuffle, no join, bit-pinned by the q41 oracle — array_sort
-    over struct(−affinity, index), the lexicographic tie rule the SQL
-    replays); larger quantizers use an Arrow-batched numpy UDF (the
-    centroid matrix rides the closure), because the literal tree's
-    Catalyst analysis cost grows superlinearly in k·dim and at k=64
-    already exceeded the probe's own execution (r10 rehearsal). The
-    UDF path is parity-tested against the literal path; its float64
-    matrix product may differ from the in-order fold in the last ulp,
-    which can only matter on exact affinity ties — the oracle-pinned
-    path stays literal."""
+    ``similarity._LITERAL_TREE_CAP``) use the pure broadcast-literal
+    expression (no shuffle, no join, bit-pinned by the q41 oracle —
+    array_sort over struct(−affinity, index), the lexicographic tie
+    rule the SQL replays); larger quantizers use an Arrow-batched numpy
+    UDF over ``similarity._affinities`` (the centroid matrix rides the
+    closure). The UDF path is parity-tested against the literal path;
+    its float64 matrix product may differ from the in-order fold in the
+    last ulp, which can only matter on exact affinity ties — the
+    oracle-pinned path stays literal."""
     for staging in ("__an",):
         if staging in df.columns:
             raise ValueError(
@@ -500,7 +486,7 @@ def ivf_probes(
             )
     k = len(centroids)
     dim = len(centroids[0]) if k else 0
-    if k * dim > _PROBE_LITERAL_CAP:
+    if k * dim > similarity._LITERAL_TREE_CAP:
         from pyspark.sql.types import ArrayType, IntegerType
 
         C = np.asarray(centroids, dtype=np.float64)  # (k, dim)
@@ -510,11 +496,9 @@ def ivf_probes(
         def _probes(vs: pd.Series) -> pd.Series:
             res: list = [None] * len(vs)
             for i, v in enumerate(vs):
-                if v is None or len(v) != C.shape[1]:
+                aff = similarity._affinities(C, v)
+                if aff is None:
                     continue
-                u = np.asarray(v, dtype=np.float64)
-                nv = max(float(np.sqrt((u * u).sum())), 1e-12)
-                aff = C @ u / nv
                 # affinity desc, index asc on ties == lexicographic
                 # sort of (−aff, index); argsort is stable, so sorting
                 # −aff alone gives index-ascending tie order

@@ -34,8 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from .hashing import MINHASH_COEFFS, P, SIMHASH_BITS, h32, h48
 from .lifetime import _keep_cache, _retire_scope, _sweep
 from .text import fingerprint, words
-from .util import (ONE_SHOT_TAKE, SCALAR, fan_out, local_rows_df, posture,
-                   rebind, release_all, spread as _spread,
+from .util import (fan_out, has_rows, local_rows_df, posture, rebind,
+                   release_all, spread as _spread, take_upto,
                    tracked_checkpoint)
 
 #: Default row cap for broadcasting the doc-level verify side of a pair
@@ -856,18 +856,15 @@ def ngram_jaccard_pairs(
     cap_v = 64 * max_bitmap_words
     # r14: the probe take is a partial-agg-first aggregate (the
     # exchange carries per-partition (token, count) partials, never
-    # corpus rows) whose FIRST job should scan every post-shuffle
-    # partition — in the bitmap regime the take exhausts the frame by
-    # definition, so executeTake's 1→4→16 scale-up is pure retry
-    # latency. AQE off + one-shot width folds the stage wave into one
-    # job; the CACHE registration must happen in that posture too
-    # (persist() compiles the InMemoryRelation's child plan with the
-    # conf of its session), so the cached dfreq plan is the static one
-    # — vocabulary-sized partitions either way.
-    dfreq = _keep_cache(posture(dfreq, {**SCALAR, **ONE_SHOT_TAKE}))
-    head = dfreq.take(cap_v + 1)
+    # corpus rows). AQE off folds its stage wave into one job; the
+    # CACHE registration must happen in that posture too (persist()
+    # compiles the InMemoryRelation's child plan with the conf of its
+    # session), so the cached dfreq plan is the static one —
+    # vocabulary-sized partitions either way.
+    dfreq = _keep_cache(posture(dfreq))
+    head = take_upto(dfreq, cap_v)
     dfreq = rebind(dfreq, df.sparkSession)
-    if len(head) <= cap_v:
+    if head is not None:
         ordered = sorted((int(r["df"]), r["s"]) for r in head)
         tid_of: dict[str, int] | None = {
             s: i + 1 for i, (_, s) in enumerate(ordered)
@@ -1337,8 +1334,8 @@ def connected_components(
     and with doubling 25 rounds cover graphs of diameter ~2²⁵.
 
     SMALL-GRAPH FAST PATH: edge sets at or under
-    ``small_graph_threshold`` rows (counted on the already-materialized
-    edge checkpoint — one cheap job, never an ungated collect) are
+    ``small_graph_threshold`` rows (decided by one bounded take over
+    the edge checkpoint, which also delivers the rows) are
     solved by a driver-side min-root union-find instead of the
     distributed loop. The distributed loop costs ~0.5 s of fixed job
     overhead PER ROUND regardless of size — for the metadata-sized
@@ -1375,13 +1372,11 @@ def connected_components(
         storage_level=StorageLevel.DISK_ONLY,
     )
     if small_graph_threshold:
-        # ONE incremental-scan job decides the gate AND (when small)
-        # delivers the edge rows: take(threshold+1) over the
-        # checkpointed edges stops after the first partitions on a big
-        # graph and replaces the previous count job + full collect job
-        # on a small one (r12 probe-floor fold).
-        head = edges.take(small_graph_threshold + 1)
-        if len(head) <= small_graph_threshold:
+        # ONE bounded take decides the gate AND (when small) delivers
+        # the edge rows, replacing a count job + full collect job on a
+        # small graph (r12 probe-floor fold).
+        head = take_upto(edges, small_graph_threshold)
+        if head is not None:
             out = _union_find_local(
                 edges, pairs.schema[id_a].dataType, rows=head
             )
@@ -1451,12 +1446,10 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        changed = (
+        changed = has_rows(
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
             .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
         )
         # the superseded round's label blocks are dead weight the moment
         # ``changed`` is computed — O(rounds) un-freed node-sized frames
@@ -1470,7 +1463,7 @@ def connected_components(
         round_walls.append(round(time.perf_counter() - _t0, 2))
         if stats is not None:
             stats["rounds"] += 1
-        if changed == 0:
+        if not changed:
             superseded.append(edges_h)
             release_all(superseded)
             return labels

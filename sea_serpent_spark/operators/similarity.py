@@ -465,12 +465,27 @@ def kmeans_fit(
     return cents
 
 
-#: Same cap as ann_index._PROBE_LITERAL_CAP and for the same measured
-#: reason (r10 rehearsal): the literal argmax tree embeds k·dim literal
-#: terms and its Catalyst analysis grows superlinearly — above the cap
-#: the assignment runs as an Arrow-batched numpy UDF instead. The
-#: oracle-pinned k=8 paths (q41/q43) stay on the literal form.
-_ASSIGN_LITERAL_CAP = 1024
+#: Above this many centroid×dim literal terms, IVF list assignment
+#: (:func:`ivf_assign`) and probe selection (``ann_index.ivf_probes``)
+#: switch from the constant-folded literal expression to an
+#: Arrow-batched numpy UDF: the literal form embeds k·dim literals
+#: inside k structs, and Catalyst analysis/codegen of that tree grows
+#: superlinearly — the r10 rehearsal measured a k=64/dim=64 probe
+#: spending MORE wall in plan compilation than brute force spends
+#: scanning (BENCH_NOTES r10). The oracle-pinned k=8 paths (q41/q43)
+#: stay on the literal form.
+_LITERAL_TREE_CAP = 1024
+
+
+def _affinities(C: np.ndarray, v):
+    """The numpy UDF paths' one kernel: → the cosine affinities
+    ``C @ u / |u|`` of vector ``v`` against the (k, dim) centroid
+    matrix ``C``, or None for a NULL or wrong-dimension vector."""
+    if v is None or len(v) != C.shape[1]:
+        return None
+    u = np.asarray(v, dtype=np.float64)
+    nv = max(float(np.sqrt((u * u).sum())), 1e-12)
+    return C @ u / nv
 
 from .util import (  # noqa: F401  (re-exported for ann_index)
     _expr_cache_get,
@@ -497,7 +512,7 @@ def ivf_assign(
     (CollapseProject keeps a non-cheap alias referenced k times) — the
     naive form re-inlined the norm fold into every centroid score.
 
-    Quantizers above ``_ASSIGN_LITERAL_CAP`` (k·dim literal terms)
+    Quantizers above ``_LITERAL_TREE_CAP`` (k·dim literal terms)
     assign via an Arrow-batched numpy UDF with the SAME tie rule as
     ``array_max`` over struct(s, i) — highest affinity, HIGHEST index
     on ties — parity-tested against the literal path; malformed rows
@@ -511,7 +526,7 @@ def ivf_assign(
             )
     k = len(centroids)
     dim = len(centroids[0]) if k else 0
-    if k * dim > _ASSIGN_LITERAL_CAP:
+    if k * dim > _LITERAL_TREE_CAP:
         from pyspark.sql import types as T
 
         C = np.asarray(centroids, dtype=np.float64)
@@ -528,11 +543,9 @@ def ivf_assign(
             s_out: list = [None] * len(vs)
             i_out: list = [None] * len(vs)
             for r, v in enumerate(vs):
-                if v is None or len(v) != C.shape[1]:
+                aff = _affinities(C, v)
+                if aff is None:
                     continue
-                u = np.asarray(v, dtype=np.float64)
-                nv = max(float(np.sqrt((u * u).sum())), 1e-12)
-                aff = C @ u / nv
                 # array_max(struct(s, i)) ties take the HIGHEST index;
                 # argmax takes the first max, so scan the reversal
                 bi = len(aff) - 1 - int(np.argmax(aff[::-1]))

@@ -149,6 +149,24 @@ ONE_SHOT_TAKE = {
 }
 
 
+def take_upto(df: DataFrame, cap: int) -> list | None:
+    """The ONE size gate: → ``df``'s rows when it has at most ``cap``,
+    else None. One ``take(cap + 1)`` in the ``ONE_SHOT_TAKE`` posture
+    both decides "small enough to finish on the driver?" and, when it
+    is, delivers the rows, so no gate pays a count job before its
+    collect. A caller that caches ``df`` registers the cache in the
+    posture it takes in (``persist()`` compiles under its session's
+    conf) and passes the posture frame."""
+    rows = posture(df, ONE_SHOT_TAKE).take(cap + 1)
+    return rows if len(rows) <= cap else None
+
+
+def has_rows(df: DataFrame) -> bool:
+    """Existence probe: one ``take(1)`` job that stops each partition
+    at its first row, with no limit operator."""
+    return take_upto(df, 0) is None
+
+
 def micro(parts: int) -> dict:
     """AQE off + a narrow static shuffle width: the posture for plans
     the caller has already bounded to micro size (a single-bucket

@@ -51,9 +51,14 @@ _DEFAULTS = {
 #: local-mode JVM sizing. Spark's 1g driver default is far too small for
 #: local[32] where the driver JVM *is* the cluster; pair-generating
 #: operators (LSH candidates, similarity joins) also collect sizeable
-#: results at bench scale. On a real cluster these come from spark-submit.
+#: results at bench scale. The heap cap is half the machine's memory,
+#: at most 48g: G1 grows the heap toward a cap above the memory until
+#: the kernel kills it. On a real cluster these come from spark-submit.
+_PHYS_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
 _LOCAL_MEM_DEFAULTS = {
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(48, _PHYS_GB // 2))}g"
+    ),
     "spark.driver.maxResultSize": "8g",
 }
 

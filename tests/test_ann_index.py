@@ -195,7 +195,7 @@ def test_probe_udf_path_matches_literal_path(
             q, SEMDEDUP_CENTROIDS, nprobe=3
         ).select("vec_id", "probes").collect()
     }
-    monkeypatch.setattr(A, "_PROBE_LITERAL_CAP", 0)  # force the UDF
+    monkeypatch.setattr(S, "_LITERAL_TREE_CAP", 0)  # force the UDF
     udf = {
         r["vec_id"]: r["probes"]
         for r in A.ivf_probes(
@@ -224,7 +224,7 @@ def test_ivf_assign_udf_path_matches_literal(
             ed, SEMDEDUP_CENTROIDS, sim_col="aff"
         ).select("vec_id", "label", "aff").collect()
     }
-    monkeypatch.setattr(SIM, "_ASSIGN_LITERAL_CAP", 0)  # force the UDF
+    monkeypatch.setattr(SIM, "_LITERAL_TREE_CAP", 0)  # force the UDF
     udf = {
         r["vec_id"]: (r["label"], r["aff"])
         for r in SIM.ivf_assign(
@@ -242,6 +242,32 @@ def test_ivf_assign_udf_path_matches_literal(
     assert len(cents) == 4
     for c in cents:
         assert math.isclose(sum(x * x for x in c), 1.0, rel_tol=1e-9)
+
+
+def test_udf_paths_keep_their_tie_rules(spark, monkeypatch):
+    """The two numpy UDF paths share one affinity kernel but not a tie
+    rule: on an exact tie assignment takes the HIGHEST centroid index
+    (``array_max`` over struct(s, i)) and probe selection lists the
+    LOWEST first (``array_sort`` over struct(−s, i)), as their literal
+    forms do."""
+    cents = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]  # 0 and 1 tie
+    df = spark.createDataFrame(
+        [(1, [2.0, 0.0]), (2, [0.0, 3.0])],
+        "vec_id int, embedding array<double>",
+    )
+
+    def picks():
+        lab = S.ivf_assign(df, cents).select("vec_id", "label")
+        pr = A.ivf_probes(df, cents, nprobe=2).select("vec_id", "probes")
+        return sorted(map(tuple, lab.collect())), sorted(
+            (r[0], tuple(r[1])) for r in pr.collect()
+        )
+
+    lit = picks()
+    monkeypatch.setattr(S, "_LITERAL_TREE_CAP", 0)  # force the UDFs
+    assert picks() == lit == (
+        [(1, 1), (2, 2)], [(1, (0, 1)), (2, (2, 0))]
+    )
 
 
 def test_probes_staging_collision_guard(spark, vectors):
@@ -601,13 +627,15 @@ def test_semantic_probe_job_budget(spark, vectors, tmp_path):
     assert all(n <= 9 for n in per_batch[1:]), per_batch
 
 
-@pytest.mark.parametrize("cap", [8, 1000])
+@pytest.mark.parametrize("cap", [8, 39, 40, 41, 1000])
 def test_probe_selection_runs_once(spark, monkeypatch, tmp_path, cap):
     """Probe selection runs once per row on both sides of
     ``_LOCAL_PROBE_QUERY_CAP``: an over-cap take's partitions stay
     cached, so the fallback checkpoint does not select again. Each
     evaluation appends a line to a file: an accumulator would miss the
-    evaluations of a task the take stops early."""
+    evaluations of a task the take stops early. The 40-row batch sits
+    at cap+1, cap and cap−1 of the middle caps, and becomes a local
+    relation exactly while it fits."""
     log = str(tmp_path / "selected")
 
     def select(i):
@@ -622,6 +650,8 @@ def test_probe_selection_runs_once(spark, monkeypatch, tmp_path, cap):
     )
     monkeypatch.setattr(A, "_LOCAL_PROBE_QUERY_CAP", cap)
     q, probed, _ = A._probe_frame(spark, q_plan)
+    plan = q._jdf.queryExecution().analyzed().toString()
+    assert ("LocalRelation" in plan) == (n <= cap)
     assert sorted(r["query_id"] for r in q.collect()) == list(range(n))
     assert probed == [0, 1, 2]
     with open(log) as f:

@@ -373,9 +373,10 @@ def test_id_bloom_primitive(spark, monkeypatch):
     """Bloom invariants: every inserted id is a member (NO false
     negatives — the correctness contract); absent ids false-positive at
     roughly the design rate, not wildly above it. ``build_id_bloom``
-    writes the blob ``build_id_bloom_local`` writes, byte for byte, on
-    both sides of ``_BLOOM_DRIVER_CAP`` (NULL ids and duplicates
-    included, free or pinned parameters)."""
+    writes the blob ``build_id_bloom_local`` writes, byte for byte, at
+    ``_BLOOM_DRIVER_CAP`` − 1, the cap and + 1 (NULL ids and duplicates
+    included, free or pinned parameters), and builds it on the driver
+    exactly while the ids fit."""
     from sea_serpent_spark.operators.incremental import (
         _bloom_contains,
         _load_id_bloom,
@@ -399,12 +400,23 @@ def test_id_bloom_primitive(spark, monkeypatch):
     vals = [f"doc_{i % 700}" if i % 11 else None for i in range(1000)]
     df = spark.createDataFrame([(v,) for v in vals], "id string")
     df = df.repartition(4)
+    local = []
+    real_local = I.build_id_bloom_local
+
+    def spy(*a, **kw):
+        local.append(True)
+        return real_local(*a, **kw)
+
+    monkeypatch.setattr(I, "build_id_bloom_local", spy)
     for params in (None, (4096, 3)):
-        want = I.build_id_bloom_local(vals, params=params)
-        monkeypatch.setattr(I, "_BLOOM_DRIVER_CAP", 100_000)
-        assert build_id_bloom(df, params=params) == want  # driver take
-        monkeypatch.setattr(I, "_BLOOM_DRIVER_CAP", 100)
-        assert build_id_bloom(df, params=params) == want  # fold
+        want = real_local(vals, params=params)
+        # cap below the row count: the fold; at or above it: driver take
+        for cap, on_driver in ((len(vals) - 1, False), (len(vals), True),
+                               (len(vals) + 1, True)):
+            monkeypatch.setattr(I, "_BLOOM_DRIVER_CAP", cap)
+            local.clear()
+            assert build_id_bloom(df, params=params) == want
+            assert bool(local) is on_driver, cap
 
 
 def test_reingest_check_through_bloom(spark, halves, tmp_path):
@@ -548,9 +560,10 @@ def test_driver_path_matches_distributed(spark, halves, tmp_path,
     """r13: the driver-assisted micro-batch path (union-find + isin
     predicate) must keep EXACTLY the rows the distributed flow
     (connected_components + anti-join) keeps — same min-root canonical
-    choice, same witness rule, same reingest drop. Also pins the
-    overflow fallback: a row cap of 0 forces the distributed flow
-    through the deferred-stat plan and must not change output."""
+    choice, same witness rule, same reingest drop, with either key
+    restriction of the pruned scan (isin or broadcast semi-join). Also
+    pins the overflow fallback: a row cap of 0 forces the distributed
+    flow through the deferred-stat plan and must not change output."""
     old, new = halves
     p = str(tmp_path / "idx")
     I.write_band_index(
@@ -576,6 +589,21 @@ def test_driver_path_matches_distributed(spark, halves, tmp_path,
     assert sorted(
         r["id"] for r in out_drv["survivors"].select("id").collect()
     ) == drv
+    # key sets past _ISIN_PRED_CAP restrict the pruned scan by a
+    # broadcast semi-join instead of isin: same driver path, same rows
+    key_frames = []
+    real_rows_df = I.local_rows_df
+
+    def spy(*a, **kw):
+        key_frames.append(True)
+        return real_rows_df(*a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(I, "_ISIN_PRED_CAP", 0)
+        m.setattr(I, "local_rows_df", spy)
+        semi, out_semi = survivors()
+    assert key_frames and out_semi.get("driver_path") is True
+    assert drv == semi
     # force the distributed flow: doc cap 0 disqualifies the gate
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     dist, out_dist = survivors()

@@ -750,6 +750,30 @@ def test_single_bucket_update_commit_job_budget(spark, base, mytable):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_upsert_duplicate_probe_job_budget(spark, base, mytable):
+    """A Spark-frame upsert probes its keyed source for duplicate keys
+    with one 1-row take job: the whole merge is pinned at 20 jobs (a
+    ``limit(1).count()`` probe ran two, 21 in all). A duplicate key
+    still raises on this path."""
+    src = spark.createDataFrame(
+        [(3, "C2"), (100, "NEW")], "column1 long, labels string"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("upsert-budget", "job-budget pin")
+    try:
+        res = mytable.upsert(src, on="column1")
+    finally:
+        sc.setJobGroup(None, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("upsert-budget"))
+    assert res == {"updated": 1, "inserted": 1}
+    assert n_jobs <= 20, n_jobs
+    dup = spark.createDataFrame(
+        [(4, "x"), (4, "y")], "column1 long, labels string"
+    )
+    with pytest.raises(ValueError, match="duplicate keys"):
+        base.table("mytable").upsert(dup, on="column1")
+
+
 def test_repeat_commit_compiles_nothing(spark, base, mytable):
     """A commit's op-log stamp (time and version) reaches generated code
     by reference, not as inlined literals: a second update, and a third

@@ -1,8 +1,9 @@
 """``operators.util`` contracts: ``local_rows_df`` accepts the same rows
 and returns the same frame on both sides of its cell cap, no module
 flips a session-global conf outside the places that own one, no
-module cuts a lineage outside the lifetime registry, and a repeated plan
-or bounded take compiles no new codegen class."""
+module cuts a lineage outside the lifetime registry or gates a size
+outside ``take_upto``, and a repeated plan or bounded take compiles no
+new codegen class."""
 
 import ast
 import datetime
@@ -26,8 +27,8 @@ _CONF_WRITERS = {
 }
 
 
-def _conf_writes(tree):
-    """→ [(function name, line)] of every ``<...>conf.set/unset(...)``."""
+def _calls(tree):
+    """→ [(enclosing function name, call node)] of every call."""
     out = []
 
     def visit(node, fn):
@@ -35,21 +36,30 @@ def _conf_writes(tree):
             name = fn
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 name = child.name
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("set", "unset")
-            ):
-                recv = child.func.value
-                if isinstance(recv, ast.Call):  # jsession.conf().set
-                    recv = recv.func
-                if (
-                    isinstance(recv, ast.Attribute) and recv.attr == "conf"
-                ) or (isinstance(recv, ast.Name) and recv.id == "conf"):
-                    out.append((name, child.lineno))
+            if isinstance(child, ast.Call):
+                out.append((name, child))
             visit(child, name)
 
     visit(tree, None)
+    return out
+
+
+def _is_method(call, name: str) -> bool:
+    return isinstance(call.func, ast.Attribute) and call.func.attr == name
+
+
+def _conf_writes(tree):
+    """→ [(function name, line)] of every ``<...>conf.set/unset(...)``."""
+    out = []
+    for fn, call in _calls(tree):
+        if _is_method(call, "set") or _is_method(call, "unset"):
+            recv = call.func.value
+            if isinstance(recv, ast.Call):  # jsession.conf().set
+                recv = recv.func
+            if (
+                isinstance(recv, ast.Attribute) and recv.attr == "conf"
+            ) or (isinstance(recv, ast.Name) and recv.id == "conf"):
+                out.append((fn, call.lineno))
     return out
 
 
@@ -67,6 +77,40 @@ def test_no_session_global_conf_flips():
         stray
     )
     assert found == _CONF_WRITERS  # the scan still sees the allowed ones
+
+
+def test_size_gates_go_through_take_upto():
+    """Every "small enough to finish on the driver?" decision is one
+    ``util.take_upto``: no other ``.take(`` passes a cap (an existence
+    probe's literal ``take(1)`` is not a gate), and no ``.limit(n)``
+    feeds a ``.count()``. The JPEG decoder's bit reader (``bits.take``)
+    is not a DataFrame."""
+    gates, stray = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn, call in _calls(ast.parse(path.read_text())):
+            where = f"{rel}:{call.lineno} in {fn}"
+            if _is_method(call, "take"):
+                arg = call.args[0] if call.args else None
+                recv = call.func.value
+                if (rel, fn) == ("operators/util.py", "take_upto"):
+                    gates.append(where)
+                elif isinstance(arg, ast.Constant) and arg.value == 1:
+                    pass
+                elif rel == "operators/multimodal.py" and isinstance(
+                    recv, ast.Name
+                ) and recv.id == "bits":
+                    pass
+                else:
+                    stray.append(where)
+            elif (
+                _is_method(call, "count")
+                and isinstance(call.func.value, ast.Call)
+                and _is_method(call.func.value, "limit")
+            ):
+                stray.append(where)
+    assert not stray, "size gate outside util.take_upto: " + ", ".join(stray)
+    assert len(gates) == 1, gates  # the scan still sees the one gate
 
 
 def test_local_checkpoints_go_through_lifetime():

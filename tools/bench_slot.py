@@ -1,8 +1,9 @@
 """Isolated per-slot bench: run named workload slots N times each in one
 session with bench.py's warmup + quiesce discipline, print per-pass
-seconds and the Spark job count per pass (REST). The before/after
-measurement harness for optimization work — same noop-sink methodology
-as bench.py, minus the other 49 slots.
+seconds and the Spark job count per pass (read from the app status
+store, so it works with the UI off, as ``get_spark`` runs). The
+before/after measurement harness for optimization work — same
+noop-sink methodology as bench.py, minus the other 49 slots.
 
 Usage::
 
@@ -16,23 +17,19 @@ import argparse
 import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def n_jobs(spark) -> int:
-    try:
-        ui = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        return len(
-            json.load(
-                urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
-            )
-        )
-    except Exception:
-        return -1
+    """Jobs submitted so far: the newest job id + 1. Job ids count up
+    from 0 per SparkContext, so a difference stays exact after the
+    status store drops old jobs."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return 0 if jobs.isEmpty() else jobs.head().jobId() + 1
 
 
 def main() -> None:
