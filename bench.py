@@ -21,7 +21,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = str(Path(__file__).resolve().parent)
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -62,6 +63,12 @@ def main() -> None:
     except ValueError:
         repeat = 1
 
+    # the Python workers import the package too (slots with UDFs unpickle
+    # them there): they inherit the environment of the JVM started
+    # below, so a run from another directory needs the root on their path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
     from sea_serpent_spark.session import get_spark
 
     spark = get_spark(app_name="sea-serpent-bench")

@@ -46,7 +46,15 @@ from .util import (fan_out, has_rows, local_rows_df, posture, rebind,
 BROADCAST_VERIFY_CAP = 2_000_000
 
 
-def _verify_gate(df: DataFrame, broadcast_verify, cap: int) -> bool:
+def _fits_broadcast(n: int, cap: int | None = None) -> bool:
+    """``n`` rows ≤ ``cap`` (None: :data:`BROADCAST_VERIFY_CAP`, read
+    at call time)."""
+    return n <= (BROADCAST_VERIFY_CAP if cap is None else cap)
+
+
+def _verify_gate(
+    df: DataFrame, broadcast_verify=None, cap: int | None = None
+) -> bool:
     """Resolve the broadcast-verify tri-state: explicit bool wins; None
     (the scale-safe default) size-gates on a cheap corpus row count
     (metadata-only for parquet scans — docs upper-bound the verify side,
@@ -54,11 +62,19 @@ def _verify_gate(df: DataFrame, broadcast_verify, cap: int) -> bool:
     if broadcast_verify is not None:
         return bool(broadcast_verify)
     # scan → count: partial-agg'd scalar plan, no AQE job wave (r14)
-    return posture(df).count() <= cap
+    return _fits_broadcast(posture(df).count(), cap)
 
 
 def _maybe_broadcast(side: DataFrame, flag: bool) -> DataFrame:
     return F.broadcast(side) if flag else side
+
+
+def _filled_gate(side: DataFrame) -> DataFrame:
+    """``side`` filled once (a tracked checkpoint), broadcast when its
+    row count fits the cap. Without the fill the gate's count and the
+    consuming join each execute ``side``'s whole subtree."""
+    side, _ = tracked_checkpoint(side)
+    return _maybe_broadcast(side, _verify_gate(side))
 
 
 #: The quiesce sweep under its pre-merge name (``util.release_checkpoints``
@@ -476,6 +492,89 @@ def first_agreeing_band(
     return pred
 
 
+def _expand_groups(
+    gpairs: DataFrame,
+    groups: DataFrame,
+    ident: Column,
+    emit: str,
+    bcast=False,
+    delta: bool = False,
+) -> DataFrame:
+    """Rep-level edges → member edges, for the pair operators that
+    enumerate on one representative per group of identical sketches.
+
+    ``gpairs`` is the rep edges ``(rep_a, rep_b, value)`` (any column
+    names; the output is ``(id_a, id_b, value)``); ``groups`` is one
+    row per group, ``(gid, members)`` with ``gid`` the min member id.
+    Members of one group are identical, so their pairs carry ``ident``
+    (the value of a self-pair: Jaccard 1.0, hamming 0).
+
+    - ``emit="spanning"``: the rep edges plus one star edge
+      ``(gid, member, ident)`` per non-gid member — connectivity-
+      equivalent to the full expansion and linear in corpus size.
+    - ``emit="pairs"``: the rep edges joined to both groups' member
+      lists, plus every intra-group pair. The member lists hold one row
+      per DOCUMENT, so they broadcast only when ``bcast`` says so;
+      ``bcast`` may be a zero-arg gate, evaluated — its count job
+      paid — on this path only (r14). Groups are disjoint, so the
+      salted intra enumeration emits each pair once (no dedup shuffle
+      on the largest output leg).
+
+    ``delta=True`` keeps only edges touching a NEW doc: members are
+    ``(id, __new)`` structs and ``groups`` carries ``has_new``."""
+    ka, kb, val = gpairs.columns
+    if delta:
+        mem = groups.select(
+            "gid", "has_new", F.explode("members").alias("m")
+        ).select(
+            "gid", "has_new", F.col("m.id").alias("id"),
+            F.col("m.__new").alias("new"),
+        )
+    else:
+        mem = groups.select("gid", F.explode("members").alias("id"))
+    if emit == "spanning":
+        non_rep = F.col("id") != F.col("gid")
+        star = mem.where(
+            F.col("has_new") & non_rep if delta else non_rep
+        ).select(
+            F.col("gid").alias("id_a"),
+            F.col("id").alias("id_b"),
+            ident.alias(val),
+        )
+        if (ka, kb) != ("id_a", "id_b"):
+            gpairs = gpairs.select(
+                F.col(ka).alias("id_a"), F.col(kb).alias("id_b"), val
+            )
+        return gpairs.unionByName(star)
+    if callable(bcast):
+        bcast = bcast()
+
+    def side(key: str, s: str) -> DataFrame:
+        cols = [F.col("gid").alias(key), F.col("id").alias(f"m_{s}")]
+        if delta:
+            cols.append(F.col("new").alias(f"n_{s}"))
+        return _maybe_broadcast(mem.select(*cols), bcast)
+
+    inter = gpairs.join(side(ka, "a"), ka).join(side(kb, "b"), kb)
+    if delta:
+        inter = inter.where(F.col("n_a") | F.col("n_b"))
+    inter = inter.select(
+        F.least("m_a", "m_b").alias("id_a"),
+        F.greatest("m_a", "m_b").alias("id_b"),
+        val,
+    )
+    intra = _salted_pairs(
+        mem.select(
+            F.col("gid").alias("g"), "id",
+            *([F.col("new").alias("nn")] if delta else []),
+        ),
+        ["g"],
+        sym_cond=(F.col("x.nn") | F.col("y.nn")) if delta else None,
+        distinct=False,
+    ).select("id_a", "id_b", ident.alias(val))
+    return inter.unionByName(intra)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -486,7 +585,7 @@ def minhash_lsh_pairs(
     jaccard_threshold: float = 0.5,
     verify: str = "estimate",
     broadcast_verify: bool | None = None,
-    broadcast_cap: int = BROADCAST_VERIFY_CAP,
+    broadcast_cap: int | None = None,
     emit: str = "pairs",
 ) -> DataFrame:
     """→ [id_a, id_b, jaccard] candidate pairs sharing ≥1 LSH band, kept
@@ -521,9 +620,10 @@ def minhash_lsh_pairs(
     verify join (one narrow row per doc). Right whenever that side fits
     executor memory — candidates, not docs, dominate LSH cost. The
     default (``None``) is scale-safe: it size-gates on the corpus row
-    count (``broadcast_cap``) and otherwise leaves the join to AQE,
-    which still upgrades to broadcast at runtime when the side proves
-    small. Pass True/False to force either plan.
+    count (``broadcast_cap``; None: ``BROADCAST_VERIFY_CAP``) and
+    otherwise leaves the join to AQE, which still upgrades to broadcast
+    at runtime when the side proves small. Pass True/False to force
+    either plan.
 
     Scale shape: signatures are narrow (id + 16 longs); the band self-join
     shuffles (band_idx, band_key) — documents themselves never move."""
@@ -573,7 +673,6 @@ def minhash_lsh_pairs(
             )
             .drop("sk")
         )
-        mem = groups.select("gid", F.explode("members").alias("id"))
         reps = groups.select(F.col("gid").alias("id"), "sig")
         # Verify *inside* the enumeration join: the signature rides along
         # (carry) so no per-side lookup joins are needed, the agreement
@@ -619,44 +718,22 @@ def minhash_lsh_pairs(
         )
         if emit == "spanning":
             # no checkpoint on the spanning path (r14): the rep-pair set
-            # has exactly ONE consumer (the union below; star reads the
-            # groups cache) and no member-expansion joins to fuse with —
-            # the caller's own materialization (CC edge checkpoint, noop
-            # sink) executes enumerate+verify once either way, so the
-            # eager fill here was a pure extra action
-            star = mem.where(F.col("id") != F.col("gid")).select(
-                F.col("gid").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-            return gpairs_plan.unionByName(star)
+            # has exactly ONE consumer (the union with the stars, which
+            # read the groups cache) and no member-expansion joins to
+            # fuse with — the caller's own materialization (CC edge
+            # checkpoint, noop sink) executes enumerate+verify once
+            # either way, so the eager fill here was a pure extra action
+            return _expand_groups(gpairs_plan, groups, F.lit(1.0), emit)
         # pairs path: checkpoint before the member-expansion joins —
         # without the boundary they fuse with the whole enumerate+verify
         # subtree into one oversized codegen stage (measured 8s → 0.5s
         # for the expansion leg on the bench corpus)
         gpairs = _keep_cache(gpairs_plan)
         gpairs.count()
-        ma = mem.select(F.col("gid").alias("id_a"), F.col("id").alias("m_a"))
-        mb = mem.select(F.col("gid").alias("id_b"), F.col("id").alias("m_b"))
-        # gate evaluated HERE, not at entry (r14): the spanning path
-        # above never expands members, so spanning callers (dedup_corpus
-        # and the ingest probes) no longer pay the gate's corpus-count
-        # job — the same lazy placement simhash_pairs already uses
-        bcast = _verify_gate(df, broadcast_verify, broadcast_cap)
-        ma, mb = _maybe_broadcast(ma, bcast), _maybe_broadcast(mb, bcast)
-        inter_group = gpairs.join(ma, "id_a").join(mb, "id_b").select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "jaccard",
+        return _expand_groups(
+            gpairs, groups, F.lit(1.0), emit,
+            bcast=lambda: _verify_gate(df, broadcast_verify, broadcast_cap),
         )
-        # identical signatures: estimate is exactly 1.0 ≥ any threshold.
-        # distinct=False: groups are disjoint (one group per id), so the
-        # salted enumeration already emits each unordered pair exactly
-        # once — the dedup shuffle would run on the largest output leg.
-        intra_group = _salted_pairs(
-            mem.select(F.col("gid").alias("g"), "id"), ["g"], distinct=False
-        ).select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-        return inter_group.unionByName(intra_group)
 
     if verify != "exact":
         raise ValueError(f"verify must be 'estimate' or 'exact', got {verify!r}")
@@ -685,8 +762,8 @@ def minhash_lsh_pairs(
 def _dense_allpairs(
     groups: DataFrame,
     threshold: float,
-    bcast_members: bool = True,
-    emit: str = "pairs",
+    emit: str,
+    bcast,
     nwords: int | None = None,
 ) -> DataFrame:
     """All-pairs popcount verify over distinct-token-set representatives.
@@ -695,15 +772,10 @@ def _dense_allpairs(
     sz). The rep×rep comparison is a broadcast nested-loop join —
     candidates never shuffle, never duplicate, and the verify is a few
     AND+popcounts per pair in whole-stage codegen. The reps table is
-    bounded by ``allpairs_rep_cap`` (≤8192 rows) so broadcasting it is
-    always safe; the member-expansion table has one row per DOCUMENT, not
-    per representative, so its broadcast is gated by ``bcast_members``
-    (the same ``_verify_gate`` size check every other expansion path
-    uses) — a dense corpus with billions of docs must shuffle the
-    expansion, not broadcast it. ``bcast_members`` may be a zero-arg
-    callable (r14): the spanning path never expands members, so a
-    callable gate is only evaluated — only pays its count job — on the
-    pairs path."""
+    bounded by ``allpairs_rep_cap`` (65536 rows by default) so
+    broadcasting it is always safe; the member expansion
+    (:func:`_expand_groups`) has one row per DOCUMENT, so its broadcast
+    follows the ``bcast`` gate."""
     spark = groups.sparkSession
     k = spark.sparkContext.defaultParallelism
     reps = groups.select("gid", "sz", "bm")
@@ -727,35 +799,9 @@ def _dense_allpairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    mem = groups.select("gid", F.explode("members").alias("id"))
-    if emit == "spanning":
-        star = mem.where(F.col("id") != F.col("gid")).select(
-            F.col("gid").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        return gpairs.unionByName(star)
-    if callable(bcast_members):
-        bcast_members = bcast_members()
-    ma = _maybe_broadcast(
-        mem.select(F.col("gid").alias("id_a"), F.col("id").alias("m_a")),
-        bcast_members,
-    )
-    mb = _maybe_broadcast(
-        mem.select(F.col("gid").alias("id_b"), F.col("id").alias("m_b")),
-        bcast_members,
-    )
-    inter_group = gpairs.join(ma, "id_a").join(mb, "id_b").select(
-        F.least("m_a", "m_b").alias("id_a"),
-        F.greatest("m_a", "m_b").alias("id_b"),
-        "jaccard",
-    )
-    # identical token sets: jaccard is exactly 1.0 ≥ any threshold.
-    # distinct=False: groups are disjoint, pairs are already unique.
-    intra_group = _salted_pairs(
-        mem.select(F.col("gid").alias("g"), "id"), ["g"], distinct=False
-    ).select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    return inter_group.unionByName(intra_group)
+    # identical token sets: jaccard is exactly 1.0 ≥ any threshold
+    return _expand_groups(gpairs, groups, F.lit(1.0), emit, bcast)
+
 
 def ngram_jaccard_pairs(
     df: DataFrame,
@@ -765,7 +811,7 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     max_bitmap_words: int = 64,
     broadcast_verify: bool | None = None,
-    broadcast_cap: int = BROADCAST_VERIFY_CAP,
+    broadcast_cap: int | None = None,
     allpairs_rep_cap: int = 65536,
     emit: str = "pairs",
 ) -> DataFrame:
@@ -959,12 +1005,8 @@ def ngram_jaccard_pairs(
         )
         if n_reps <= allpairs_rep_cap:
             return _dense_allpairs(
-                groups,
-                threshold,
-                bcast_members=lambda: _verify_gate(
-                    df, broadcast_verify, broadcast_cap
-                ),
-                emit=emit,
+                groups, threshold, emit,
+                lambda: _verify_gate(df, broadcast_verify, broadcast_cap),
                 nwords=(vocab + 63) // 64,
             )
 
@@ -1230,34 +1272,11 @@ def simhash_pairs(
             distinct=False,
         )
         gpairs = raw.select("id_a", "id_b", hamming.alias("hamming"))
-    mem = groups.select("gid", F.explode("members").alias("id"))
-    if emit == "spanning":
-        star = mem.where(F.col("id") != F.col("gid")).select(
-            F.col("gid").alias("id_a"),
-            F.col("id").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-        return gpairs.unionByName(star)
-    bcast = _verify_gate(df, None, BROADCAST_VERIFY_CAP)
-    ma = _maybe_broadcast(
-        mem.select(F.col("gid").alias("id_a"), F.col("id").alias("m_a")), bcast
+    # identical signatures: hamming is exactly 0
+    return _expand_groups(
+        gpairs, groups, F.lit(0).cast("int"), emit,
+        lambda: _verify_gate(df),
     )
-    mb = _maybe_broadcast(
-        mem.select(F.col("gid").alias("id_b"), F.col("id").alias("m_b")), bcast
-    )
-    inter = gpairs.join(ma, "id_a").join(mb, "id_b").select(
-        F.least("m_a", "m_b").alias("id_a"),
-        F.greatest("m_a", "m_b").alias("id_b"),
-        "hamming",
-    )
-    # identical signatures: hamming is exactly 0; groups are disjoint so
-    # the salted enumeration emits each unordered pair once (no dedup)
-    intra = _salted_pairs(
-        mem.select(F.col("gid").alias("g"), "id"), ["g"], distinct=False
-    ).select(
-        "id_a", "id_b", F.lit(0).cast("int").alias("hamming")
-    )
-    return inter.unionByName(intra)
 
 
 # ---------------------------------------------------------------------------
@@ -1563,12 +1582,9 @@ def dedup_corpus(
             fingerprint(F.col(text_col)).alias("__grp"),
             F.col(id_col).alias("id"),
         )
-        losers = _best_losers(grouped)
-        losers = _maybe_broadcast(
-            losers, _verify_gate(losers, None, BROADCAST_VERIFY_CAP)
-        )
         return df.join(
-            losers, F.col(id_col) == F.col("__lid"), "left_anti"
+            _filled_gate(_best_losers(grouped)),
+            F.col(id_col) == F.col("__lid"), "left_anti",
         )
     kwargs.setdefault("emit", "spanning")
     if method == "minhash":
@@ -1604,10 +1620,11 @@ def dedup_corpus(
         # keep_col policies that is a corpus-scan + window job paid
         # purely to learn a size we already know).
         losers = F.broadcast(losers)
+    elif keep == "min_id":
+        # a filter over CC's label checkpoint: cheap to run twice
+        losers = _maybe_broadcast(losers, _verify_gate(losers))
     else:
-        losers = _maybe_broadcast(
-            losers, _verify_gate(losers, None, BROADCAST_VERIFY_CAP)
-        )
+        losers = _filled_gate(losers)
     return df.join(losers, F.col(id_col) == F.col("__lid"), "left_anti")
 
 
@@ -1693,17 +1710,10 @@ def decontaminate(
     returns the clean corpus with all original columns. The flagged-id
     set is contamination-sized (small), so the final anti-join
     broadcasts under the usual gate."""
-    flagged, _ = tracked_checkpoint(
+    flagged = _filled_gate(
         contamination_check(
             corpus, reference, text_col, id_col, ngram, min_hits, **kwargs
-        )
-        .select(F.col("id").alias("__bad"))
-        # materialize once: the broadcast gate's count() would otherwise
-        # run the full n-gram pipeline and the anti-join would run it
-        # again — 2x the operator's dominant cost
-    )
-    flagged = _maybe_broadcast(
-        flagged, _verify_gate(flagged, None, BROADCAST_VERIFY_CAP)
+        ).select(F.col("id").alias("__bad"))
     )
     return corpus.join(
         flagged, F.col(id_col) == F.col("__bad"), "left_anti"

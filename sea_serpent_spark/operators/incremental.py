@@ -54,9 +54,10 @@ from pyspark.sql import types as T
 from ..lease import LEASE_NAME
 from . import artifact
 from .dedup import (
-    BROADCAST_VERIFY_CAP,
+    _expand_groups,
+    _filled_gate,
+    _fits_broadcast,
     _maybe_broadcast,
-    _salted_pairs,
     _verify_gate,
     banded_signatures,
     connected_components,
@@ -816,66 +817,11 @@ def incremental_minhash_pairs(
     # ids+jaccard only, orders of magnitude smaller than the distinct
     # it replaces (which shuffled the same rows ONCE PER AGREEING BAND).
     gpairs = spread(gpairs)
-    mem = groups.select(
-        "gid", "has_new", F.explode("members").alias("m")
-    ).select(
-        "gid",
-        "has_new",
-        F.col("m.id").alias("mid"),
-        F.col("m.__new").alias("mnew"),
+    # identical signatures: estimate is exactly 1.0 ≥ any threshold
+    return _expand_groups(
+        gpairs, groups, F.lit(1.0), emit,
+        bcast=_fits_broadcast(n_docs), delta=True,
     )
-    if emit == "spanning":
-        star = mem.where(
-            F.col("has_new") & (F.col("mid") != F.col("gid"))
-        ).select(
-            F.col("gid").alias("id_a"),
-            F.col("mid").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        return gpairs.select(
-            F.col("u").alias("id_a"), F.col("v").alias("id_b"), "jaccard"
-        ).unionByName(star)
-    bcast = n_docs <= BROADCAST_VERIFY_CAP
-    ma = _maybe_broadcast(
-        mem.select(
-            F.col("gid").alias("u"),
-            F.col("mid").alias("m_a"),
-            F.col("mnew").alias("n_a"),
-        ),
-        bcast,
-    )
-    mb = _maybe_broadcast(
-        mem.select(
-            F.col("gid").alias("v"),
-            F.col("mid").alias("m_b"),
-            F.col("mnew").alias("n_b"),
-        ),
-        bcast,
-    )
-    cross = (
-        gpairs.join(ma, "u")
-        .join(mb, "v")
-        .where(F.col("n_a") | F.col("n_b"))
-        .select(
-            F.least("m_a", "m_b").alias("id_a"),
-            F.greatest("m_a", "m_b").alias("id_b"),
-            "jaccard",
-        )
-    )
-    # identical signatures: estimate is exactly 1.0 ≥ any threshold;
-    # groups are disjoint so the salted enumeration emits each unordered
-    # delta-touching pair once (no dedup)
-    intra = _salted_pairs(
-        mem.select(
-            F.col("gid").alias("g"),
-            F.col("mid").alias("id"),
-            F.col("mnew").alias("nn"),
-        ),
-        ["g"],
-        sym_cond=(F.col("x.nn") | F.col("y.nn")),
-        distinct=False,
-    ).select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    return cross.unionByName(intra)
 
 
 def _id_collision_check(idx_band0, dsig, bcast_delta, stats,
@@ -1431,8 +1377,8 @@ def incremental_dedup(
     # the cached signature count (an upper bound on distinct delta ids)
     # gates the broadcast for free; only the unpruned path pays a count
     bcast_delta = (
-        n_delta <= BROADCAST_VERIFY_CAP if n_delta is not None
-        else _verify_gate(delta_ids, None, BROADCAST_VERIFY_CAP)
+        _fits_broadcast(n_delta) if n_delta is not None
+        else _verify_gate(delta_ids)
     )
     # id-bloom short-circuit (r10 — removes the docstring's "one
     # deliberately index-linear term"): when the index frame carries a
@@ -1505,9 +1451,6 @@ def incremental_exact_dedup(
     fresh = canon.join(
         seen.select("fp").distinct(), "fp", "left_anti"
     ).select("__kid")
-    fresh = _maybe_broadcast(
-        fresh, _verify_gate(fresh, None, BROADCAST_VERIFY_CAP)
-    )
     return new_df.join(
-        fresh, F.col(id_col) == F.col("__kid"), "left_semi"
+        _filled_gate(fresh), F.col(id_col) == F.col("__kid"), "left_semi"
     )

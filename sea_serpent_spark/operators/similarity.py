@@ -792,12 +792,7 @@ def semantic_dedup(
     implementation."""
     if keep not in ("far_from_centroid", "min_id"):
         raise ValueError(f"unknown keep policy: {keep!r}")
-    from .dedup import (
-        BROADCAST_VERIFY_CAP,
-        _maybe_broadcast,
-        _verify_gate,
-        connected_components,
-    )
+    from .dedup import _filled_gate, connected_components
 
     if centroids is None:
         centroids = kmeans_fit(
@@ -856,13 +851,8 @@ def semantic_dedup(
         # checkpoint fill and no gate count job (r14).
         losers = F.broadcast(losers)
     else:
-        # materialize the (small: one id per duplicate) loser set once —
-        # the broadcast gate's count() and the anti-join would otherwise
-        # EACH execute the pair-graph + component + keeper subtree
-        losers, _ = tracked_checkpoint(losers)
-        losers = _maybe_broadcast(
-            losers, _verify_gate(losers, None, BROADCAST_VERIFY_CAP)
-        )
+        # the (small: one id per duplicate) loser set, filled once
+        losers = _filled_gate(losers)
     return df.join(losers, F.col(id_col) == F.col("__lid"), "left_anti")
 
 

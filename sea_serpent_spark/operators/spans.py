@@ -33,9 +33,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .dedup import BROADCAST_VERIFY_CAP, _maybe_broadcast, _verify_gate
+from .dedup import _filled_gate
 from .text import words
-from .util import fan_out, tracked_checkpoint
+from .util import fan_out
 
 
 def _span_hash_col(toks: Column, span_tokens: int) -> Column:
@@ -122,17 +122,11 @@ def strip_duplicate_spans(
     A document with no flagged window passes through byte-identical
     (the join is a left join against the small flagged set, and the
     rebuild only triggers on matched rows)."""
-    flagged, _ = tracked_checkpoint(
+    flagged = _filled_gate(
         duplicate_spans(df, text_col, id_col, span_tokens, keep_first=True)
         .groupBy("id")
         .agg(F.array_sort(F.collect_list("pos")).alias("__starts"))
         .select(F.col("id").alias("__sid"), "__starts")
-        # materialize the (small) flagged set once: the gate's count()
-        # would otherwise execute the whole span-hash pipeline and the
-        # real join would re-execute it again
-    )
-    flagged = _maybe_broadcast(
-        flagged, _verify_gate(flagged, None, BROADCAST_VERIFY_CAP)
     )
     toks = words(F.col(text_col))
     span = F.lit(span_tokens)

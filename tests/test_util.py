@@ -2,8 +2,8 @@
 and returns the same frame on both sides of its cell cap, no module
 flips a session-global conf outside the places that own one, no
 module cuts a lineage outside the lifetime registry or gates a size
-outside ``take_upto``, and a repeated plan or bounded take compiles no
-new codegen class."""
+outside ``take_upto``, group members are expanded in one place, and a
+repeated plan or bounded take compiles no new codegen class."""
 
 import ast
 import datetime
@@ -111,6 +111,23 @@ def test_size_gates_go_through_take_upto():
                 stray.append(where)
     assert not stray, "size gate outside util.take_upto: " + ", ".join(stray)
     assert len(gates) == 1, gates  # the scan still sees the one gate
+
+
+def test_member_expansion_lives_in_one_helper():
+    """Rep-level edges become member edges in ``dedup._expand_groups``
+    only: no other function explodes a ``members`` list or orders an
+    expanded ``m_a``/``m_b`` pair."""
+    sites = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn, call in _calls(ast.parse(path.read_text())):
+            name = getattr(call.func, "attr", getattr(call.func, "id", None))
+            first = call.args[0] if call.args else None
+            if (name, getattr(first, "value", None)) in (
+                ("explode", "members"), ("least", "m_a"),
+            ):
+                sites.add((rel, fn))
+    assert sites == {("operators/dedup.py", "_expand_groups")}
 
 
 def test_local_checkpoints_go_through_lifetime():
