@@ -43,13 +43,11 @@ def main() -> None:
     # steal (≈26% of busy time) during the slower one. steal_pct below
     # is the fraction of guest-runnable time the host withheld; >2-3%
     # means per-slot numbers are not comparable across runs.
+    from perfbench import probes
+
     def _cpu_ticks() -> tuple[int, int] | None:
         try:
-            with open("/proc/stat") as f:
-                parts = f.readline().split()[1:]
-            vals = [int(x) for x in parts]
-            steal = vals[7] if len(vals) > 7 else 0
-            return steal, sum(vals)
+            return probes.cpu_ticks()
         except (OSError, ValueError, IndexError):
             return None
 
@@ -247,11 +245,7 @@ def main() -> None:
         ticks_end = _cpu_ticks()
         if ticks_start is None or ticks_end is None:
             return None
-        d_steal = ticks_end[0] - ticks_start[0]
-        d_total = ticks_end[1] - ticks_start[1]
-        if d_total <= 0:
-            return None
-        return round(100.0 * d_steal / d_total, 2)
+        return probes.steal_pct(ticks_start, ticks_end)
 
     sidecar = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR", "bench_sidecar.json"

@@ -175,6 +175,7 @@ def append_to_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     _assigned: DataFrame | None = None,
+    _micro: bool = False,
 ) -> None:
     """Append vectors to a live IVF(-PQ) index WITHOUT a rebuild —
     the ANN twin of the band index's per-batch ingest
@@ -198,7 +199,8 @@ def append_to_ivf_index(
     ALREADY computed with this index's pinned quantizer — the
     incremental probe's cached assignment. Skips the re-assignment
     expression; the caller guarantees quantizer identity (same index
-    path the probe read)."""
+    path the probe read). ``_micro``: the probe took its driver path,
+    so the tail is written from one task (as in ``write_band_index``)."""
     spark = new_vectors.sparkSession
     with artifact.writer_lease(path, owner="ivf-append"):
         gen = _open(spark, path)
@@ -216,10 +218,9 @@ def append_to_ivf_index(
             assigned = pq_encode(
                 assigned, meta["codebooks"], vec_col=vec_col
             )
-        # the sink's pre-assigned hand-off is a micro-batch append
         artifact.append_tail(
             assigned, gen.dir, "label", [id_col],
-            micro=_assigned is not None, partitioned=False,
+            micro=_micro, partitioned=False,
         )
 
 
@@ -276,13 +277,12 @@ def incremental_semantic_dedup(
     helpers (``incremental._ingest_keep_local`` /
     ``_ingest_keep_distributed``).
 
-    ``ingest_out`` follows ``incremental_dedup``'s contract: on the
-    driver path ``driver_path=True``, ``survivor_ids`` and
-    ``survivors`` — here the cached pinned-quantizer assignment
-    (``id``, ``v``, ``label``) restricted to survivors, so the
-    streaming sink appends without re-assigning; the distributed flow
-    leaves it empty. The survivors frame stays persisted until the
-    caller's next operator boundary."""
+    ``ingest_out`` follows ``incremental_dedup``'s contract:
+    ``driver_path`` and ``survivors`` on both paths — here the cached
+    pinned-quantizer assignment (``id``, ``v``, ``label``) restricted
+    to survivors, so the streaming sink appends without re-assigning
+    — plus ``survivor_ids`` on the driver path. The assignment cache
+    stays persisted until the caller's next operator boundary."""
     import pyspark.sql.functions as _F
 
     from .dedup import BROADCAST_VERIFY_CAP, _maybe_broadcast
@@ -431,7 +431,7 @@ def incremental_semantic_dedup(
     return _ingest_keep_distributed(
         new_df, id_col, pairs, pruned.select("id"),
         full.select(_F.col(id_col).alias("id")),
-        n_delta <= BROADCAST_VERIFY_CAP,
+        n_delta <= BROADCAST_VERIFY_CAP, delta, ingest_out,
     )
 
 

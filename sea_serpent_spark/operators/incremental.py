@@ -305,12 +305,22 @@ def _kb_expr(key_buckets: int):
     )
 
 
+def _key_buckets(index: DataFrame, key_buckets: int | None = None):
+    """``key_buckets`` when given, else the bucket count
+    :func:`read_band_index` attached to the index's ``kb`` column
+    (None for an index without the bucketed layout)."""
+    if key_buckets is None and "kb" in index.columns:
+        return (index.schema["kb"].metadata or {}).get("key_buckets")
+    return key_buckets
+
+
 def write_band_index(
     index: DataFrame,
     path: str,
     mode: str = "overwrite",
     key_buckets: int | None = 64,
     ids_hint: list | None = None,
+    _micro: bool = False,
 ) -> None:
     """Persist a band index with the probe-prunable layout: partitioned
     by ``band`` and the coarse key bucket ``kb``, rows sorted by ``key``
@@ -357,6 +367,10 @@ def write_band_index(
     false positives, missing ids would break the reingest check, so
     pass it only when it is the same list the band rows derive from.
 
+    ``_micro`` (appends only): the ingest probe took its driver path,
+    so the batch is trigger-sized and its tail files are written from
+    one task; otherwise the append keeps the parallel repartition.
+
     Commit discipline (round 10): full builds land in a fresh
     GENERATION directory under the root and are published by the
     atomic single-file manifest swap of ``operators/artifact.py`` —
@@ -380,13 +394,9 @@ def write_band_index(
             _append_bloom_delta(idx, cur, ids_hint)
             # L0 tail: kb rides as a DATA column (partition-dir layouts
             # cannot mix depths under one root); ≤ `bands` files per
-            # batch. Micro-batch appends (ids_hint in hand and small,
-            # r13) write from one task.
+            # batch
             artifact.append_tail(
-                idx, cur, "band", ["key"],
-                micro=ids_hint is not None
-                and len(ids_hint) <= _DRIVER_PROBE_DOC_CAP,
-                partitioned=True,
+                idx, cur, "band", ["key"], micro=_micro, partitioned=True,
             )
             return
         artifact.write_generation(
@@ -577,10 +587,7 @@ def _prune_index_for_delta(
     # shuffle stage per probe (r13); the delta's banded rows are
     # bounded by bands × n_delta either way
     delta_keys = banded
-    nb = key_buckets
-    if nb is None and "kb" in index.columns:
-        md = index.schema["kb"].metadata or {}
-        nb = md.get("key_buckets")
+    nb = _key_buckets(index, key_buckets)
     if nb and "kb" in index.columns:
         hit: dict[int, list[int]] = {}
         n_delta = 0
@@ -896,6 +903,7 @@ def _ingest_keep_local(uf, old_ids: set, delta_ids: list, hits,
 def _ingest_keep_distributed(new_df: DataFrame, id_col: str,
                              pairs: DataFrame, old_ids: DataFrame,
                              idx_ids: DataFrame, bcast: bool,
+                             cached: DataFrame, ingest_out: dict | None,
                              reingested: DataFrame | None = None
                              ) -> DataFrame:
     """The same decision as :func:`_ingest_keep_local`, as a plan:
@@ -905,7 +913,12 @@ def _ingest_keep_distributed(new_df: DataFrame, id_col: str,
     ``idx_ids`` the FULL index's id column for the replay drop, and
     ``bcast`` says the delta is broadcast-sized. A caller that already
     narrowed the replay check (the band probe's bloom) passes its
-    ``reingested`` frame of ``__lid`` ids instead."""
+    ``reingested`` frame of ``__lid`` ids instead.
+
+    Fills ``ingest_out`` with ``driver_path=False`` and ``survivors``:
+    the probe's ``cached`` delta frame anti-joined with the
+    checkpointed loser set, so it reads neither the index nor the
+    batch's source again."""
     comp = connected_components(pairs)
     old = old_ids.distinct().withColumn("__old", F.lit(True))
     keep_new = (
@@ -946,9 +959,14 @@ def _ingest_keep_distributed(new_df: DataFrame, id_col: str,
     # would otherwise re-run the pairs + components + keeper subtree.
     # losers ⊆ the delta's distinct ids, so ``bcast`` bounds them too.
     losers, _ = tracked_checkpoint(losers)
+    losers = _maybe_broadcast(losers, bcast)
+    if ingest_out is not None:
+        ingest_out["driver_path"] = False
+        ingest_out["survivors"] = cached.join(
+            losers, F.col("id") == F.col("__lid"), "left_anti"
+        )
     return new_df.join(
-        _maybe_broadcast(losers, bcast),
-        F.col(id_col) == F.col("__lid"), "left_anti",
+        losers, F.col(id_col) == F.col("__lid"), "left_anti"
     )
 
 
@@ -1050,10 +1068,7 @@ def _dedup_local_probe(
     # partition-prune predicate — the driver-side twin of
     # _prune_index_for_delta's collected (band, kb) hit map, computed
     # from the in-hand keys with zero Spark jobs
-    nb = key_buckets
-    if nb is None and "kb" in index.columns:
-        md = index.schema["kb"].metadata or {}
-        nb = md.get("key_buckets")
+    nb = _key_buckets(index, key_buckets)
     pruned = index
     if nb and "kb" in index.columns:
         pred = F.lit(False)
@@ -1310,15 +1325,15 @@ def incremental_dedup(
     choice — parity-tested); oversized collects fall back to it.
 
     ``ingest_out``: a dict the ingest sink passes; the contract is the
-    same for :func:`ann_index.incremental_semantic_dedup`. On the
-    driver path it receives ``driver_path=True``, ``survivor_ids``
-    (the distinct delta ids minus losers) and ``survivors`` (the
-    probe's cached delta frame — here the signatures, keyed ``id`` —
-    already restricted to survivors), so the sink derives the
-    survivors' band rows and bloom delta without re-reading text or
-    re-hashing; the distributed flow leaves it empty. The survivors
-    frame stays persisted until the caller's next operator boundary
-    (``lifetime``'s scope retire)."""
+    same for :func:`ann_index.incremental_semantic_dedup`. Both paths
+    fill ``driver_path`` (which path the probe took) and ``survivors``
+    (the probe's delta frame — here the signatures, keyed ``id`` —
+    restricted to survivors), so the sink derives the survivors' band
+    rows without re-reading text or re-hashing; the driver path adds
+    ``survivor_ids`` (the distinct delta ids minus losers), from which
+    the sink builds the bloom delta locally. The signature cache stays
+    persisted until the caller's next operator boundary (``lifetime``'s
+    scope retire)."""
     if on_id_collision not in ("drop", "error"):
         raise ValueError(
             f"on_id_collision must be 'drop' or 'error', "
@@ -1413,10 +1428,10 @@ def incremental_dedup(
                     .distinct()
                     .select(F.col("id").alias("__lid"))
                 )
+    dsig = new_sigs if prune_index else minhash_signature(
+        new_df, text_col, id_col, num_hashes, shingle_n
+    )
     if stats is not None or on_id_collision == "error":
-        dsig = new_sigs if prune_index else minhash_signature(
-            new_df, text_col, id_col, num_hashes, shingle_n
-        )
         _id_collision_check(
             idx_band0, dsig, bcast_delta, stats, on_id_collision
         )
@@ -1424,7 +1439,7 @@ def incremental_dedup(
     # when the index is band-partitioned (every doc has a band-0 row)
     return _ingest_keep_distributed(
         new_df, id_col, pairs, pidx.select("id"), idx_band0.select("id"),
-        bcast_delta, reingested,
+        bcast_delta, dsig, ingest_out, reingested,
     )
 
 

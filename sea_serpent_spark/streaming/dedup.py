@@ -173,6 +173,45 @@ def streaming_minhash_pairs(
     )
 
 
+def _ingest_sink(probe, append, compact, output_path: str,
+                 batch_parallelism: int | None,
+                 compact_every: int | None, tail_due=None):
+    """→ the one ``foreachBatch`` body both ingest sinks run. Each
+    batch runs in its :func:`_batch_posture`; ``probe(batch_df, out)``
+    returns the kept rows and fills ``out`` (the probes' ``ingest_out``
+    contract); the kept rows append to ``output_path``, then
+    ``append(survivors, survivor_ids, micro)`` grows the index from
+    the probe's survivors frame, with ``micro`` set when the probe
+    took its driver path. ``compact(spark)`` runs after every
+    ``compact_every`` batches, or when ``tail_due()`` says so.
+
+    The appends are ordered output-first: a crash between them makes
+    the replay re-append the same survivors to ``output_path``
+    (recoverable downstream by exact dedup on id), where the other
+    order would record rows in the index that never reach the output.
+    A batch replayed after its index append is dropped wholesale by
+    the probe's already-indexed rule, so the loop is idempotent past
+    that point. Exactly-once needs an atomic sink for both paths (a
+    transactional table format), out of scope for plain parquet."""
+    batches_seen = [0]
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = _batch_posture(batch_df, batch_parallelism)
+        out: dict = {}
+        kept = probe(batch_df, out)
+        kept.write.mode("append").parquet(output_path)
+        append(
+            out["survivors"], out.get("survivor_ids"), out["driver_path"]
+        )
+        batches_seen[0] += 1
+        if (
+            compact_every and batches_seen[0] % compact_every == 0
+        ) or (tail_due is not None and tail_due()):
+            compact(batch_df.sparkSession)
+
+    return _sink
+
+
 def incremental_dedup_sink(
     index_path: str,
     output_path: str,
@@ -214,131 +253,70 @@ def incremental_dedup_sink(
     Structured Streaming, so the read-modify-append on the index is
     race-free.
 
-    Scale posture: the index is opened via ``read_band_index`` and
-    probed with ``prune_index`` on, so when it carries the
-    ``write_band_index`` layout (partitioned by band + coarse key
-    bucket, seeded layout's ``key_buckets`` is auto-discovered from the
-    sidecar unless overridden here) each batch reads only the bucket
-    directories its documents touch — per-batch cost stays ~flat as the
-    index accumulates instead of growing with history
-    (BENCH_NOTES "Prunable band-index layout"). Survivor band rows are
-    appended in the same layout; pass ``compact_every=N`` to fold each
-    bucket's accumulated small per-batch files back into one sorted
-    file after every N batches (serial batches make the rewrite+swap
-    race-free).
+    The index is opened via ``read_band_index`` and probed with
+    ``prune_index`` on: with the ``write_band_index`` layout (``kb``
+    buckets; ``key_buckets`` is read from the sidecar unless given
+    here) each batch reads only the bucket directories its documents
+    touch, so per-batch cost stays about flat as the index grows.
+    Survivor band rows are banded from the probe's cached signatures
+    (no text re-read) and land in the index's append tail.
+    ``compact_every=N`` folds the tail back into the bucket layout
+    after every N batches; ``compact_tail_files=N`` folds it whenever
+    it holds more than N parquet files (a driver-local listing per
+    batch); either firing compacts.
 
-    ``compact_tail_files`` (r12) is the SIZE-based compaction trigger —
-    fold the L0 tail back into the bucket layout whenever its parquet
-    file count exceeds the threshold. Unlike ``compact_every`` (a
-    batch-count cadence), it tracks what actually degrades probes: the
-    unpruned tail scan. The check is a driver-local directory listing
-    per batch; both triggers may be combined (either firing compacts).
+    ``batch_parallelism`` sizes each batch's shuffle width and operator
+    fan-out to the trigger volume (roughly ``batch_rows / 50k``, min 1)
+    on the batch's own session clone; leave None for backfills.
 
-    ``batch_parallelism`` (r12) sizes the probe's shuffle width and
-    operator fan-out to the TRIGGER volume instead of the cluster
-    default for the duration of each batch: a few-hundred-row
-    micro-batch spread 32 ways pays 32 task launches per stage of pure
-    scheduler latency across the probe's ~30 jobs — the dominant term
-    of the per-batch floor at high trigger cadence. Set it to roughly
-    ``batch_rows / 50k`` (min 1); leave None for big-batch backfills.
-    The confs live on the batch's own session clone, so nothing else
-    planning on the query's session sees them.
-
-    Replay semantics (at-least-once foreachBatch): a batch replayed
-    AFTER its index append completed is dropped wholesale —
-    ``incremental_dedup`` treats already-indexed ids as duplicates of
-    history — so the loop is idempotent past that point. The remaining
-    window is a crash BETWEEN the output append and the index append:
-    the replay then re-appends the same survivors to ``output_path``.
-    The appends are deliberately ordered output-first because the two
-    failure modes are asymmetric — duplicated output rows are
-    recoverable downstream (exact dedup by id), rows recorded in the
-    index but never written to the output are silently LOST. Exactly-
-    once needs an atomic sink for both paths (e.g. a transactional
-    table format) — out of scope for plain parquet."""
+    Replay semantics (at-least-once foreachBatch) and the output-first
+    append order are :func:`_ingest_sink`'s."""
+    from ..operators import artifact as _art
     from ..operators.dedup import banded_signatures
     from ..operators.incremental import (
         _kb_expr,
+        _key_buckets,
         compact_band_index,
         incremental_dedup,
-        minhash_band_index,
         read_band_index,
         write_band_index,
     )
 
-    batches_seen = {"n": 0}
+    layout: dict = {}  # the bucket count the current batch probed with
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _batch_posture(batch_df, batch_parallelism)
-        _sink_body(batch_df.sparkSession, batch_df)
-
-    def _sink_body(spark, batch_df: DataFrame) -> None:
-        idx = read_band_index(spark, index_path)
-        nb = key_buckets
-        if nb is None and "kb" in idx.columns:
-            nb = (idx.schema["kb"].metadata or {}).get("key_buckets")
-        out: dict = {}
-        kept = incremental_dedup(
+    def probe(batch_df: DataFrame, out: dict) -> DataFrame:
+        idx = read_band_index(batch_df.sparkSession, index_path)
+        layout["nb"] = nb = _key_buckets(idx, key_buckets)
+        return incremental_dedup(
             batch_df, idx, text_col, id_col,
             num_hashes, bands, shingle_n, jaccard_threshold,
             key_buckets=nb, ingest_out=out,
         )
-        if out.get("driver_path"):
-            # r15 NOTE: a driver-built local band frame (from the
-            # probe's collected delta sigs) was tried here and REVERTED
-            # after an interleaved A/B showed +4-5 s PER BATCH: a
-            # parallelize-backed frame pays ~130 ms of Python-runner
-            # overhead PER PARTITION in every consuming job (measured;
-            # 32 default slices -> ~4 s), while this JVM path scans the
-            # already-persisted signature cache with no Python anywhere.
-            # See BENCH_NOTES "round 15".
-            # r13 collapsed append path: the probe hands over the
-            # survivor ids and its cached signature frame restricted to
-            # survivors — derive the band rows from the cache (zero
-            # re-shingling, zero text re-read) and build the bloom
-            # delta locally from the survivor ids (zero jobs). No
-            # persist needed: the output write is the only scan of the
-            # batch data, and the band append scans the sig cache.
-            kept.write.mode("append").parquet(output_path)
-            band_rows = banded_signatures(
-                out["survivors"], num_hashes, bands, keep=("sig",)
-            ).select("id", "band", "key", "sig")
-            if nb:
-                band_rows = band_rows.withColumn("kb", _kb_expr(nb))
-            write_band_index(
-                band_rows, index_path, mode="append",
-                key_buckets=nb, ids_hint=out["survivor_ids"],
-            )
-        else:
-            # materialize survivors BEFORE touching the index so the
-            # band append below cannot observe its own output
-            kept.persist()
-            try:
-                kept.write.mode("append").parquet(output_path)
-                band_rows = minhash_band_index(
-                    kept, text_col, id_col, num_hashes, bands, shingle_n,
-                    key_buckets=nb,
-                )
-                write_band_index(
-                    band_rows, index_path, mode="append", key_buckets=nb,
-                )
-            finally:
-                kept.unpersist()
-        batches_seen["n"] += 1
-        due = (
-            compact_every
-            and batches_seen["n"] % compact_every == 0
+
+    def append(survivors: DataFrame, ids, micro: bool) -> None:
+        nb = layout["nb"]
+        rows = banded_signatures(
+            survivors, num_hashes, bands, keep=("sig",)
+        ).select("id", "band", "key", "sig")
+        if nb:
+            rows = rows.withColumn("kb", _kb_expr(nb))
+        write_band_index(
+            rows, index_path, mode="append", key_buckets=nb,
+            ids_hint=ids, _micro=micro,
         )
-        if not due and compact_tail_files:
-            from ..operators import artifact as _art
 
-            due = _art.parquet_files(os.path.join(
-                _art.current_dir(index_path), _art.TAIL
-            )) > compact_tail_files
-        if due:
-            compact_band_index(spark, index_path, key_buckets=nb)
+    def tail_due() -> bool:
+        return bool(compact_tail_files) and _art.parquet_files(
+            os.path.join(_art.current_dir(index_path), _art.TAIL)
+        ) > compact_tail_files
 
-    return _sink
+    return _ingest_sink(
+        probe, append,
+        lambda spark: compact_band_index(
+            spark, index_path, key_buckets=layout["nb"]
+        ),
+        output_path, batch_parallelism, compact_every, tail_due,
+    )
 
 
 def incremental_semantic_dedup_sink(
@@ -356,61 +334,38 @@ def incremental_semantic_dedup_sink(
     index (``ann_index.incremental_semantic_dedup`` — same-list cosine
     pairs, history-wins, min-id-survives, idempotent replays),
     survivors append to ``output_path`` AND into the index's L0 tail
-    (``append_to_ivf_index``), so batch N+1 dedups against history and
-    batches 1..N. Seed the index with
-    ``build_ivf_index(history, path, centroids=...)`` first; batches
-    run serially, so the read-modify-append is race-free.
+    (``append_to_ivf_index``, with the labels the probe already
+    assigned), so batch N+1 dedups against history and batches 1..N.
+    Seed the index with ``build_ivf_index(history, path,
+    centroids=...)`` first; batches run serially, so the
+    read-modify-append is race-free.
 
-    ``batch_parallelism`` and ``compact_every`` behave exactly as in
-    :func:`incremental_dedup_sink` (trigger-sized fan-out/shuffles;
-    periodic tail compaction via ``compact_ivf_index``). The
-    output-first append ordering and its at-least-once window are the
-    same documented trade as the LSH sink."""
+    ``batch_parallelism`` and ``compact_every`` behave as in
+    :func:`incremental_dedup_sink` (compaction via
+    ``compact_ivf_index``); both sinks run :func:`_ingest_sink`."""
     from ..operators.ann_index import (
         append_to_ivf_index,
         compact_ivf_index,
         incremental_semantic_dedup,
     )
 
-    batches_seen = {"n": 0}
-
-    def _body(spark, batch_df: DataFrame) -> None:
-        out: dict = {}
-        kept = incremental_semantic_dedup(
+    def probe(batch_df: DataFrame, out: dict) -> DataFrame:
+        return incremental_semantic_dedup(
             batch_df, index_path, threshold=threshold,
             id_col=id_col, vec_col=vec_col, ingest_out=out,
         )
-        if out.get("driver_path"):
-            # r13 collapsed append: survivors' labels come from the
-            # probe's cached pinned-quantizer assignment — no
-            # re-assignment, no persist (the output write is the only
-            # scan of the batch data; the append scans the cache)
-            kept.write.mode("append").parquet(output_path)
-            append_to_ivf_index(
-                kept.select(id_col, vec_col), index_path,
-                id_col=id_col, vec_col=vec_col,
-                _assigned=out["survivors"].select(
-                    F.col("id").alias(id_col),
-                    F.col("v").alias(vec_col),
-                    "label",
-                ),
-            )
-        else:
-            kept.persist()
-            try:
-                kept.write.mode("append").parquet(output_path)
-                append_to_ivf_index(
-                    kept.select(id_col, vec_col), index_path,
-                    id_col=id_col, vec_col=vec_col,
-                )
-            finally:
-                kept.unpersist()
-        batches_seen["n"] += 1
-        if compact_every and batches_seen["n"] % compact_every == 0:
-            compact_ivf_index(spark, index_path)
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _batch_posture(batch_df, batch_parallelism)
-        _body(batch_df.sparkSession, batch_df)
+    def append(survivors: DataFrame, ids, micro: bool) -> None:
+        assigned = survivors.select(
+            F.col("id").alias(id_col), F.col("v").alias(vec_col), "label"
+        )
+        append_to_ivf_index(
+            assigned, index_path, id_col=id_col, vec_col=vec_col,
+            _assigned=assigned, _micro=micro,
+        )
 
-    return _sink
+    return _ingest_sink(
+        probe, append,
+        lambda spark: compact_ivf_index(spark, index_path),
+        output_path, batch_parallelism, compact_every,
+    )

@@ -493,12 +493,16 @@ def test_semantic_driver_path_matches_distributed(
     assert all(v >= 300 for v in drv)
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     dist, out_dist = survivors()
-    assert out_dist.get("driver_path") is None
+    assert out_dist["driver_path"] is False
     assert drv == dist
+    # the distributed path hands the sink its survivors too
+    assert sorted(
+        r["id"] for r in out_dist["survivors"].select("id").collect()
+    ) == dist
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 1_000_000)
     monkeypatch.setattr(I, "_DRIVER_PROBE_ROW_CAP", 0)
     over, out_over = survivors()
-    assert out_over.get("driver_path") is None
+    assert out_over["driver_path"] is False
     assert drv == over
 
 

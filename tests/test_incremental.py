@@ -607,14 +607,18 @@ def test_driver_path_matches_distributed(spark, halves, tmp_path,
     # force the distributed flow: doc cap 0 disqualifies the gate
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     dist, out_dist = survivors()
-    assert out_dist.get("driver_path") is None
+    assert out_dist["driver_path"] is False
     assert drv == dist
+    # the distributed path hands the sink its survivors too
+    assert sorted(
+        r["id"] for r in out_dist["survivors"].select("id").collect()
+    ) == dist
     # overflow fallback: the gate passes but the collect cap trips —
     # the deferred-stat plan falls back to the distributed flow
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 1_000_000)
     monkeypatch.setattr(I, "_DRIVER_PROBE_ROW_CAP", 0)
     over, out_over = survivors()
-    assert out_over.get("driver_path") is None
+    assert out_over["driver_path"] is False
     assert drv == over
     # width guard survives the driver path: probing with the wrong
     # num_hashes must still raise, not silently deflate
@@ -692,7 +696,7 @@ def test_ingest_rule_same_on_both_paths(spark, case):
     component keeps its min id, a replayed id is dropped and NULL-id
     rows are kept. The driver helper and the distributed helper (both
     broadcast settings) keep the same rows and the same survivor ids,
-    and the driver's survivor hand-off holds exactly those ids."""
+    and both survivor hand-offs hold exactly those rows."""
     from sea_serpent_spark.operators.util import MinRootUnionFind
 
     c = _RULE_CASES[case]
@@ -732,13 +736,17 @@ def test_ingest_rule_same_on_both_paths(spark, case):
     ) == id_list(c["kept"])
     pairs = spark.createDataFrame(c["edges"], f"id_a {idt}, id_b {idt}")
     for bcast in (True, False):
+        dout: dict = {}
         dist = I._ingest_keep_distributed(
             new_df, "doc_id", pairs, ids(c["old"]), ids(c["index"]), bcast,
+            cached, dout,
         )
         assert rows(dist) == rows(drv), bcast
         assert id_list(
             {r["doc_id"] for r in dist.collect()}
         ) == id_list(out["survivor_ids"])
+        assert dout["driver_path"] is False
+        assert rows(dout["survivors"]) == rows(out["survivors"]), bcast
 
 
 def test_xxh64_matches_spark(spark):
@@ -819,7 +827,7 @@ def test_local_probe_job_budget(spark, sf_dir, tmp_path):
             ).withColumn("kb", _kb_expr(4))
             write_band_index(
                 br, root, mode="append", key_buckets=4,
-                ids_hint=res["survivor_ids"],
+                ids_hint=res["survivor_ids"], _micro=res["driver_path"],
             )
         finally:
             sc.setJobGroup(None, None)
@@ -872,5 +880,5 @@ def test_sigless_replay_dropped_on_both_paths(spark, tmp_path,
     assert drv == [7, 8]
     monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     dist, used_driver2 = survivors()
-    assert used_driver2 is None
+    assert used_driver2 is False
     assert dist == drv

@@ -527,7 +527,7 @@ def test_incremental_driver_path_parity_fuzz(spark, tmp_path_factory,
     drv, path_a = survivors(False)
     assert path_a is True
     dist, path_b = survivors(True)
-    assert path_b is None
+    assert path_b is False
     assert drv == dist
 
 
@@ -597,5 +597,5 @@ def test_semantic_driver_path_parity_fuzz(spark, tmp_path_factory,
     drv, path_a = survivors(False)
     assert path_a is True
     dist, path_b = survivors(True)
-    assert path_b is None
+    assert path_b is False
     assert drv == dist

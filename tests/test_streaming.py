@@ -400,15 +400,22 @@ def test_sink_size_based_autocompaction(spark, sf_dir, tmp_path):
     assert outs["auto"] == outs["plain"] and outs["auto"]
 
 
-def test_incremental_semantic_dedup_sink_loop(spark, sf_dir, tmp_path):
-    """r12: the embedding ingest loop — serial micro-batches deduped
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_incremental_semantic_dedup_sink_loop(
+    spark, sf_dir, tmp_path, monkeypatch, path
+):
+    """The embedding ingest loop — serial micro-batches deduped
     against a seeded IVF index; survivors equal sequential
     incremental_semantic_dedup calls with interleaved appends, replay
     of a drained batch adds nothing, and the index grows by exactly
-    the survivors."""
+    the survivors with the labels a re-assigning append gives them.
+    The reference runs on the driver path; the sink runs on the path
+    the parameter names (doc cap patched to 0 for the distributed
+    one), so both paths produce identical rows."""
     import pyspark.sql.functions as F
 
     from sea_serpent_spark.operators import ann_index as A
+    from sea_serpent_spark.operators import incremental as I
     from sea_serpent_spark.operators.pinned import SEMDEDUP_CENTROIDS
     from sea_serpent_spark.streaming.dedup import (
         incremental_semantic_dedup_sink,
@@ -437,11 +444,15 @@ def test_incremental_semantic_dedup_sink_loop(spark, sf_dir, tmp_path):
     idxp = str(tmp_path / "semidx")
     outp = str(tmp_path / "semout")
     A.build_ivf_index(hist, idxp, centroids=SEMDEDUP_CENTROIDS)
+    probe = _spy_ingest_out(monkeypatch, A, "incremental_semantic_dedup")
+    if path == "distributed":
+        monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     sink = incremental_semantic_dedup_sink(
         idxp, outp, threshold=0.45, batch_parallelism=8
     )
     for i, b in enumerate(batches):
         sink(b, i)
+    assert [o["driver_path"] for o in probe] == [path == "driver"] * 2
     got = sorted(
         r["vec_id"]
         for r in spark.read.parquet(outp).select("vec_id").collect()
@@ -459,20 +470,31 @@ def test_incremental_semantic_dedup_sink_loop(spark, sf_dir, tmp_path):
     assert idx_ids == (
         {r["vec_id"] for r in hist.select("vec_id").collect()} | set(got)
     )
+
+    def labels(p):
+        return sorted(
+            (r["vec_id"], r["label"])
+            for r in A.read_ivf_index(spark, p)[0]
+            .select("vec_id", "label").collect()
+        )
+
+    assert labels(idxp) == labels(ref_idx)
     # conf restored after the knob-wrapped batches
     assert spark.conf.get(
         "spark.sea_serpent.fanout.parallelism", None
     ) is None
 
 
-def test_sink_band_append_rows_bit_parity(spark, sf_dir, tmp_path):
-    """r15: the sink's per-batch band-index append rows are
-    row-identical — id, band, key, sig, kb — to an independent
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_sink_band_append_rows_bit_parity(
+    spark, sf_dir, tmp_path, monkeypatch, path
+):
+    """The sink's per-batch band-index append rows are row-identical —
+    id, band, key, sig, kb — to an independent
     ``banded_signatures(minhash_signature(survivors)) + _kb_expr``
-    recomputation. (Pins the append layout; originally added for a
-    driver-built variant that was REVERTED after it measured +4-5 s
-    per batch — parallelize-backed frames pay per-slice Python-runner
-    overhead in every consuming job. See BENCH_NOTES r15.)"""
+    recomputation, on both probe paths: the output rows equal a
+    driver-path ``incremental_dedup`` call, and the index holds the
+    seed ids plus exactly those survivors."""
     import pyspark.sql.functions as F
 
     from sea_serpent_spark.operators import dedup as D
@@ -490,10 +512,18 @@ def test_sink_band_append_rows_bit_parity(spark, sf_dir, tmp_path):
     I.write_band_index(
         I.minhash_band_index(hist, key_buckets=8), idxp, key_buckets=8
     )
+    want = sorted(
+        r["doc_id"] for r in I.incremental_dedup(
+            delta, I.read_band_index(spark, idxp), jaccard_threshold=0.5
+        ).select("doc_id").collect()
+    )
     files_before = {
         str(p) for p in __import__("pathlib").Path(idxp).rglob("*.parquet")
     }
     delta.coalesce(1).write.parquet(src)
+    probe = _spy_ingest_out(monkeypatch, I, "incremental_dedup")
+    if path == "distributed":
+        monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -503,22 +533,26 @@ def test_sink_band_append_rows_bit_parity(spark, sf_dir, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True).start().awaitTermination()
     )
+    assert [o["driver_path"] for o in probe] == [path == "driver"]
     new_files = [
         str(p) for p in __import__("pathlib").Path(idxp).rglob("*.parquet")
         if str(p) not in files_before
     ]
     assert new_files  # the append happened
-    appended = spark.read.option("basePath", I._current(idxp)).parquet(
-        *new_files
-    ) if hasattr(I, "_current") else None
-    if appended is None:
-        from sea_serpent_spark.operators import artifact as A
+    from sea_serpent_spark.operators import artifact as A
 
-        appended = spark.read.option(
-            "basePath", A.current_dir(idxp)
-        ).parquet(*new_files)
-    # old formulation, computed independently over the same survivors
+    appended = spark.read.option(
+        "basePath", A.current_dir(idxp)
+    ).parquet(*new_files)
     out_df = spark.read.parquet(outp)
+    assert sorted(
+        r["doc_id"] for r in out_df.select("doc_id").collect()
+    ) == want and want
+    assert {
+        r["id"] for r in I.read_band_index(spark, idxp)
+        .select("id").distinct().collect()
+    } == {r["doc_id"] for r in hist.select("doc_id").collect()} | set(want)
+    # the band rows, computed independently over the same survivors
     sigs = D.minhash_signature(out_df, "text", "doc_id", 16, 1)
     expect = D.banded_signatures(sigs, 16, 4, keep=("sig",)).select(
         "id", "band", "key", "sig"
@@ -567,14 +601,26 @@ def test_sink_batch_fan_out_sees_batch_parallelism(
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-@pytest.mark.parametrize("semantic", [False, True])
-def test_sink_releases_batch_frame_when_append_fails(
-    spark, sf_dir, tmp_path, monkeypatch, semantic
-):
-    """The sinks' distributed append path persists the batch's survivor
-    frame; a failed parquet append must still unpersist it, not leave it
-    cached and untracked."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def _spy_ingest_out(monkeypatch, module, name):
+    """Wrap ``module.name`` (a probe taking ``ingest_out``) so each call
+    records the dict it filled; → the list of recorded dicts."""
+    real = getattr(module, name)
+    seen: list = []
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        seen.append(kwargs["ingest_out"])
+        return out
+
+    monkeypatch.setattr(module, name, spy)
+    return seen
+
+
+def _seed_sink(spark, sf_dir, tmp_path, semantic):
+    """→ (sink, first batch, second batch) over a seeded index: the
+    IVF sink over embeddings, or the band sink over documents with
+    4 key buckets."""
+    import pyspark.sql.functions as F
 
     from sea_serpent_spark.operators import ann_index as A
     from sea_serpent_spark.operators import incremental as I
@@ -583,40 +629,106 @@ def test_sink_releases_batch_frame_when_append_fails(
         incremental_semantic_dedup_sink,
     )
 
-    # the dedup operator passes the batch through without a driver-path
-    # result, so the sink takes its persist-then-append branch
-    def _passthrough(batch_df, *args, **kwargs):
-        return batch_df
+    out = str(tmp_path / "out")
+    if semantic:
+        from sea_serpent_spark.operators.pinned import SEMDEDUP_CENTROIDS
 
+        vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        idxp = str(tmp_path / "semidx")
+        A.build_ivf_index(
+            vecs.where(F.col("vec_id") < 200), idxp,
+            centroids=SEMDEDUP_CENTROIDS,
+        )
+        sink = incremental_semantic_dedup_sink(idxp, out, threshold=0.45)
+        col, rows = "vec_id", vecs
+    else:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        idxp = str(tmp_path / "idx")
+        I.write_band_index(
+            I.minhash_band_index(
+                docs.where(F.col("doc_id") < 200), key_buckets=4
+            ),
+            idxp, key_buckets=4,
+        )
+        sink = incremental_dedup_sink(idxp, out)
+        col, rows = "doc_id", docs
+    return sink, idxp, [
+        rows.where(F.col(col).between(200 + 60 * i, 259 + 60 * i))
+        for i in range(2)
+    ]
+
+
+@pytest.mark.parametrize("semantic", [False, True])
+def test_sink_releases_batch_frame_when_append_fails(
+    spark, sf_dir, tmp_path, monkeypatch, semantic
+):
+    """A failed output append leaves no persisted RDD behind that the
+    lifetime registry does not free: the sink persists nothing of its
+    own (the frame it writes is unpersisted), and the probe's caches
+    and loser checkpoint are registry entries. Runs the distributed
+    probe path, where the sink used to persist the kept rows."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from sea_serpent_spark.operators import incremental as I
+    from sea_serpent_spark.operators.util import release_checkpoints
+
+    sink, _, (batch, _) = _seed_sink(spark, sf_dir, tmp_path, semantic)
+    monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
     appended: list = []
 
     def _failing_append(self, *args, **kwargs):
         appended.append(self._df)
         raise RuntimeError("append-boom")
 
-    if semantic:
-        monkeypatch.setattr(A, "incremental_semantic_dedup", _passthrough)
-        sink = incremental_semantic_dedup_sink(
-            str(tmp_path / "semidx"), str(tmp_path / "out")
-        )
-        batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    else:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        idxp = str(tmp_path / "idx")
-        I.write_band_index(
-            I.minhash_band_index(
-                docs.where(F.col("doc_id") < 60), key_buckets=4
-            ),
-            idxp, key_buckets=4,
-        )
-        monkeypatch.setattr(I, "incremental_dedup", _passthrough)
-        sink = incremental_dedup_sink(idxp, str(tmp_path / "out"))
-        batch = docs.where(F.col("doc_id").between(60, 119))
+    def live():
+        jsc = spark.sparkContext._jsc
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    release_checkpoints()
+    before = live()
     monkeypatch.setattr(DataFrameWriter, "parquet", _failing_append)
     with pytest.raises(RuntimeError, match="append-boom"):
         sink(batch, 0)
     assert len(appended) == 1
     assert not appended[0].storageLevel.useMemory
+    assert live() - before  # the probe did materialize its caches
+    release_checkpoints()
+    assert live() <= before
+
+
+@pytest.mark.parametrize("semantic", [False, True])
+def test_sink_tail_append_follows_probe_path(
+    spark, sf_dir, tmp_path, monkeypatch, semantic
+):
+    """A batch whose probe took the driver path writes the index tail
+    from one task: one parquet file per partition directory. A batch
+    on the distributed path (doc cap patched to 0) takes the parallel
+    repartition append."""
+    import os
+
+    from sea_serpent_spark.operators import artifact as ART
+    from sea_serpent_spark.operators import incremental as I
+
+    sink, idxp, (b1, b2) = _seed_sink(spark, sf_dir, tmp_path, semantic)
+    real = ART.append_tail
+    micro: list = []
+
+    def spy(*args, **kwargs):
+        micro.append(kwargs["micro"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ART, "append_tail", spy)
+    sink(b1, 0)
+    assert micro == [True]
+    tail = os.path.join(ART.current_dir(idxp), ART.TAIL)
+    per_dir = [
+        sum(f.endswith(".parquet") for f in files)
+        for _, _, files in os.walk(tail)
+    ]
+    assert [n for n in per_dir if n] and set(per_dir) <= {0, 1}
+    monkeypatch.setattr(I, "_DRIVER_PROBE_DOC_CAP", 0)
+    sink(b2, 1)
+    assert micro == [True, False]
 
 
 def test_drop_stale_sinks_runs_no_job(spark):

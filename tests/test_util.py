@@ -2,8 +2,9 @@
 and returns the same frame on both sides of its cell cap, no module
 flips a session-global conf outside the places that own one, no
 module cuts a lineage outside the lifetime registry or gates a size
-outside ``take_upto``, group members are expanded in one place, and a
-repeated plan or bounded take compiles no new codegen class."""
+outside ``take_upto``, group members are expanded in one place, both
+ingest sinks run one loop, and a repeated plan or bounded take compiles
+no new codegen class."""
 
 import ast
 import datetime
@@ -128,6 +129,31 @@ def test_member_expansion_lives_in_one_helper():
             ):
                 sites.add((rel, fn))
     assert sites == {("operators/dedup.py", "_expand_groups")}
+
+
+def test_ingest_sinks_share_one_loop():
+    """Both streaming dedup sinks run ``_ingest_sink``: ``streaming/
+    dedup.py`` has one ``foreachBatch`` body, one output append, no
+    ``.persist(`` and no ``minhash_band_index(`` re-shingling (the
+    index appends read the probe's survivors frame)."""
+    tree = ast.parse((PKG / "streaming/dedup.py").read_text())
+    calls = _calls(tree)
+    appends = [
+        fn for fn, c in calls
+        if _is_method(c, "mode")
+        and [getattr(a, "value", None) for a in c.args] == ["append"]
+        and getattr(c.func.value, "attr", None) == "write"
+    ]
+    assert appends == ["_sink"]
+    bodies = [
+        node.name for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+        and [a.arg for a in node.args.args] == ["batch_df", "batch_id"]
+    ]
+    assert bodies == ["_sink"]
+    named = {getattr(c.func, "attr", getattr(c.func, "id", None))
+             for _, c in calls}
+    assert not named & {"persist", "minhash_band_index"}
 
 
 def test_local_checkpoints_go_through_lifetime():

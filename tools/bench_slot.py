@@ -31,27 +31,23 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 class Jobs:
-    """The jobs of one SparkContext's app status store, serialized to
-    JSON in one JVM call (Jackson, Scala-aware: dates are epoch ms,
-    options are a value or null)."""
+    """The jobs of one SparkContext's app status store, read through
+    ``perfbench/probes.py``'s :class:`StatusStore` (its listener-bus
+    drain and Scala-aware Jackson mapper: dates are epoch ms, options
+    are a value or null)."""
 
     def __init__(self, spark):
-        jvm = spark.sparkContext._jvm
-        self._sc = spark.sparkContext._jsc.sc()
-        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
-        scala = getattr(
-            jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$"
-        )
-        self._mapper.registerModule(getattr(scala, "MODULE$"))
+        from perfbench.probes import StatusStore
+
+        self._status = StatusStore(spark)
+        self._store = spark.sparkContext._jsc.sc().statusStore()
 
     def listed(self) -> list[dict]:
         """Every retained job, oldest first, once the listener bus has
         delivered every event posted so far."""
-        self._sc.listenerBus().waitUntilEmpty()
+        self._status.drain()
         jobs = json.loads(
-            self._mapper.writeValueAsString(
-                self._sc.statusStore().jobsList(None)
-            )
+            self._status.mapper.writeValueAsString(self._store.jobsList(None))
         )
         return sorted(jobs, key=lambda j: j["jobId"])
 

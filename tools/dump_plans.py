@@ -13,8 +13,9 @@ bench.py's noop write executes.
 The dumps are normalized so that two trees' dumps diff line by line and
 two runs of one tree diff empty: expression ids (``#123L``), exchange
 and broadcast plan ids (``[plan_id=7]``), RDD ids (``RDD[42]``) and
-whole-stage codegen ids (``[codegen id : 3]``) become ``N``. They count
-objects the session made earlier, not the plan's shape.
+whole-stage codegen ids (``[codegen id : 3]``) and lambda variable
+suffixes (``lambda x_12``) become ``N``. They count objects the session
+made earlier, not the plan's shape.
 """
 
 from __future__ import annotations
@@ -32,6 +33,9 @@ _VOLATILE = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    # higher-order-function variables draw from one JVM-wide counter,
+    # which plans built on concurrent threads advance in any order
+    (re.compile(r"\b(lambda [A-Za-z]+)_\d+"), r"\1_N"),
 ]
 
 
